@@ -20,13 +20,24 @@ import graft.model.{EventEnvelope, ExpectedVersion, StreamMeta}
   * tombstoned) plus the global max log_position, written LSM-style: each
   * append adds delta rows for the streams it touched, readers take the
   * latest row per stream, and scavenge compacts to one row per stream
-  * (mirroring the reference's memtable -> PTable merge). Appends therefore
-  * read the small stats table — not the log — for version/tombstone checks
-  * and position assignment. The one remaining log touch per append is the
-  * event_id idempotency probe, bounded to the target streams; parquet
-  * row-group stats prune it and log files are written with bloom filters
-  * on (stream_id, event_id) — the analog of the reference's per-PTable
-  * blooms (PTable.cs:73-95).
+  * (mirroring the reference's memtable -> PTable merge).
+  *
+  * Each store instance folds the stats table into a driver-resident stream
+  * index: per stream (metastreams included) the latest (last_event_number,
+  * tombstoned), the global max log_position, and the set of stats files
+  * folded in. It loads with one Spark job; the instance's own appends fold
+  * their delta in directly, and before every use a plain listing of
+  * `stats/` (no job) folds files written by anyone else — a vanished file
+  * (scavenge swap, crash recovery) forces a reload. The point operations —
+  * append's version/tombstone checks and position assignment,
+  * [[streamState]], [[softDelete]] and [[readStreamEvents]]' retention
+  * bounds — read the index instead of the stats table, the analog of the
+  * reference's cached last-event-number and stream-info lookups
+  * (IndexReader.cs:226-306, `StreamInfoCacheCapacity`). The one remaining
+  * log touch per append is the event_id idempotency probe, bounded to the
+  * target streams; parquet row-group stats prune it and log files are
+  * written with bloom filters on (stream_id, event_id) — the analog of the
+  * reference's per-PTable blooms (PTable.cs:73-95).
   *
   * The stats table is also what preserves stream numbering across scavenge:
   * a soft-deleted stream's rows are all physically removed, but its
@@ -95,10 +106,33 @@ object EventLogStore {
     appendLocks.computeIfAbsent(
       java.nio.file.Paths.get(dir).toAbsolutePath.normalize.toString,
       _ => new Object)
+
+  /** One stream's latest stats row. Deltas are ordered by
+    * (max_log_position, last_event_number), the order `statsLatest` takes
+    * the latest row by; a full tie keeps the tombstone. */
+  private[graft] final case class StreamStats(last: Long, tombstoned: Boolean, pos: Long) {
+    def supersedes(o: StreamStats): Boolean =
+      pos > o.pos || pos == o.pos && (last > o.last || last == o.last && tombstoned)
+  }
+
+  /** The stats table folded on the driver: each stream's latest row
+    * (metastreams included), the global max log_position, and the names of
+    * the stats files folded in. Folding keeps a per-stream maximum, so
+    * folding a row twice changes nothing. */
+  private[graft] final case class StreamIndex(streams: Map[String, StreamStats],
+      maxPos: Long, files: Set[String]) {
+    def fold(rows: Seq[(String, StreamStats)], more: Set[String]): StreamIndex =
+      StreamIndex(
+        rows.foldLeft(streams) { case (m, (s, st)) =>
+          if (m.get(s).forall(st.supersedes)) m.updated(s, st) else m },
+        rows.foldLeft(maxPos)((p, r) => math.max(p, r._2.pos)),
+        files ++ more)
+  }
 }
 
 class EventLogStore(spark: SparkSession, path: String, requestedBuckets: Int = 0) {
   import spark.implicits._
+  import EventLogStore.{StreamIndex, StreamStats}
 
   private def logDir = s"$path/log"
   private def statsDir = s"$path/stats"
@@ -140,13 +174,21 @@ class EventLogStore(spark: SparkSession, path: String, requestedBuckets: Int = 0
   private def bucketExpr(streamId: Column): Column =
     pmod(xxhash64(streamId), lit(numBuckets.toLong)).cast("int")
 
-  private val bucketCache = scala.collection.concurrent.TrieMap.empty[String, Int]
+  /** Bucket of one stream id: the Catalyst expressions of [[bucketExpr]]
+    * evaluated on the driver, so the value matches the write path without
+    * a Spark job. */
+  def bucketFor(streamId: String): Int = {
+    import org.apache.spark.sql.catalyst.expressions.{Literal, Pmod, XxHash64}
+    Pmod(new XxHash64(Seq(Literal(streamId))), Literal(numBuckets.toLong))
+      .eval().asInstanceOf[Long].toInt
+  }
 
-  /** Bucket of one stream id (evaluated through Spark's xxhash64 so the
-    * value always matches the write path; memoized). */
-  def bucketFor(streamId: String): Int =
-    bucketCache.getOrElseUpdate(streamId,
-      Seq(streamId).toDF("s").select(bucketExpr(col("s"))).first().getInt(0))
+  /** The log's declared schema: the envelope plus the partition columns.
+    * Reads declare it, so no schema-inference job runs. */
+  private def logSchema: org.apache.spark.sql.types.StructType = {
+    val base = EventEnvelope.schema.add("p_date", "date")
+    if (bucketed) base.add("p_bucket", "int") else base
+  }
 
   /** Add the partition-layout columns to envelope rows. */
   private def withPartitionCols(df: DataFrame): DataFrame = {
@@ -163,30 +205,51 @@ class EventLogStore(spark: SparkSession, path: String, requestedBuckets: Int = 0
     * reads, subscriptions, projections, scavenge) inherits the contract.
     * Logs written before the flag existed read as `is_redacted = false`. */
   def read(): DataFrame =
-    if (!exists) {
-      val base = EventEnvelope.schema.add("p_date", "date")
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-        if (bucketed) base.add("p_bucket", "int") else base)
-    } else {
-      val df = spark.read.parquet(logDir)
+    if (!exists)
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], logSchema)
+    else {
       val flag = graft.operators.Redaction.Flag
-      graft.operators.Redaction.scrub(
-        if (df.columns.contains(flag))
-          // NULL flags appear mid-upgrade of a legacy log (files written
-          // before the column existed read NULL once inference samples a
-          // flagged footer) — they mean "never redacted"
-          df.withColumn(flag, coalesce(col(flag), lit(false)))
-        else df.withColumn(flag, lit(false)))
+      // files of a legacy log (written before the flag existed) read the
+      // flag as NULL — it means "never redacted"
+      graft.operators.Redaction.scrub(spark.read.schema(logSchema).parquet(logDir)
+        .withColumn(flag, coalesce(col(flag), lit(false))))
     }
+
+  /** One stream's slice of the log, bucket-pruned on a bucketed log. */
+  private def streamSlice(streamId: String): DataFrame = {
+    val base = read().where(col("stream_id") === streamId)
+    if (bucketed) base.where(col("p_bucket") === bucketFor(streamId)) else base
+  }
 
   /** Single-stream positional read with retention applied AND bucket
     * partition pruning: on a bucketed log the scan touches only the
     * stream's bucket directories (1/numBuckets of the files) — the moral
-    * equivalent of the reference's PTable point lookup. */
+    * equivalent of the reference's PTable point lookup. The stream's
+    * retention bounds come from the stream index and its metastream (read
+    * only when the index has one) and reach the scan as literal
+    * predicates; the rows equal [[readRetained]] filtered to the stream. */
   def readStreamEvents(streamId: String,
       asOf: Column = current_timestamp()): DataFrame = {
-    val base = readRetained(asOf).where(col("stream_id") === streamId)
-    if (bucketed) base.where(col("p_bucket") === bucketFor(streamId)) else base
+    val slice = streamSlice(streamId)
+    // retained reads never return metastream rows
+    if (streamId.startsWith(EventEnvelope.MetastreamPrefix)) return slice.where(lit(false))
+    val idx = streamIndex()
+    idx.streams.get(streamId) match {
+      // no stats row, no bounds: readRetained's left join keeps every row
+      case None => slice
+      case Some(st) =>
+        // Retention.boundsFromLasts for one stream
+        val meta = metadataOf(streamId, idx)
+        if (st.tombstoned || meta.truncate_before.contains(graft.operators.Retention.DeletedStream))
+          slice.where(lit(false))
+        else {
+          val minEvent = (Seq(0L) ++ meta.max_count.map(st.last - _ + 1L) ++
+            meta.truncate_before).max
+          val kept = slice.where(col("event_number") >= minEvent)
+          meta.max_age_sec.fold(kept)(age => kept.where(col("timestamp") >=
+            asOf - make_dt_interval(lit(0), lit(0), lit(0), lit(age).cast("double"))))
+        }
+    }
   }
 
   /** Positional time travel: the log as it stood when `position` was the
@@ -202,28 +265,37 @@ class EventLogStore(spark: SparkSession, path: String, requestedBuckets: Int = 0
     * as NoStream until a recreation append moves `last` past the truncate
     * point — IndexReader.cs:226-306 TruncateBefore handling. */
   def streamState(streamId: String): EventLogStore.StreamState = {
-    val (_, lasts, tombstoned) = statsSnapshot(Seq(streamId))
-    if (tombstoned.contains(streamId)) EventLogStore.StreamDeleted
-    else lasts.get(streamId) match {
-      case Some(last) =>
-        if (truncateBeforeOf(streamId).exists(_ > last)) EventLogStore.NoStream
-        else EventLogStore.StreamOk(last)
+    val idx = streamIndex()
+    idx.streams.get(streamId) match {
+      case Some(st) if st.tombstoned => EventLogStore.StreamDeleted
+      case Some(st) if metadataOf(streamId, idx).truncate_before.exists(_ > st.last) =>
+        EventLogStore.NoStream
+      case Some(st) => EventLogStore.StreamOk(st.last)
       case None => EventLogStore.NoStream
     }
   }
 
-  /** Latest `$tb` of a stream's metastream, if any — a point lookup
-    * (stream + bucket pruned, bounded by the metastream's length). */
-  private def truncateBeforeOf(streamId: String): Option[Long] = {
-    if (!exists) return None
+  /** A stream's effective metadata: the latest `$metadata` event of its
+    * metastream plus its tombstone state. The metastream is read — one
+    * point-lookup job, stream/bucket pruned — only when the index has a
+    * row for it. */
+  private def metadataOf(streamId: String, idx: StreamIndex): StreamMeta = {
     val metaStream = EventEnvelope.MetastreamPrefix + streamId
-    val base = read().where(col("stream_id") === metaStream)
-    val pruned =
-      if (bucketed) base.where(col("p_bucket") === bucketFor(metaStream)) else base
-    pruned.orderBy(col("event_number").desc)
-      .select(get_json_object(col("data"), "$.$tb").cast("long"))
-      .limit(1).collect().headOption
-      .flatMap(r => if (r.isNullAt(0)) None else Some(r.getLong(0)))
+    val tombstoned = idx.streams.get(streamId).exists(_.tombstoned)
+    val row = if (!idx.streams.contains(metaStream)) None
+      else streamSlice(metaStream).orderBy(col("event_number").desc)
+        .select(
+          get_json_object(col("data"), "$.$maxCount").cast("long"),
+          get_json_object(col("data"), "$.$maxAge").cast("long"),
+          get_json_object(col("data"), "$.$tb").cast("long"),
+          get_json_object(col("data"), "$.$cacheControl").cast("long"))
+        .limit(1).collect().headOption
+    row match {
+      case None => StreamMeta(streamId, None, None, None, tombstoned)
+      case Some(r) =>
+        def opt(i: Int): Option[Long] = if (r.isNullAt(i)) None else Some(r.getLong(i))
+        StreamMeta(streamId, opt(0), opt(1), opt(2), tombstoned, opt(3))
+    }
   }
 
   /** Parquet options for log data writes: bloom filters on the point-
@@ -301,42 +373,71 @@ class EventLogStore(spark: SparkSession, path: String, requestedBuckets: Int = 0
     * wins (per-group sort of d≈3 rows is trivial, and the struct-max's
     * partial combine buys nothing when a stream's deltas are scattered
     * across input files). Numbers in BASELINE.md. */
-  private def statsLatest(): DataFrame = {
+  private[graft] def statsLatest(): DataFrame = {
     if (!statsExists)
       return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], statsSchema)
-    spark.read.parquet(statsDir)
+    spark.read.schema(statsSchema).parquet(statsDir)
       .withColumn("_rn", row_number().over(
         Window.partitionBy(col("stream_id"))
           .orderBy(col("max_log_position").desc, col("last_event_number").desc)))
       .where(col("_rn") === 1).drop("_rn")
   }
 
-  /** Global max log_position, from stats alone. */
-  private def globalMaxPos(): Long = {
+  // --------------------------------------------------------- stream index
+
+  private val indexLock = new Object
+  @volatile private var loadedIndex: StreamIndex = null
+
+  /** Stats data files on disk — a plain listing, no Spark job. Spark names
+    * every file it writes uniquely, so a name identifies its rows. */
+  private def statsFiles(): Set[String] =
+    Option(new java.io.File(statsDir).list()).fold(Set.empty[String])(
+      _.iterator.filterNot(n => n.startsWith("_") || n.startsWith(".")).toSet)
+
+  /** The rows of the given stats files, in one job. Rows of files written
+    * after the caller's listing are left for the next refresh. */
+  private def readStatsRows(files: Set[String]): Seq[(String, StreamStats)] =
+    if (files.isEmpty) Nil
+    else spark.read.schema(statsSchema).parquet(statsDir)
+      .where(col("_metadata.file_name").isin(files.toSeq: _*))
+      .select("stream_id", "last_event_number", "tombstoned", "max_log_position")
+      .collect().toSeq
+      .map(r => r.getString(0) -> StreamStats(r.getLong(1), r.getBoolean(2), r.getLong(3)))
+
+  /** The stream index, current with the stats directory: loaded once (one
+    * job); afterwards each call lists `stats/` and reads only the files it
+    * has not folded yet. A folded file that has gone (scavenge swap, crash
+    * recovery) forces a reload. */
+  private[graft] def streamIndex(): StreamIndex = indexLock.synchronized {
     ensureStats()
-    if (!statsExists) return -1L
-    spark.read.parquet(statsDir).agg(max("max_log_position")).collect()(0) match {
-      case r if r.isNullAt(0) => -1L
-      case r => r.getLong(0)
-    }
+    val listed = statsFiles()
+    val cur = loadedIndex
+    val next =
+      if (cur == null || !cur.files.subsetOf(listed))
+        StreamIndex(Map.empty, -1L, Set.empty).fold(readStatsRows(listed), listed)
+      else if (cur.files.size == listed.size) cur
+      else {
+        val added = listed -- cur.files
+        cur.fold(readStatsRows(added), added)
+      }
+    loadedIndex = next
+    next
   }
 
-  /** Driver-side snapshot for the batch append path: global max position,
-    * last event number and tombstone flag for the given streams only. */
-  private def statsSnapshot(streams: Seq[String]): (Long, Map[String, Long], Set[String]) = {
-    val maxPos = globalMaxPos()
-    if (!statsExists) return (maxPos, Map.empty, Set.empty)
-    val rows = statsLatest().where(col("stream_id").isin(streams: _*))
-      .select("stream_id", "last_event_number", "tombstoned").collect()
-    (maxPos,
-      rows.map(r => r.getString(0) -> r.getLong(1)).toMap,
-      rows.filter(_.getBoolean(2)).map(_.getString(0)).toSet)
-  }
-
-  private def writeStatsRows(rows: Seq[(String, Long, Boolean)], maxPos: Long): Unit =
-    rows.map { case (s, l, t) => (s, l, t, maxPos) }
+  /** Write one stats delta and fold it into the index without reading it
+    * back. The single file the write adds is this delta; if the listing
+    * shows anything else new, the next refresh reads it all instead. */
+  private def writeStatsDelta(rows: Seq[(String, StreamStats)]): Unit = {
+    val before = statsFiles()
+    rows.map { case (s, st) => (s, st.last, st.tombstoned, st.pos) }
       .toDF("stream_id", "last_event_number", "tombstoned", "max_log_position")
       .coalesce(1).write.mode(SaveMode.Append).parquet(statsDir)
+    indexLock.synchronized {
+      val added = statsFiles() -- before
+      if (loadedIndex != null && added.size == 1)
+        loadedIndex = loadedIndex.fold(rows, added)
+    }
+  }
 
   // --------------------------------------------- append crash-consistency
 
@@ -361,7 +462,7 @@ class EventLogStore(spark: SparkSession, path: String, requestedBuckets: Int = 0
   private def recoverInterruptedAppend(): Unit = {
     if (!Files.exists(appendMarker)) return
     if (exists && statsExists) {
-      val statsMax = spark.read.parquet(statsDir)
+      val statsMax = spark.read.schema(statsSchema).parquet(statsDir)
         .agg(max("max_log_position")).collect()(0) match {
         case r if r.isNullAt(0) => -1L
         case r => r.getLong(0)
@@ -422,10 +523,12 @@ class EventLogStore(spark: SparkSession, path: String, requestedBuckets: Int = 0
         s"append batch is $batchBytes bytes > 1 MiB; split it or use appendBulk " +
           "(the bulk-ingest path, which has no RPC-payload analog)")
     val targetStreams = events.map(_.stream_id).distinct
-    // critical section: stats snapshot → version checks → log write →
+    // critical section: index refresh → version checks → log write →
     // stats write must not interleave with another writer (object doc)
     EventLogStore.appendLockFor(path).synchronized {
-    val (maxPos, lastByStream, tombstoned) = statsSnapshot(targetStreams)
+    val idx = streamIndex()
+    val maxPos = idx.maxPos
+    def lastOf(s: String): Option[Long] = idx.streams.get(s).map(_.last)
 
     // Idempotency FIRST: drop events whose event_id already exists, then
     // in-batch dedup. A batch that is entirely already-committed is an
@@ -444,8 +547,9 @@ class EventLogStore(spark: SparkSession, path: String, requestedBuckets: Int = 0
     if (fresh.isEmpty) return 0L
 
     // Expected-version checks (IndexWriter/Streams.Append semantics)
+    // (against the index, so a stream outside the batch is checked too)
     expected.foreach { case (sid, ev) =>
-      val last = lastByStream.getOrElse(sid, ExpectedVersion.NoStream)
+      val last = lastOf(sid).getOrElse(ExpectedVersion.NoStream)
       ev match {
         case ExpectedVersion.Any => ()
         case ExpectedVersion.NoStream =>
@@ -462,7 +566,7 @@ class EventLogStore(spark: SparkSession, path: String, requestedBuckets: Int = 0
 
     // Tombstone check: appends to hard-deleted streams are forbidden —
     // including events that FOLLOW a tombstone inside this same batch
-    fresh.find(e => tombstoned.contains(e.stream_id)).foreach { e =>
+    fresh.find(e => idx.streams.get(e.stream_id).exists(_.tombstoned)).foreach { e =>
       throw new WrongExpectedVersionException(s"stream ${e.stream_id} is deleted")
     }
     val seenTomb = scala.collection.mutable.Set[String]()
@@ -477,10 +581,10 @@ class EventLogStore(spark: SparkSession, path: String, requestedBuckets: Int = 0
     val numbered = fresh.zipWithIndex.map { case (e, i) =>
       (e, maxPos + 1 + i)
     }
-    val perStream = scala.collection.mutable.Map[String, Long]() ++ lastByStream
+    val perStream = scala.collection.mutable.Map[String, Long]()
     val nowTomb = scala.collection.mutable.Set[String]()
     val rows = numbered.map { case (e, pos) =>
-      val next = perStream.getOrElse(e.stream_id, -1L) + 1
+      val next = perStream.getOrElse(e.stream_id, lastOf(e.stream_id).getOrElse(-1L)) + 1
       perStream(e.stream_id) = next
       if (e.event_type == EventEnvelope.StreamDeletedEventType) nowTomb += e.stream_id
       (e.stream_id, next, e.event_id, e.event_type,
@@ -493,14 +597,15 @@ class EventLogStore(spark: SparkSession, path: String, requestedBuckets: Int = 0
         "metadata", "is_redacted"))
     writeLayoutMarker()
     armAppendMarker()
-    df.repartition(1)
-      .sortWithinPartitions(col("stream_id"), col("event_number"))
+    // the batch is at most 1 MiB: one task writes one file per partition
+    // dir, sorted by (stream_id, event_number) behind the partition columns
+    // (the order the writer needs, so it adds no sort of its own)
+    df.coalesce(1)
+      .sortWithinPartitions((partitionCols ++ Seq("stream_id", "event_number")).map(col): _*)
       .write.mode(SaveMode.Append).options(logWriteOptions)
       .partitionBy(partitionCols: _*).parquet(logDir)
-    val touched = fresh.map(_.stream_id).distinct
-    writeStatsRows(
-      touched.map(s => (s, perStream(s), nowTomb.contains(s))),
-      maxPos + fresh.size)
+    writeStatsDelta(fresh.map(_.stream_id).distinct.map(s =>
+      s -> StreamStats(perStream(s), nowTomb.contains(s), maxPos + fresh.size)))
     disarmAppendMarker()
     fresh.size.toLong
     }
@@ -516,7 +621,7 @@ class EventLogStore(spark: SparkSession, path: String, requestedBuckets: Int = 0
   def appendBulk(pending: DataFrame, orderBy: Seq[String] = Seq("timestamp", "event_id")): Long = {
     // same writer serialization as append() (EventLogStore object doc)
     EventLogStore.appendLockFor(path).synchronized {
-    val maxPos = globalMaxPos()
+    val maxPos = streamIndex().maxPos
     val stats = statsLatest()
     val lasts = stats.select(col("stream_id").as("_sid"), col("last_event_number").as("_last"))
     val sorted = pending.orderBy(orderBy.map(col): _*)
@@ -595,33 +700,11 @@ class EventLogStore(spark: SparkSession, path: String, requestedBuckets: Int = 0
   /** Read a stream's effective metadata back (reference GetStreamMetadata:
     * latest `$metadata` event of `$$<stream>` + tombstone state). A point
     * lookup — stream/bucket pruned, never a log scan. */
-  def getMetadata(streamId: String): StreamMeta = {
-    val metaStream = EventEnvelope.MetastreamPrefix + streamId
-    val rows = if (!exists) Array.empty[Row] else {
-      val base = read().where(col("stream_id") === metaStream)
-      val pruned =
-        if (bucketed) base.where(col("p_bucket") === bucketFor(metaStream)) else base
-      pruned.orderBy(col("event_number").desc)
-        .select(
-          get_json_object(col("data"), "$.$maxCount").cast("long"),
-          get_json_object(col("data"), "$.$maxAge").cast("long"),
-          get_json_object(col("data"), "$.$tb").cast("long"),
-          get_json_object(col("data"), "$.$cacheControl").cast("long"))
-        .limit(1).collect()
-    }
-    val tombstoned = streamState(streamId) == EventLogStore.StreamDeleted
-    rows.headOption match {
-      case None => StreamMeta(streamId, None, None, None, tombstoned)
-      case Some(r) =>
-        def opt(i: Int): Option[Long] = if (r.isNullAt(i)) None else Some(r.getLong(i))
-        StreamMeta(streamId, opt(0), opt(1), opt(2), tombstoned, opt(3))
-    }
-  }
+  def getMetadata(streamId: String): StreamMeta = metadataOf(streamId, streamIndex())
 
   /** Soft delete: truncate the whole stream ($tb = last + 1 — streams.md). */
   def softDelete(streamId: String): Unit = {
-    val (_, lasts, _) = statsSnapshot(Seq(streamId))
-    val last = lasts.getOrElse(streamId, -1L)
+    val last = streamIndex().streams.get(streamId).fold(-1L)(_.last)
     setMetadata(streamId, truncateBefore = Some(last + 1))
   }
 
@@ -790,9 +873,7 @@ class EventLogStore(spark: SparkSession, path: String, requestedBuckets: Int = 0
     EventLogStore.appendLockFor(path).synchronized {
       val target = col("stream_id") === streamId &&
         col("event_number") === eventNumber
-      val hitBase = read().where(target)
-      val hit = if (bucketed)
-        hitBase.where(col("p_bucket") === bucketFor(streamId)) else hitBase
+      val hit = streamSlice(streamId).where(col("event_number") === eventNumber)
       // one point-lookup job answers both WHERE (partition dirs) and HOW
       // MANY (the return value): stream + bucket pruned, stats bound it
       val hitParts = hit.groupBy(concat_ws("/",

@@ -49,6 +49,21 @@ class EventLogStoreSpec extends SparkTestBase {
     assert(store.read().where(col("stream_id") === "a-1").count() == 2)
   }
 
+  test("expected version of a stream outside the batch is checked against its real last") {
+    val store = freshStore()
+    store.append(Seq(pe("a-1", "e1")))
+    // a-1 is not in the batch but exists at version 0
+    assert(store.append(Seq(pe("b-1", "e2")), Map("a-1" -> 0L)) == 1L)
+    assert(store.append(Seq(pe("b-1", "e3")), Map("a-1" -> ExpectedVersion.StreamExists)) == 1L)
+    intercept[WrongExpectedVersionException] {
+      store.append(Seq(pe("b-1", "e4")), Map("a-1" -> ExpectedVersion.NoStream))
+    }
+    intercept[WrongExpectedVersionException] {
+      store.append(Seq(pe("b-1", "e5")), Map("c-1" -> 0L))
+    }
+    assert(store.read().where(col("stream_id") === "b-1").count() == 2)
+  }
+
   test("tombstoned stream forbids further appends; reads StreamDeleted") {
     val store = freshStore()
     store.append(Seq(pe("a-1", "e1")))
