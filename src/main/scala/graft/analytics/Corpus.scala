@@ -664,18 +664,9 @@ object Corpus {
     // nothing on a shuffled layout, so every model-subtree rescan reads
     // the full table). Crossover sits between ×100 and ×300 of sf0.1:
     // ×100 uncached 13.5/15.7 s vs cached 16.5/16.8; ×300 uncached
-    // 40.9/36.7 s vs cached 27.7/30.0. Below the gate the plan is
-    // bit-identical to the un-cached r16 shape.
-    val cacheConf =
-      docs.sparkSession.conf.get("spark.graft.perplexity.cacheModel", "auto")
-    val minBytes = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-      docs.sparkSession.conf.get(
-        "spark.graft.perplexity.cacheModelMinBytes", "128m"))
-    val cacheModel = cacheConf match {
-      case "auto" =>
-        docs.queryExecution.optimizedPlan.stats.sizeInBytes >= minBytes
-      case v => v == "true"
-    }
+    // 40.9/36.7 s vs cached 27.7/30.0. Below the gate (128 MiB of plan)
+    // the plan is bit-identical to the un-cached r16 shape.
+    val cacheModel = docs.queryExecution.optimizedPlan.stats.sizeInBytes >= (128L << 20)
     val scored = perplexityScoresImpl(docs, train, vocab, lambda, alpha,
       textCol, idCol, cacheModel = cacheModel)
     // cutoffs rounded to 6 dp so both engines bucket rows against the

@@ -431,6 +431,8 @@ object Dedup {
         col("x.h1").as("h1"), col("x.h2").as("h2"))
   }
 
+  private val CensusPartitionBytes = 32L << 20
+
   /** Scale-adaptive partition count for the census window exchange of the
     * substring-removal family (guide §2.2 / §5; r17 — VERDICT r16 #1).
     * The `count(*) over (partition by h)` census sorts the ENTIRE window
@@ -440,21 +442,15 @@ object Dedup {
     * slices outgrew execution memory. Derive the exchange width from the
     * corpus plan's size estimate instead: one ~56-byte unsafe (id, i, h)
     * row per ~6-char token over ~2.5×-compressed parquet ≈ 20× the scan
-    * bytes, targeted at `spark.graft.census.partitionBytes` (default 32m)
-    * per task. Returns None (leave the session default) whenever the
-    * estimate does not EXCEED the session's shuffle partitions — at bench
+    * bytes, targeted at [[CensusPartitionBytes]] (32 MiB) per task.
+    * Returns None (leave the session default) whenever the estimate does
+    * not EXCEED the session's shuffle partitions — at bench
     * SF the plan is bit-identical to r16 — and caps at 4096 so a
-    * mis-estimate cannot explode the task count. Disable with
-    * `spark.graft.census.scaleParts=false`. */
+    * mis-estimate cannot explode the task count. */
   private def censusPartitions(docs: DataFrame): Option[Int] = {
-    val spark = docs.sparkSession
-    if (spark.conf.get("spark.graft.census.scaleParts", "true") != "true")
-      return None
-    val target = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-      spark.conf.get("spark.graft.census.partitionBytes", "32m"))
     val scanBytes = docs.queryExecution.optimizedPlan.stats.sizeInBytes
-    val est = scanBytes * 20 / math.max(target, 1L)
-    val cur = spark.sessionState.conf.numShufflePartitions
+    val est = scanBytes * 20 / CensusPartitionBytes
+    val cur = docs.sparkSession.sessionState.conf.numShufflePartitions
     if (est <= cur) None else Some(est.min(BigInt(4096)).toInt)
   }
 

@@ -36,8 +36,8 @@ object Retention {
 
   /** The per-stream retention bounds table — computed once from the FULL
     * log (last event numbers are global state), then applicable to any
-    * slice of it (see EventLogStore.scavengeIncremental, which filters one
-    * date partition at a time against one shared bounds table). */
+    * slice of it. For standalone readers of a raw log directory; a store
+    * derives the same table from its stats instead ([[boundsFromLasts]]). */
   def bounds(log: DataFrame, meta: DataFrame, asOf: Column): DataFrame =
     boundsFromLasts(
       log.groupBy(col("stream_id")).agg(max(col("event_number")).as("_last")),
@@ -46,11 +46,11 @@ object Retention {
   /** [[bounds]] over a PRECOMPUTED per-stream last-event-number table
     * `(stream_id, _last[, _tombstoned])` — the incremental-stats fast
     * path: EventLogStore maintains exactly this table at append time, so
-    * a subscription or retained read derives its bounds from one small
-    * point table plus the metastream rows, never aggregating the event
-    * log itself (the substitution scavengeIncremental already makes for
-    * its own bounds). An optional `_tombstoned` column ORs into the
-    * deleted flag alongside the metadata-derived one. */
+    * its retained reads, subscriptions and scavenge derive their bounds
+    * from one small point table plus the metastream rows
+    * (EventLogStore.retentionBounds), never aggregating the event log
+    * itself. An optional `_tombstoned` column ORs into the deleted flag
+    * alongside the metadata-derived one. */
   def boundsFromLasts(lasts: DataFrame, meta: DataFrame, asOf: Column): DataFrame = {
     val withTomb =
       if (lasts.columns.contains("_tombstoned")) lasts

@@ -193,8 +193,8 @@ object JsStreamStepper {
   }
 
   /** In-memory rows per key before the per-key fold spills sorted runs
-    * (~a few hundred bytes/row ⇒ tens of MB at the default). */
-  private[graft] val DefaultMaxSortBuffer = 1 << 16
+    * (~a few hundred bytes/row ⇒ tens of MB). */
+  private[graft] val MaxSortBuffer = 1 << 16
 
   // ------------------------------------------------- bound runtime
 
@@ -233,9 +233,7 @@ object JsStreamStepper {
       // --- emit mode (stateful emitted() streaming, r15) ------------
       val postSlots: Array[Int] = Array.empty, // POST-value slot (-1)
       val letStagesPost: Array[(Int, Slot)] = Array.empty,
-      val emitFn: RowExec.RowFn = null, // the emissions-array expression
-      // per-key in-memory sort bound before spilling runs (sortedByPos)
-      val maxSortBuffer: Int = DefaultMaxSortBuffer
+      val emitFn: RowExec.RowFn = null // the emissions-array expression
     ) extends Serializable {
 
     // --- pre values from state (the window reconstructions) ---------
@@ -305,10 +303,10 @@ object JsStreamStepper {
       // its child by the GROUPING KEY only (no sorted-groups variant
       // exists for it; a plan-level sortWithinPartitions is rejected on
       // streaming frames), and the fold is order-sensitive. The BUFFER
-      // is bounded (r16): sortedByPos holds at most maxSortBuffer rows
+      // is bounded (r16): sortedByPos holds at most MaxSortBuffer rows
       // on the heap and spills sorted runs past it, so a hot key in a
       // large trigger costs flat memory, not its per-batch arrival rate.
-      val sorted = sortedByPos(rows, posIdx, maxSortBuffer)
+      val sorted = sortedByPos(rows, posIdx, MaxSortBuffer)
       val ext = new GenericInternalRow(extSize)
       val joined = new JoinedRow()
       sorted.foreach { row =>
@@ -366,7 +364,7 @@ object JsStreamStepper {
         state: GroupState[Array[Byte]]): Iterator[graft.projections.Emitted] = {
       val sts = state.getOption.map(deserialize)
         .getOrElse(newStates(fields.toIndexedSeq))
-      val sorted = sortedByPos(rows, posIdx, maxSortBuffer) // bounded (r16)
+      val sorted = sortedByPos(rows, posIdx, MaxSortBuffer) // bounded (r16)
       val ext = new GenericInternalRow(extSize)
       val joined = new JoinedRow()
       val out = mutable.ArrayBuffer.empty[graft.projections.Emitted]
@@ -803,9 +801,7 @@ object JsStreamStepper {
       renderFn, aggIdx, aggSchema.map(_.dataType).toArray,
       prepSchema.fieldIndex("log_position"), RowExec.toInternal(prepSchema),
       postSlots = postSlots, letStagesPost = letStagesPost.toArray,
-      emitFn = emitFn,
-      maxSortBuffer = spark.conf
-        .get("spark.graft.stepper.maxSortBuffer", DefaultMaxSortBuffer.toString).toInt)
+      emitFn = emitFn)
 
     (prep, rt, prepSchema.fieldIndex(Key))
   }

@@ -107,6 +107,17 @@ object EventLogStore {
       java.nio.file.Paths.get(dir).toAbsolutePath.normalize.toString,
       _ => new Object)
 
+  /** The bucket count recorded in a store directory's layout marker
+    * (`layout.json`), or None while the directory has no marker. */
+  private[graft] def layoutBuckets(storeDir: String): Option[Int] = {
+    val layout = Paths.get(storeDir, "layout.json")
+    if (!Files.exists(layout)) None
+    else Some("\"num_buckets\"\\s*:\\s*(\\d+)".r
+      .findFirstMatchIn(new String(Files.readAllBytes(layout),
+        java.nio.charset.StandardCharsets.UTF_8))
+      .fold(0)(_.group(1).toInt))
+  }
+
   /** One stream's latest stats row. Deltas are ordered by
     * (max_log_position, last_event_number), the order `statsLatest` takes
     * the latest row by; a full tie keeps the tombstone. */
@@ -138,35 +149,35 @@ class EventLogStore(spark: SparkSession, path: String, requestedBuckets: Int = 0
   private def statsDir = s"$path/stats"
   private def statsExists: Boolean = new java.io.File(statsDir).exists()
 
-  recoverInterruptedScavenge()
-  recoverInterruptedAppend()
-
   /** Stream-hash bucket count (0 = unbucketed). Bucketing partitions the
     * log by (p_date, p_bucket = hash(stream_id) mod N), so a single-stream
     * read prunes to 1/N of the files — the partition-layout replacement
-    * for the reference's PTable stream index (SURVEY.md §4). Fixed at log
-    * creation and persisted in a layout marker; reopening ignores the
-    * constructor argument in favor of the on-disk layout. */
-  val numBuckets: Int = {
-    val layout = Paths.get(s"$path/layout.json")
-    if (Files.exists(layout)) {
-      val s = new String(Files.readAllBytes(layout),
-        java.nio.charset.StandardCharsets.UTF_8)
-      "\"num_buckets\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(s)
-        .map(_.group(1).toInt).getOrElse(0)
-    } else requestedBuckets
+    * for the reference's PTable stream index (SURVEY.md §4). Fixed by the
+    * first write, which persists it in a layout marker; from then on every
+    * instance over the directory uses the marker's count, whatever its
+    * constructor argument. Until the marker exists each use re-checks it,
+    * so two instances opened on an empty directory agree once either
+    * writes. */
+  @volatile private var layoutBuckets: Option[Int] = None
+  def numBuckets: Int = layoutBuckets.getOrElse {
+    layoutBuckets = EventLogStore.layoutBuckets(path)
+    layoutBuckets.getOrElse(requestedBuckets)
   }
   private def bucketed: Boolean = numBuckets > 0
   private def partitionCols: Seq[String] =
     if (bucketed) Seq("p_date", "p_bucket") else Seq("p_date")
 
+  /** Write the layout marker if there is none yet, atomically (a reader
+    * never sees a half-written one). Writers call this before they derive
+    * partition columns, so their layout is the marker's. */
   private def writeLayoutMarker(): Unit = {
     val layout = Paths.get(s"$path/layout.json")
     if (!Files.exists(layout)) {
       Files.createDirectories(Paths.get(path))
-      Files.write(layout,
-        s"""{"num_buckets":$numBuckets}""".getBytes(
-          java.nio.charset.StandardCharsets.UTF_8))
+      val tmp = Files.createTempFile(Paths.get(path), "layout", ".tmp")
+      Files.write(tmp, s"""{"num_buckets":$numBuckets}""".getBytes(
+        java.nio.charset.StandardCharsets.UTF_8))
+      moveAtomic(tmp.toString, layout.toString)
     }
   }
 
@@ -351,17 +362,25 @@ class EventLogStore(spark: SparkSession, path: String, requestedBuckets: Int = 0
     * the stats table existed (one full scan, once). */
   private def ensureStats(): Unit = {
     if (!exists || statsExists) return
-    val maxPos = read().agg(max("log_position")).collect()(0) match {
-      case r if r.isNullAt(0) => -1L
-      case r => r.getLong(0)
-    }
-    read().groupBy(col("stream_id"))
+    statsOf(read(), maxOf(read(), "log_position"))
+      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(statsDir)
+  }
+
+  /** Stats rows for a set of log rows: per stream the max event number and
+    * whether a tombstone is among them, stamped with `maxPos`. */
+  private def statsOf(rows: DataFrame, maxPos: Long): DataFrame =
+    rows.groupBy(col("stream_id"))
       .agg(
         max(col("event_number")).as("last_event_number"),
         max(col("event_type") === EventEnvelope.StreamDeletedEventType).as("tombstoned"))
       .withColumn("max_log_position", lit(maxPos))
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(statsDir)
-  }
+
+  /** The max of a long column, or -1 when there are no rows. */
+  private def maxOf(df: DataFrame, c: String): Long =
+    df.agg(max(c)).collect()(0) match {
+      case r if r.isNullAt(0) => -1L
+      case r => r.getLong(0)
+    }
 
   /** Latest stats row per stream (LSM read path: last delta wins).
     *
@@ -462,22 +481,10 @@ class EventLogStore(spark: SparkSession, path: String, requestedBuckets: Int = 0
   private def recoverInterruptedAppend(): Unit = {
     if (!Files.exists(appendMarker)) return
     if (exists && statsExists) {
-      val statsMax = spark.read.schema(statsSchema).parquet(statsDir)
-        .agg(max("max_log_position")).collect()(0) match {
-        case r if r.isNullAt(0) => -1L
-        case r => r.getLong(0)
-      }
-      val logMax = read().agg(max("log_position")).collect()(0) match {
-        case r if r.isNullAt(0) => -1L
-        case r => r.getLong(0)
-      }
+      val statsMax = maxOf(spark.read.schema(statsSchema).parquet(statsDir), "max_log_position")
+      val logMax = maxOf(read(), "log_position")
       if (logMax > statsMax) {
-        read().where(col("log_position") > statsMax)
-          .groupBy(col("stream_id"))
-          .agg(
-            max(col("event_number")).as("last_event_number"),
-            max(col("event_type") === EventEnvelope.StreamDeletedEventType).as("tombstoned"))
-          .withColumn("max_log_position", lit(logMax))
+        statsOf(read().where(col("log_position") > statsMax), logMax)
           .coalesce(1).write.mode(SaveMode.Append).parquet(statsDir)
         refreshListings()
       }
@@ -591,11 +598,11 @@ class EventLogStore(spark: SparkSession, path: String, requestedBuckets: Int = 0
         Option(e.timestamp).getOrElse(now), pos, e.correlation_id,
         true, e.data, e.metadata, false)
     }
+    writeLayoutMarker()
     val df = withPartitionCols(
       rows.toDF("stream_id", "event_number", "event_id", "event_type",
         "timestamp", "log_position", "correlation_id", "is_json", "data",
         "metadata", "is_redacted"))
-    writeLayoutMarker()
     armAppendMarker()
     // the batch is at most 1 MiB: one task writes one file per partition
     // dir, sorted by (stream_id, event_number) behind the partition columns
@@ -631,7 +638,7 @@ class EventLogStore(spark: SparkSession, path: String, requestedBuckets: Int = 0
         Row.fromSeq(r.toSeq :+ (maxPos + 1 + i)) },
       schema.add("log_position", "long"))
     val wStream = Window.partitionBy(col("stream_id")).orderBy(col("log_position"))
-    val out = withPartitionCols(withPos
+    val out = withPos
       .join(lasts, col("stream_id") === col("_sid"), "left")
       .withColumn("event_number",
         coalesce(col("_last"), lit(-1L)) + row_number().over(wStream))
@@ -641,7 +648,7 @@ class EventLogStore(spark: SparkSession, path: String, requestedBuckets: Int = 0
       .withColumn("is_redacted", lit(false))
       .select("stream_id", "event_number", "event_id", "event_type", "timestamp",
         "log_position", "correlation_id", "is_json", "data", "metadata",
-        "is_redacted"))
+        "is_redacted")
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
       val n = out.count()
@@ -665,14 +672,9 @@ class EventLogStore(spark: SparkSession, path: String, requestedBuckets: Int = 0
       }
       writeLayoutMarker()
       armAppendMarker()
-      out.write.mode(SaveMode.Append).options(logWriteOptions)
+      withPartitionCols(out).write.mode(SaveMode.Append).options(logWriteOptions)
         .partitionBy(partitionCols: _*).parquet(logDir)
-      val statsUpdate = out.groupBy(col("stream_id"))
-        .agg(
-          max(col("event_number")).as("last_event_number"),
-          max(col("event_type") === EventEnvelope.StreamDeletedEventType).as("tombstoned"))
-        .withColumn("max_log_position", lit(maxPos + n))
-      statsUpdate.coalesce(1).write.mode(SaveMode.Append).parquet(statsDir)
+      statsOf(out, maxPos + n).coalesce(1).write.mode(SaveMode.Append).parquet(statsDir)
       disarmAppendMarker()
       n
     } finally out.unpersist()
@@ -715,44 +717,26 @@ class EventLogStore(spark: SparkSession, path: String, requestedBuckets: Int = 0
 
   // ------------------------------------------------------------- scavenge
 
-  /** Scavenge (§2.7): physically rewrite the log keeping only rows a reader
-    * can still see, PLUS metastreams and tombstone events — the reference
-    * scavenger never drops a tombstone, so hard-deleted streams stay
-    * unrecreatable forever. The stats table is compacted (not rebuilt from
-    * the log) so per-stream last event numbers survive even when every data
-    * row of a stream was removed.
+  /** Scavenge (§2.7): [[scavengeIncremental]], then stats compaction. The
+    * stats table is compacted to its latest row per stream (not rebuilt
+    * from the log), so per-stream last event numbers survive even when
+    * every data row of a stream was removed.
     *
-    * Crash-safe swap: new dirs are fully written to `*_scavenged`, the live
-    * dirs are atomically moved aside to `*_old`, the new dirs moved into
-    * place, and only then are the old dirs deleted. Every move is
-    * `Files.move(ATOMIC_MOVE)` and throws on failure; an interrupted
-    * scavenge is repaired by recoverInterruptedScavenge() on next open
-    * (stats deltas are order-insensitive per stream, so restoring
-    * pre-scavenge stats next to a post-scavenge log is still correct). */
+    * Crash-safe swap: the compacted table is fully written to
+    * `stats_scavenged`, the live table atomically moved aside to
+    * `stats_old`, the new one moved into place, and only then is the old
+    * one deleted. Every move is `Files.move(ATOMIC_MOVE)` and throws on
+    * failure; an interrupted swap is repaired by
+    * recoverInterruptedScavenge() on next open (stats deltas are
+    * order-insensitive per stream, so restoring pre-compaction stats next
+    * to a scavenged log is still correct). */
   def scavenge(asOf: Column = current_timestamp()): Unit = {
     if (!exists) return
-    ensureStats()
-    // $tmp streams are removed at scavenge (their metastream row is kept,
-    // so the flag and the stats row survive and numbering stays monotone)
-    val tempStreams = graft.operators.Retention.metadataFromLog(read())
-      .where(col("temp")).select(col("stream_id"))
-    val keep = readRetained(asOf)
-      .join(broadcast(tempStreams), Seq("stream_id"), "left_anti")
-      .unionByName(read().where(col("stream_id").startsWith(EventEnvelope.MetastreamPrefix)),
-        allowMissingColumns = true)
-      .unionByName(read().where(col("event_type") === EventEnvelope.StreamDeletedEventType),
-        allowMissingColumns = true)
-    val tmpLog = s"$path/log_scavenged"
+    scavengeIncremental(asOf)
     val tmpStats = s"$path/stats_scavenged"
-    withPartitionCols(keep.drop(partitionCols: _*))
-      .write.mode(SaveMode.Overwrite).options(logWriteOptions)
-      .partitionBy(partitionCols: _*).parquet(tmpLog)
     statsLatest().coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmpStats)
     moveAtomic(statsDir, s"$path/stats_old")
-    moveAtomic(logDir, s"$path/log_old")
-    moveAtomic(tmpLog, logDir)
     moveAtomic(tmpStats, statsDir)
-    deleteRecursively(new java.io.File(s"$path/log_old"))
     deleteRecursively(new java.io.File(s"$path/stats_old"))
     refreshListings()
   }
@@ -764,49 +748,41 @@ class EventLogStore(spark: SparkSession, path: String, requestedBuckets: Int = 0
     spark.catalog.refreshByPath(statsDir)
   }
 
-  /** Incremental scavenge — the 100 TB path, mirroring the reference's
-    * chunk-by-chunk staged scavenge (TransactionLog/Scavenging/Stages):
-    * computes ONE global bounds table, finds the date partitions that
-    * actually contain removable rows, and rewrites only those, one
-    * partition at a time with an on-disk marker making each step
-    * restartable. Untouched partitions are not read again after the
-    * detection scan (and that scan's per-partition counts push down to
-    * parquet stats). Tombstones and metastreams are always kept
-    * (scavenge() semantics). Returns the rewritten partition values. */
+  /** Incremental scavenge — mirroring the reference's chunk-by-chunk
+    * staged scavenge (TransactionLog/Scavenging/Stages): removes exactly
+    * the rows [[readRetained]] no longer returns, plus the rows of `$tmp`
+    * streams. The bounds are [[retentionBounds]] — the stats table and the
+    * metastreams, the same bounds every retained read applies — with `$tmp`
+    * streams marked deleted. One detection scan finds the partitions that
+    * hold removable rows, and only those are rewritten, one at a time with
+    * an on-disk marker making each step restartable. Tombstones and
+    * metastreams are always kept. Returns the rewritten partition values. */
   def scavengeIncremental(asOf: Column = current_timestamp()): Seq[String] = {
     if (!exists) return Seq.empty
-    ensureStats()
-    val log = read()
-    val meta = graft.operators.Retention.metadataFromLog(log)
-    val tempStreams = meta.where(col("temp")).select(col("stream_id"))
-    val data = log.where(!col("stream_id").startsWith(EventEnvelope.MetastreamPrefix) &&
-      col("event_type") =!= EventEnvelope.StreamDeletedEventType)
-    val bounds = graft.operators.Retention
-      .bounds(data, meta, asOf)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    import graft.operators.Retention
+    // $tmp streams go at scavenge (their metastream row is kept, so the
+    // flag and the stats row survive and numbering stays monotone)
+    val temp = Retention.metadataFromMetastreams(read()).where(col("temp"))
+      .select(col("stream_id"), col("temp").as("_temp"))
+    // materialized once: each partition swap refreshes the log's listing,
+    // which must neither recompute the bounds from a half-scavenged log nor
+    // leave them reading files that are gone
+    val bounds = retentionBounds(asOf).join(broadcast(temp), Seq("stream_id"), "left")
+      .withColumn("_deleted", col("_deleted") || coalesce(col("_temp"), lit(false)))
+      .drop("_temp").localCheckpoint(true)
+    val isData = !col("stream_id").startsWith(EventEnvelope.MetastreamPrefix) &&
+      col("event_type") =!= EventEnvelope.StreamDeletedEventType
     try {
-      // one partition = one (p_date[, p_bucket]) directory; $tmp-stream
-      // rows are removable like retention-expired ones
-      val isTemp = tempStreams.withColumn("_temp", lit(true))
-      val affected = data.join(broadcast(bounds), Seq("stream_id"), "left")
-        .join(broadcast(isTemp), Seq("stream_id"), "left")
-        .where(!graft.operators.Retention.keepCondition || coalesce(col("_temp"), lit(false)))
-        .select(concat_ws("/",
-          partitionCols.map(c => concat(lit(s"$c="), col(c).cast("string"))): _*))
-        .distinct().as[String].collect().sorted
+      val affected = read().where(isData).join(broadcast(bounds), Seq("stream_id"), "left")
+        .where(!Retention.keepCondition).select(partitionSuffix)
+        .distinct().as[String].collect().sorted.toSeq
       affected.foreach { suffix =>
-        // row-level keep: metastreams + tombstones + bounds-retained rows
-        val slice = log.where(partitionPredicate(suffix))
-        val keepRows = graft.operators.Retention
-          .applyBounds(slice.where(!col("stream_id").startsWith(EventEnvelope.MetastreamPrefix) &&
-            col("event_type") =!= EventEnvelope.StreamDeletedEventType), bounds)
-          .join(broadcast(tempStreams), Seq("stream_id"), "left_anti")
-          .unionByName(slice.where(col("stream_id").startsWith(EventEnvelope.MetastreamPrefix) ||
-            col("event_type") === EventEnvelope.StreamDeletedEventType))
-        rewritePartition(suffix, keepRows)
+        val slice = read().where(partitionPredicate(suffix))
+        rewritePartition(suffix, Retention.applyBounds(slice.where(isData), bounds)
+          .unionByName(slice.where(!isData)))
       }
-      affected.toSeq
-    } finally bounds.unpersist()
+      affected
+    } finally org.apache.spark.sql.graftbridge.Bridge.dropLocalCheckpoint(bounds)
   }
 
   /** Compact small files (§2.7 maintenance): every `append` commits at
@@ -842,6 +818,10 @@ class EventLogStore(spark: SparkSession, path: String, requestedBuckets: Int = 0
     affected.map(_._1)
   }
 
+  /** Each row's partition dir as a path suffix (`p_date=…[/p_bucket=…]`). */
+  private def partitionSuffix: Column =
+    concat_ws("/", partitionCols.map(c => concat(lit(s"$c="), col(c).cast("string"))): _*)
+
   /** Typed predicate selecting one partition dir by its path suffix
     * (`p_date=…[/p_bucket=…]`) — typed so partition pruning applies at
     * the scan. */
@@ -876,10 +856,7 @@ class EventLogStore(spark: SparkSession, path: String, requestedBuckets: Int = 0
       val hit = streamSlice(streamId).where(col("event_number") === eventNumber)
       // one point-lookup job answers both WHERE (partition dirs) and HOW
       // MANY (the return value): stream + bucket pruned, stats bound it
-      val hitParts = hit.groupBy(concat_ws("/",
-          partitionCols.map(c => concat(lit(s"$c="), col(c).cast("string"))): _*)
-          .as("part"))
-        .count().collect()
+      val hitParts = hit.groupBy(partitionSuffix).count().collect()
       if (hitParts.isEmpty) return 0L
       val n = hitParts.map(_.getLong(1)).sum
       // legacy logs (written before the flag existed) get a ONE-TIME
@@ -890,9 +867,7 @@ class EventLogStore(spark: SparkSession, path: String, requestedBuckets: Int = 0
       val suffixes =
         if (spark.read.parquet(logDir).columns.contains(graft.operators.Redaction.Flag))
           hitParts.map(_.getString(0)).sorted.toSeq
-        else read().select(concat_ws("/",
-            partitionCols.map(c => concat(lit(s"$c="), col(c).cast("string"))): _*))
-          .distinct().as[String].collect().sorted.toSeq
+        else read().select(partitionSuffix).distinct().as[String].collect().sorted.toSeq
       suffixes.foreach { suffix =>
         rewritePartition(suffix, read().where(partitionPredicate(suffix))
           .withColumn("is_redacted",
@@ -933,7 +908,9 @@ class EventLogStore(spark: SparkSession, path: String, requestedBuckets: Int = 0
   }
 
   /** Repair state left by a scavenge that crashed mid-swap. Idempotent;
-    * runs at store construction. */
+    * runs at store construction. The `log_old`/`log_scavenged` branches
+    * serve directories left by builds whose scavenge swapped the whole
+    * log; nothing writes those dirs now. */
   private def recoverInterruptedScavenge(): Unit = {
     val log = Paths.get(logDir); val logOld = Paths.get(s"$path/log_old")
     val stats = Paths.get(statsDir); val statsOld = Paths.get(s"$path/stats_old")
@@ -964,4 +941,8 @@ class EventLogStore(spark: SparkSession, path: String, requestedBuckets: Int = 0
     if (f.isDirectory) f.listFiles.foreach(deleteRecursively)
     f.delete()
   }
+
+  // last in the constructor: recovery reads through the fields above
+  recoverInterruptedScavenge()
+  recoverInterruptedAppend()
 }

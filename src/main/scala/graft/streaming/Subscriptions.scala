@@ -46,14 +46,9 @@ object Subscriptions {
       try return spark.read.parquet(logDir).schema
       catch { case _: org.apache.spark.sql.AnalysisException => () }
     val base = EventEnvelope.schema.add("p_date", "date")
-    val layout = new java.io.File(dir.getParentFile, "layout.json")
-    val bucketed = layout.exists() && {
-      val s = new String(java.nio.file.Files.readAllBytes(layout.toPath),
-        java.nio.charset.StandardCharsets.UTF_8)
-      "\"num_buckets\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(s)
-        .exists(_.group(1).toInt > 0)
-    }
-    if (bucketed) base.add("p_bucket", "int") else base
+    if (graft.sources.EventLogStore.layoutBuckets(dir.getAbsoluteFile.getParent).exists(_ > 0))
+      base.add("p_bucket", "int")
+    else base
   }
 
   /** SUB2: subscribe to $all with an optional server-side filter and an
@@ -147,8 +142,9 @@ object Subscriptions {
     *
     * Scale note: bounds() recomputes per-stream last-event-numbers from
     * the log; at very large stream counts feed it the incrementally
-    * maintained stats table instead (EventLogStore keeps one — the same
-    * substitution scavengeIncremental makes). */
+    * maintained stats table instead (EventLogStore keeps one:
+    * store.subscribeAllRetained passes its retentionBounds,
+    * the bounds its retained reads and scavenge apply). */
   def subscribeAllRetained(spark: SparkSession, logDir: String,
       filter: Column = lit(true), fromPosition: Long = -1L,
       asOf: Column = current_timestamp(),

@@ -454,6 +454,40 @@ class EventLogStoreSpec extends SparkTestBase {
     assert(store.read().where(!col("stream_id").startsWith("$")).count() == 7)
   }
 
+  test("two instances opened on an empty directory agree on the bucket layout") {
+    val dir = TempDirs.create("graftlog")
+    val a = new EventLogStore(spark, dir, requestedBuckets = 16)
+    val b = new EventLogStore(spark, dir) // opened before the first write
+    a.append(Seq(pe("a-1", "e1")))
+    b.append(Seq(pe("b-1", "e2")))
+    assert(a.numBuckets == 16 && b.numBuckets == 16)
+    assert(b.read().count() == 2)
+    assert(a.readStreamEvents("b-1").count() == 1)
+  }
+
+  // scavenge removes exactly what no reader can see: after every pass the
+  // log's data rows are readRetained's rows, for both entry points
+  Seq[(String, EventLogStore => Unit)](
+    "scavenge" -> (_.scavenge()),
+    "scavengeIncremental" -> (_.scavengeIncremental(): Unit)
+  ).foreach { case (name, scavenge) =>
+    test(s"$name leaves exactly the rows readRetained returns") {
+      val store = new EventLogStore(spark, TempDirs.create("graftlog"))
+      val now = new java.sql.Timestamp(System.currentTimeMillis())
+      store.append((0 to 2).map(i => PendingEvent("a-1", s"e$i", "E", "{}", timestamp = now)) :+
+        PendingEvent("a-1", "e3", "E", "{}", timestamp = ts("2020-01-01 00:00:00")))
+      def rows(df: org.apache.spark.sql.DataFrame): Set[(String, Long)] =
+        df.where(!col("stream_id").startsWith("$$") && col("event_type") =!= "$streamDeleted")
+          .select("stream_id", "event_number").collect()
+          .map(r => (r.getString(0), r.getLong(1))).toSet
+      for (maxCount <- Seq(2L, 1L)) {
+        store.setMetadata("a-1", maxCount = Some(maxCount), maxAgeSec = Some(86400L))
+        scavenge(store)
+        assert(rows(store.read()) == rows(store.readRetained()), s"maxCount=$maxCount")
+      }
+    }
+  }
+
   test("appendBulk assigns order-respecting positions and per-stream numbers") {
     val store = freshStore()
     store.append(Seq(pe("a-1", "seed")))
