@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every registered query against
   * $SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
   * Materialization via the noop sink (full plan execution, no collect).
@@ -9,7 +7,7 @@ import org.apache.spark.sql.SparkSession
   * $SPARK_GRAFT_BENCH_OUT if set) so the full per-query map survives even
   * if stdout is truncated by the harness. */
 /** Accumulates task-level metrics between reset() calls — the per-query
-  * window of the bench diag mode. Spark fires task-end events on the
+  * window of the bench diag record. Spark fires task-end events on the
   * listener bus asynchronously; snapshot() is read after the query's job
   * completes so late events only ever under-count by the bus-drain tail. */
 private[graft] class BenchDiagListener
@@ -49,27 +47,19 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    // Diag (default ON since r16; SPARK_GRAFT_BENCH_DIAG=0 disables):
-    // per-query JVM + Spark-metric deltas appended to
+    // Diag (always on): per-query JVM + Spark-metric deltas appended to
     // /tmp/bench_diag.jsonl so a full-suite distortion (r14 finding:
     // js_linkto 0.8 s isolated vs 13.3 s in-suite; r15: 16+ queries 2-6x
     // inflated by ambient run context) can be attributed to a mechanism
     // (GC wall, storage eviction, spill) instead of guessed at. The
     // listener adds no measurable overhead (atomic adds on task end).
-    val diag = sys.env.get("SPARK_GRAFT_BENCH_DIAG").forall(_ != "0")
-    val diagListener = if (diag) Some(new BenchDiagListener) else None
-    diagListener.foreach(spark.sparkContext.addSparkListener)
+    val diagListener = new BenchDiagListener
+    spark.sparkContext.addSparkListener(diagListener)
     def gcMillis(): Long = {
       import scala.jdk.CollectionConverters._
       java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
@@ -91,28 +81,18 @@ object Bench {
     }
 
     def runOnce(name: String, record: Boolean = false): Double = {
-      val gc0 = if (diag) gcMillis() else 0L
-      diagListener.foreach(_.reset())
+      val gc0 = gcMillis()
+      diagListener.reset()
       val t0 = System.nanoTime()
-      try SparkEntry.queries(name)(spark, sfDir)
-        .write.mode("overwrite").format("noop").save()
+      try SparkEntry.run(spark, name, sfDir)(
+        _.write.mode("overwrite").format("noop").save())
       catch { case e: Throwable =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
         return -1.0
-      } finally {
-        // a lingering corpus-sized NB feature cache makes LATER queries'
-        // numbers depend on run order/storage pressure (r12 finding): each
-        // query pays its own cache population and leaves nothing behind
-        graft.analytics.Corpus.releaseNbFeatureCache()
-        // ... and so do the query-local library caches (inverted shingle
-        // indexes, pipeline stage caches — r14 full-suite distortion):
-        // release everything operators tracked for this query
-        graft.QueryCaches.release()
       }
       val sec = (System.nanoTime() - t0) / 1e9
-      if (diag && record) {
-        val m = diagListener.map(_.snapshot()).getOrElse("")
-        val line = s"""{"q":"$name","sec":$sec,"gcMs":${gcMillis() - gc0},$m,${storageSnapshot()}}"""
+      if (record) {
+        val line = s"""{"q":"$name","sec":$sec,"gcMs":${gcMillis() - gc0},${diagListener.snapshot()},${storageSnapshot()}}"""
         try java.nio.file.Files.write(java.nio.file.Paths.get("/tmp/bench_diag.jsonl"),
           (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8),
           java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)

@@ -17,6 +17,22 @@ object SparkEntry {
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] = Registry.oracleSql
+
+  /** Build registered query `name` over `dir`, hand it to `use`, then run
+    * the per-query release contract whether `use` returns or throws: the
+    * Naive-Bayes feature cache first, then every intermediate operators
+    * tracked in [[QueryCaches]]. Every main that runs registry queries goes
+    * through here, so each query pays its own cache population and leaves
+    * nothing behind: lingering query-local caches made later queries'
+    * numbers depend on run order and storage pressure (BASELINE.md
+    * "r15: bench run hygiene"). */
+  def run[A](spark: SparkSession, name: String, dir: String)(
+      use: DataFrame => A): A =
+    try use(queries(name)(spark, dir))
+    finally {
+      graft.analytics.Corpus.releaseNbFeatureCache()
+      QueryCaches.release()
+    }
 }
 
 /** Central registry of (query, oracle) pairs. Each operator module

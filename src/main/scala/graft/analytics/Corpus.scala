@@ -1035,10 +1035,12 @@ object Corpus {
     * Memory contract: the cache is corpus-sized (text + feature arrays)
     * and canNOT degrade gracefully once executors are memory-starved —
     * tasks iterating cached blocks pin them against eviction, so
-    * execution memory fails before the cache spills (measured:
-    * IoBoundProbe ×1000 at 8g dies with UNABLE_TO_ACQUIRE_MEMORY, where
-    * the split [[naiveBayesTrain]]+[[naiveBayesClassify]] form — two
-    * scans, hashing twice, no cache — completes; BASELINE.md r12). The
+    * execution memory fails before the cache spills (measured: the
+    * ×1000 corpus at 8g dies with UNABLE_TO_ACQUIRE_MEMORY, where the
+    * split [[naiveBayesTrain]]+[[naiveBayesClassify]] form — two scans,
+    * hashing twice, no cache — completes; BASELINE.md "r12: ×1000
+    * memory-constrained point" and "r13: the NB shared-hash/split choice
+    * is now a SIZE GATE"). The
     * choice is therefore SIZE-GATED like the repo's other
     * scale-conditional strategies (`maxBloomDocs`, `PushdownMaxLists`,
     * `PushdownMaxKeys`): with `shareFeatures = None` (the default) the
@@ -1077,7 +1079,8 @@ object Corpus {
   /** Deserialized-cache bytes per parquet-estimated input byte,
     * CALIBRATED against the measured failure: the ×1000 corpus (556 MB
     * parquet) could not hold its shared cache inside a 4.7 GiB unified
-    * region (UNABLE_TO_ACQUIRE_MEMORY at 8g, r12/r13 IoBoundProbe), so
+    * region (UNABLE_TO_ACQUIRE_MEMORY at 8g; BASELINE.md "r12: ×1000
+    * memory-constrained point"), so
     * the true text+gram-array+row-overhead expansion is ≥ ~8×; 12×
     * flips that deployment to split with margin. Deliberately
     * conservative — an overestimate costs the split form's ~1.5× wall,

@@ -446,13 +446,21 @@ object Dedup {
     * Returns None (leave the session default) whenever the estimate does
     * not EXCEED the session's shuffle partitions — at bench
     * SF the plan is bit-identical to r16 — and caps at 4096 so a
-    * mis-estimate cannot explode the task count. */
-  private def censusPartitions(docs: DataFrame): Option[Int] = {
+    * mis-estimate cannot explode the task count. Unknown statistics (an
+    * RDD- or stream-backed plan reports `spark.sql.defaultSizeInBytes`)
+    * also return None: no estimate is not evidence of a large corpus. */
+  private[graft] def censusPartitions(docs: DataFrame): Option[Int] = {
+    val conf = docs.sparkSession.sessionState.conf
     val scanBytes = docs.queryExecution.optimizedPlan.stats.sizeInBytes
     val est = scanBytes * 20 / CensusPartitionBytes
-    val cur = docs.sparkSession.sessionState.conf.numShufflePartitions
-    if (est <= cur) None else Some(est.min(BigInt(4096)).toInt)
+    if (scanBytes >= conf.defaultSizeInBytes || est <= conf.numShufflePartitions)
+      None
+    else Some(est.min(BigInt(4096)).toInt)
   }
+
+  /** A window-hash census and the `k` its windows were built with (see
+    * [[substringCensus]]). */
+  final case class SubstringCensus(k: Int, rows: DataFrame)
 
   /** Caller-owned window-hash census — the shared intermediate of the
     * substring family (r17; VERDICT r16 #3): one (id, i, h1, h2) row per
@@ -465,21 +473,30 @@ object Dedup {
     * QueryCaches-tracks) the census ONCE instead of paying the scan +
     * tokenize + window build per operator — the serving-index train-once
     * pattern. Callers own the persist/release lifecycle, exactly like
-    * [[SimilarityIndex]] handles. */
+    * [[SimilarityIndex]] handles. The census carries the `k` it was
+    * built with; an operator called with another `k` rejects it. */
   def substringCensus(docs: DataFrame, k: Int = 8,
-      textCol: String = "text", idCol: String = "doc_id"): DataFrame =
-    windowCensusOf(docs, k, textCol, idCol, outer = true)
+      textCol: String = "text", idCol: String = "doc_id"): SubstringCensus =
+    SubstringCensus(k, windowCensusOf(docs, k, textCol, idCol, outer = true))
+
+  /** The census rows of `census` for an operator running at `k`: its
+    * spans are k-token windows, so rows built at another k are wrong. */
+  private def censusRows(census: Option[SubstringCensus], k: Int): Option[DataFrame] =
+    census.map { c =>
+      require(c.k == k, s"substring census built with k=${c.k} cannot serve k=$k")
+      c.rows
+    }
 
   def substringDupStats(docs: DataFrame, k: Int = 8,
       textCol: String = "text", idCol: String = "doc_id",
-      census: Option[DataFrame] = None): DataFrame = {
+      census: Option[SubstringCensus] = None): DataFrame = {
     // explode_outer keeps zero-window docs (short or null text) in the
     // flow as a single null-key row, so no second scan of `docs` is
     // needed for the per-doc window count. A caller-owned census (see
     // [[substringCensus]]) substitutes for the whole scan + tokenize +
     // window build; its null-key marker rows are exactly this path's
     // explode_outer rows.
-    val occ = census.map(_.select(col("id"), col("h1"), col("h2")))
+    val occ = censusRows(census, k).map(_.select(col("id"), col("h1"), col("h2")))
       .getOrElse(windowCensusOf(docs, k, textCol, idCol, outer = true)
         .select(col("id"), col("h1"), col("h2")))
     // Occurrences counted WITH multiplicity: a window repeated inside one
@@ -575,11 +592,11 @@ object Dedup {
 
   def substringDupRemove(docs: DataFrame, k: Int = 8,
       textCol: String = "text", idCol: String = "doc_id",
-      census: Option[DataFrame] = None): DataFrame = {
+      census: Option[SubstringCensus] = None): DataFrame = {
     // A caller-owned census substitutes for the build; dropping its
     // null-key marker rows (zero-window docs) restores this path's
     // plain-explode row set exactly.
-    val wins = census.map(_.where(col("h1").isNotNull)).getOrElse(
+    val wins = censusRows(census, k).map(_.where(col("h1").isNotNull)).getOrElse(
       windowCensusOf(docs, k, textCol, idCol, outer = false))
     // The census is a count-over-window by h, NOT a groupBy + self-join:
     // a join would evaluate the scan + window build once per side (column
@@ -660,12 +677,12 @@ object Dedup {
   def substringDupRemoveSpans(docs: DataFrame, k: Int = 8, minLen: Int = 20,
       textCol: String = "text", idCol: String = "doc_id",
       strict: Boolean = false,
-      census: Option[DataFrame] = None): DataFrame = {
+      census: Option[SubstringCensus] = None): DataFrame = {
     require(minLen >= k, s"minLen=$minLen must be >= k=$k")
     // same compiled window build as substringDupRemove, the same
     // count-over-window census with the same scale-adaptive exchange
     // sizing, and the same caller-owned census substitution
-    val wins = census.map(_.where(col("h1").isNotNull)).getOrElse(
+    val wins = censusRows(census, k).map(_.where(col("h1").isNotNull)).getOrElse(
       windowCensusOf(docs, k, textCol, idCol, outer = false))
     val byH = org.apache.spark.sql.expressions.Window
       .partitionBy(col("h1"), col("h2"))

@@ -386,12 +386,12 @@ class EventLogStore(spark: SparkSession, path: String, requestedBuckets: Int = 0
     *
     * Shape at scale: a per-stream window over the STATS table only — one
     * shuffle of d·N delta rows (d = deltas since last compaction, N =
-    * streams), never the log. `tools/RetentionBoundsProbe` measured this
-    * at 1M/5M streams against both the full-log aggregation it replaces
-    * and a struct-max aggregation alternative; the window form ties or
-    * wins (per-group sort of d≈3 rows is trivial, and the struct-max's
-    * partial combine buys nothing when a stream's deltas are scattered
-    * across input files). Numbers in BASELINE.md. */
+    * streams), never the log. Measured at 1M/5M streams against both
+    * the full-log aggregation it replaces and a struct-max aggregation
+    * alternative; the window form ties or wins (per-group sort of d≈3
+    * rows is trivial, and the struct-max's partial combine buys nothing
+    * when a stream's deltas are scattered across input files). Numbers
+    * in BASELINE.md "Retention-bounds derivation measured". */
   private[graft] def statsLatest(): DataFrame = {
     if (!statsExists)
       return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], statsSchema)

@@ -51,7 +51,8 @@ object Tables {
     * ONE row group per file, so without this every narrow
     * document/embedding pipeline runs serial regardless of core count
     * (measured: bpe_tokenize 1.15 s → 0.36 s at sf0.1/32 cores;
-    * FanoutProbe). Scale-adaptive by construction: a production-sized
+    * OPTIMIZATION_r16.md "serial scans under narrow CPU-heavy plans").
+    * Scale-adaptive by construction: a production-sized
     * table has many splits (parts >= cores → no-op) or exceeds
     * [[FanoutMaxBytes]] (1 GiB → no-op), so nothing is ever shuffled at
     * 100 TB — the degenerate case this fixes is a

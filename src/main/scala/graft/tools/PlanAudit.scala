@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
@@ -14,11 +13,7 @@ import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleEx
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = graft.GraftSession.builder("local[8]", 8)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
@@ -33,9 +28,8 @@ object PlanAudit {
         p.subqueries.flatMap(flatten)
     }
 
-    val rows = graft.Registry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      try {
-        val df = fn(spark, sfDir)
+    val rows = graft.Registry.queries.keys.toSeq.sorted.map { name =>
+      try graft.SparkEntry.run(spark, name, sfDir) { df =>
         df.collect() // execute THIS QueryExecution so AQE finalizes it
         val ops = flatten(df.queryExecution.executedPlan)
         val shuffles = ops.count(_.isInstanceOf[ShuffleExchangeLike])

@@ -20,21 +20,20 @@ object PlanDump {
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
     names.foreach { n =>
-      graft.Registry.queries.get(n) match {
-        case None => System.err.println(s"[plandump] no such query: $n")
-        case Some(fn) =>
-          try {
-            val df = fn(spark, sfDir)
-            val txt = df.queryExecution.explainString(
-              org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-            Files.write(Paths.get(outDir, s"${n}_$suffix.txt"),
-              txt.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-            println(s"[plandump] wrote $n")
-          } catch {
-            case e: Throwable =>
-              System.err.println(s"[plandump] $n failed: ${e.getMessage}")
-          } finally graft.QueryCaches.release()
-      }
+      if (!graft.Registry.queries.contains(n))
+        System.err.println(s"[plandump] no such query: $n")
+      else
+        try {
+          val txt = graft.SparkEntry.run(spark, n, sfDir)(
+            _.queryExecution.explainString(
+              org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
+          Files.write(Paths.get(outDir, s"${n}_$suffix.txt"),
+            txt.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+          println(s"[plandump] wrote $n")
+        } catch {
+          case e: Throwable =>
+            System.err.println(s"[plandump] $n failed: ${e.getMessage}")
+        }
     }
     spark.stop()
   }

@@ -136,16 +136,13 @@ object ScaleProbe {
 
   private def runOnce(spark: SparkSession, name: String, dir: String): Double = {
     val t0 = System.nanoTime()
-    try SparkEntry.queries(name)(spark, dir)
-      .write.mode("overwrite").format("noop").save()
+    // SparkEntry.run releases each query's caches: leaked query-local
+    // caches would otherwise poison every LATER (query, mult) cell
+    try SparkEntry.run(spark, name, dir)(
+      _.write.mode("overwrite").format("noop").save())
     catch { case e: Throwable =>
       System.err.println(s"[scale] $name@$dir failed: ${e.getMessage}")
       return -1.0
-    } finally {
-      // per-query cache hygiene, same as Bench (r15): leaked query-local
-      // caches would otherwise poison every LATER (query, mult) cell
-      graft.analytics.Corpus.releaseNbFeatureCache()
-      graft.QueryCaches.release()
     }
     (System.nanoTime() - t0) / 1e9
   }
@@ -205,7 +202,8 @@ object ScaleProbe {
       // untimed: build the serving-state dirs once per scale — the find_*
       // queries time the LOOKUP against corpus-sized state (the flat-wall
       // claim under probe); their one-time corpus ingest is the resolver's
-      // cost, probed separately by DedupStreamProbe
+      // cost, measured separately (BASELINE.md "r11: incremental
+      // streaming near-dup — per-batch cost flat as history grows")
       // … and the persisted-index serving rows — their one-time index
       // build (the scheduled-job side of the FAISS lifecycle) must not
       // land in the timed lookup

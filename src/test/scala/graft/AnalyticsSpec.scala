@@ -675,7 +675,7 @@ class AnalyticsSpec extends SparkTestBase {
       (5L, "short doc")
     ).toDF("doc_id", "text")
     val census = Dedup.substringCensus(docs, k = 4)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    census.rows.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
         df.orderBy("id").collect().map(_.toString).toSeq
@@ -691,7 +691,32 @@ class AnalyticsSpec extends SparkTestBase {
           strict = true, census = Some(census)))
         == rows(Dedup.substringDupRemoveSpans(docs, k = 4, minLen = 4,
           strict = true)))
-    } finally census.unpersist()
+    } finally census.rows.unpersist()
+  }
+
+  test("substring family: a census built with another k is rejected, not " +
+    "read as k-token windows") {
+    val s = spark; import s.implicits._
+    val docs = Seq((1L, "t1 t2 t3 t4 t5 t6"), (2L, "x t1 t2 t3 t4 t5 t6 y"))
+      .toDF("doc_id", "text")
+    val census = Some(Dedup.substringCensus(docs, k = 4))
+    Seq[() => Any](
+      () => Dedup.substringDupStats(docs, k = 5, census = census),
+      () => Dedup.substringDupRemove(docs, k = 5, census = census),
+      () => Dedup.substringDupRemoveSpans(docs, k = 5, minLen = 5, census = census)
+    ).foreach(op => intercept[IllegalArgumentException](op()))
+  }
+
+  test("censusPartitions: unknown plan statistics leave the session default") {
+    val s = spark
+    val schema = org.apache.spark.sql.types.StructType.fromDDL(
+      "doc_id BIGINT, text STRING")
+    val rdd = s.sparkContext.parallelize(Seq(
+      org.apache.spark.sql.Row(1L, "t1 t2 t3 t4 t5")))
+    val docs = s.createDataFrame(rdd, schema)
+    assert(docs.queryExecution.optimizedPlan.stats.sizeInBytes >=
+      s.sessionState.conf.defaultSizeInBytes)
+    assert(Dedup.censusPartitions(docs).isEmpty)
   }
 
   test("substringDupRemoveSpans strict mode: a planted chimera run is kept; " +
