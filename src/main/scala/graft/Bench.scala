@@ -47,6 +47,8 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    // names this run in every diag record: the file is appended to across runs
+    val run = s"""{"startMs":${System.currentTimeMillis()},"cores":${cpus.toInt}}"""
     val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
@@ -92,7 +94,7 @@ object Bench {
       }
       val sec = (System.nanoTime() - t0) / 1e9
       if (record) {
-        val line = s"""{"q":"$name","sec":$sec,"gcMs":${gcMillis() - gc0},${diagListener.snapshot()},${storageSnapshot()}}"""
+        val line = s"""{"run":$run,"q":"$name","sec":$sec,"gcMs":${gcMillis() - gc0},${diagListener.snapshot()},${storageSnapshot()}}"""
         try java.nio.file.Files.write(java.nio.file.Paths.get("/tmp/bench_diag.jsonl"),
           (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8),
           java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)

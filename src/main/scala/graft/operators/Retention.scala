@@ -46,10 +46,11 @@ object Retention {
   /** [[bounds]] over a PRECOMPUTED per-stream last-event-number table
     * `(stream_id, _last[, _tombstoned])` — the incremental-stats fast
     * path: EventLogStore maintains exactly this table at append time, so
-    * its retained reads, subscriptions and scavenge derive their bounds
-    * from one small point table plus the metastream rows
+    * its retained reads and subscriptions derive their bounds from one
+    * small point table plus the metastream rows
     * (EventLogStore.retentionBounds), never aggregating the event log
-    * itself. An optional `_tombstoned` column ORs into the deleted flag
+    * itself; its scavenge and single-stream reads compute the same row per
+    * stream on the driver from its stream index. An optional `_tombstoned` column ORs into the deleted flag
     * alongside the metadata-derived one. */
   def boundsFromLasts(lasts: DataFrame, meta: DataFrame, asOf: Column): DataFrame = {
     val withTomb =
@@ -69,20 +70,27 @@ object Retention {
           when(col("max_count").isNotNull, col("_last") - col("max_count") + 1L).otherwise(lit(0L)),
           coalesce(col("truncate_before"), lit(0L))
         ).as("_min_event_number"),
-        when(col("max_age_sec").isNotNull,
-          asOf - make_dt_interval(lit(0), lit(0), lit(0), col("max_age_sec").cast("double"))
-        ).as("_cutoff_ts"),
+        cutoff(asOf, col("max_age_sec")).as("_cutoff_ts"),
         (metaTomb ||
           coalesce(col("_tombstoned"), lit(false)) ||
           coalesce(col("truncate_before"), lit(0L)) === DeletedStream).as("_deleted"))
   }
 
+  /** The maxAge cutoff: events older than `maxAgeSec` before `asOf` are
+    * gone (IndexReader.cs:277-283). Null when `maxAgeSec` is null. */
+  def cutoff(asOf: Column, maxAgeSec: Column): Column =
+    asOf - make_dt_interval(lit(0), lit(0), lit(0), maxAgeSec.cast("double"))
+
   /** The row-level keep predicate of [[bounds]], as a Column over a log
     * slice joined to the bounds table. */
   def keepCondition: Column =
-    !coalesce(col("_deleted"), lit(false)) &&
-      col("event_number") >= coalesce(col("_min_event_number"), lit(0L)) &&
-      (col("_cutoff_ts").isNull || col("timestamp") >= col("_cutoff_ts"))
+    keepCondition(col("_min_event_number"), col("_cutoff_ts"), col("_deleted"))
+
+  /** [[keepCondition]] over bounds fields given as columns. */
+  def keepCondition(minEventNumber: Column, cutoffTs: Column, deleted: Column): Column =
+    !coalesce(deleted, lit(false)) &&
+      col("event_number") >= coalesce(minEventNumber, lit(0L)) &&
+      (cutoffTs.isNull || col("timestamp") >= cutoffTs)
 
   /** Apply a precomputed bounds table to a log slice (redaction-scrubbed:
     * retained reads are reads — PrepareLogRecord.cs:65). */

@@ -36,8 +36,9 @@ import graft.model.{EventEnvelope, ExpectedVersion, StreamMeta}
   * (IndexReader.cs:226-306, `StreamInfoCacheCapacity`). The one remaining
   * log touch per append is the event_id idempotency probe, bounded to the
   * target streams; parquet row-group stats prune it and log files are
-  * written with bloom filters on (stream_id, event_id) — the analog of the
-  * reference's per-PTable blooms (PTable.cs:73-95).
+  * written with bloom filters on (stream_id, event_id), sized to each
+  * write's rows — the analog of the reference's per-PTable blooms
+  * (PTable.cs:73-95).
   *
   * The stats table is also what preserves stream numbering across scavenge:
   * a soft-deleted stream's rows are all physically removed, but its
@@ -80,6 +81,15 @@ object EventLogStore {
     * (ClusterVNodeOptions.cs:156), max log record 16 MiB (TFConsts.cs:9). */
   val DefaultMaxAppendSizeBytes: Long = 1L * 1024 * 1024
   val MaxRecordSizeBytes: Long = 16L * 1024 * 1024
+
+  /** Target size of a log data file written by a partition rewrite. */
+  val TargetFileBytes: Long = 256L * 1024 * 1024
+
+  /** One data stream's retention bounds, the row [[graft.operators.Retention.boundsFromLasts]]
+    * computes for it: events below `minEvent` and, with `maxAgeSec`, events
+    * older than that before "now" are gone; `deleted` hides every event. */
+  private[graft] final case class RetentionBounds(minEvent: Long, maxAgeSec: Option[Long],
+      deleted: Boolean)
 
   /** Read-result classification — the reference's ReadStreamResult
     * {NoStream, StreamDeleted, Success} (IndexReader.cs:226-306). */
@@ -226,10 +236,11 @@ class EventLogStore(spark: SparkSession, path: String, requestedBuckets: Int = 0
         .withColumn(flag, coalesce(col(flag), lit(false))))
     }
 
-  /** One stream's slice of the log, bucket-pruned on a bucketed log. */
-  private def streamSlice(streamId: String): DataFrame = {
-    val base = read().where(col("stream_id") === streamId)
-    if (bucketed) base.where(col("p_bucket") === bucketFor(streamId)) else base
+  /** The given streams' slice of the log, bucket-pruned on a bucketed log. */
+  private def streamSlice(streamIds: Seq[String]): DataFrame = {
+    val base = read().where(col("stream_id").isin(streamIds: _*))
+    if (bucketed) base.where(col("p_bucket").isin(streamIds.map(bucketFor).distinct: _*))
+    else base
   }
 
   /** Single-stream positional read with retention applied AND bucket
@@ -241,7 +252,7 @@ class EventLogStore(spark: SparkSession, path: String, requestedBuckets: Int = 0
     * predicates; the rows equal [[readRetained]] filtered to the stream. */
   def readStreamEvents(streamId: String,
       asOf: Column = current_timestamp()): DataFrame = {
-    val slice = streamSlice(streamId)
+    val slice = streamSlice(Seq(streamId))
     // retained reads never return metastream rows
     if (streamId.startsWith(EventEnvelope.MetastreamPrefix)) return slice.where(lit(false))
     val idx = streamIndex()
@@ -249,19 +260,23 @@ class EventLogStore(spark: SparkSession, path: String, requestedBuckets: Int = 0
       // no stats row, no bounds: readRetained's left join keeps every row
       case None => slice
       case Some(st) =>
-        // Retention.boundsFromLasts for one stream
-        val meta = metadataOf(streamId, idx)
-        if (st.tombstoned || meta.truncate_before.contains(graft.operators.Retention.DeletedStream))
-          slice.where(lit(false))
+        val b = boundsOf(st, metadataOf(streamId, idx))
+        if (b.deleted) slice.where(lit(false))
         else {
-          val minEvent = (Seq(0L) ++ meta.max_count.map(st.last - _ + 1L) ++
-            meta.truncate_before).max
-          val kept = slice.where(col("event_number") >= minEvent)
-          meta.max_age_sec.fold(kept)(age => kept.where(col("timestamp") >=
-            asOf - make_dt_interval(lit(0), lit(0), lit(0), lit(age).cast("double"))))
+          val kept = slice.where(col("event_number") >= b.minEvent)
+          b.maxAgeSec.fold(kept)(age =>
+            kept.where(col("timestamp") >= graft.operators.Retention.cutoff(asOf, lit(age))))
         }
     }
   }
+
+  /** Retention.boundsFromLasts for one data stream, from its index row and
+    * its metadata. */
+  private def boundsOf(st: StreamStats, meta: StreamMeta): EventLogStore.RetentionBounds =
+    EventLogStore.RetentionBounds(
+      (Seq(0L) ++ meta.max_count.map(st.last - _ + 1L) ++ meta.truncate_before).max,
+      meta.max_age_sec,
+      st.tombstoned || meta.truncate_before.contains(graft.operators.Retention.DeletedStream))
 
   /** Positional time travel: the log as it stood when `position` was the
     * head (the reference's "read up to a TFPos" — every read RPC carries
@@ -286,36 +301,56 @@ class EventLogStore(spark: SparkSession, path: String, requestedBuckets: Int = 0
     }
   }
 
-  /** A stream's effective metadata: the latest `$metadata` event of its
-    * metastream plus its tombstone state. The metastream is read — one
-    * point-lookup job, stream/bucket pruned — only when the index has a
-    * row for it. */
-  private def metadataOf(streamId: String, idx: StreamIndex): StreamMeta = {
-    val metaStream = EventEnvelope.MetastreamPrefix + streamId
-    val tombstoned = idx.streams.get(streamId).exists(_.tombstoned)
-    val row = if (!idx.streams.contains(metaStream)) None
-      else streamSlice(metaStream).orderBy(col("event_number").desc)
-        .select(
+  /** Each stream's effective metadata — the latest `$metadata` event of its
+    * metastream plus its tombstone state — with its `$tmp` flag. The
+    * metastreams the index has a row for are read in one point-lookup job,
+    * stream/bucket pruned, and each one's latest event is taken on the
+    * driver; with none, no job runs. */
+  private def metadataOf(streamIds: Seq[String],
+      idx: StreamIndex): Map[String, (StreamMeta, Boolean)] = {
+    val prefix = EventEnvelope.MetastreamPrefix
+    val metaStreams = streamIds.map(prefix + _).filter(idx.streams.contains)
+    val latest = if (metaStreams.isEmpty) Map.empty[String, Row]
+      else streamSlice(metaStreams)
+        .select(col("stream_id"), col("event_number"),
           get_json_object(col("data"), "$.$maxCount").cast("long"),
           get_json_object(col("data"), "$.$maxAge").cast("long"),
           get_json_object(col("data"), "$.$tb").cast("long"),
-          get_json_object(col("data"), "$.$cacheControl").cast("long"))
-        .limit(1).collect().headOption
-    row match {
-      case None => StreamMeta(streamId, None, None, None, tombstoned)
-      case Some(r) =>
-        def opt(i: Int): Option[Long] = if (r.isNullAt(i)) None else Some(r.getLong(i))
-        StreamMeta(streamId, opt(0), opt(1), opt(2), tombstoned, opt(3))
-    }
+          get_json_object(col("data"), "$.$cacheControl").cast("long"),
+          coalesce(get_json_object(col("data"), "$.$tmp").cast("boolean"), lit(false)))
+        .collect().groupBy(_.getString(0))
+        .map { case (m, rows) => m.drop(prefix.length) -> rows.maxBy(_.getLong(1)) }
+    streamIds.map { s =>
+      val tombstoned = idx.streams.get(s).exists(_.tombstoned)
+      s -> (latest.get(s) match {
+        case None => (StreamMeta(s, None, None, None, tombstoned), false)
+        case Some(r) =>
+          def opt(i: Int): Option[Long] = if (r.isNullAt(i)) None else Some(r.getLong(i))
+          (StreamMeta(s, opt(2), opt(3), opt(4), tombstoned, opt(5)), r.getBoolean(6))
+      })
+    }.toMap
   }
 
-  /** Parquet options for log data writes: bloom filters on the point-
-    * lookup columns — the analog of the reference's per-PTable blooms
-    * (PTable.cs:73-95) and the backing for the append path's event_id
-    * idempotency probe at scale. */
-  private def logWriteOptions: Map[String, String] = Map(
-    "parquet.bloom.filter.enabled#stream_id" -> "true",
-    "parquet.bloom.filter.enabled#event_id" -> "true")
+  /** One stream's effective metadata (see above). */
+  private def metadataOf(streamId: String, idx: StreamIndex): StreamMeta =
+    metadataOf(Seq(streamId), idx)(streamId)._1
+
+  /** Parquet options for a log data write of `rows` rows: bloom filters on
+    * the point-lookup columns — the analog of the reference's per-PTable
+    * blooms (PTable.cs:73-95) and the backing for the append path's
+    * event_id idempotency probe at scale — sized to the rows written, as
+    * the reference sizes each PTable's bloom to its entry count. Without
+    * an expected count parquet-mr gives every file its cap
+    * (`parquet.bloom.filter.max.bytes`, 1 MiB) per column; the cap still
+    * bounds a large file's filters. */
+  private def logWriteOptions(rows: Long): Map[String, String] = {
+    val ndv = math.max(rows, 1L).toString
+    Map(
+      "parquet.bloom.filter.enabled#stream_id" -> "true",
+      "parquet.bloom.filter.enabled#event_id" -> "true",
+      "parquet.bloom.filter.expected.ndv#stream_id" -> ndv,
+      "parquet.bloom.filter.expected.ndv#event_id" -> ndv)
+  }
 
   /** The log with read-time retention applied (metastreams + tombstones
     * honored) — what a reference reader sees. Bounds come from
@@ -502,12 +537,8 @@ class EventLogStore(spark: SparkSession, path: String, requestedBuckets: Int = 0
     * shape. */
   private[graft] def duplicateIdProbe(batchIds: Seq[String],
       targetStreams: Seq[String]): DataFrame = {
-    val ids = batchIds.toDF("event_id")
-    val slice0 = read().where(col("stream_id").isin(targetStreams: _*))
-    val slice = if (bucketed)
-      slice0.where(col("p_bucket").isin(targetStreams.map(bucketFor).distinct: _*))
-    else slice0
-    slice.join(broadcast(ids), Seq("event_id"), "left_semi").select("event_id")
+    streamSlice(targetStreams).join(broadcast(batchIds.toDF("event_id")), Seq("event_id"), "left_semi")
+      .select("event_id")
   }
 
   /** Append a batch of events. `expected` maps stream -> expected version
@@ -609,7 +640,7 @@ class EventLogStore(spark: SparkSession, path: String, requestedBuckets: Int = 0
     // (the order the writer needs, so it adds no sort of its own)
     df.coalesce(1)
       .sortWithinPartitions((partitionCols ++ Seq("stream_id", "event_number")).map(col): _*)
-      .write.mode(SaveMode.Append).options(logWriteOptions)
+      .write.mode(SaveMode.Append).options(logWriteOptions(fresh.size))
       .partitionBy(partitionCols: _*).parquet(logDir)
     writeStatsDelta(fresh.map(_.stream_id).distinct.map(s =>
       s -> StreamStats(perStream(s), nowTomb.contains(s), maxPos + fresh.size)))
@@ -672,7 +703,7 @@ class EventLogStore(spark: SparkSession, path: String, requestedBuckets: Int = 0
       }
       writeLayoutMarker()
       armAppendMarker()
-      withPartitionCols(out).write.mode(SaveMode.Append).options(logWriteOptions)
+      withPartitionCols(out).write.mode(SaveMode.Append).options(logWriteOptions(n))
         .partitionBy(partitionCols: _*).parquet(logDir)
       statsOf(out, maxPos + n).coalesce(1).write.mode(SaveMode.Append).parquet(statsDir)
       disarmAppendMarker()
@@ -749,40 +780,76 @@ class EventLogStore(spark: SparkSession, path: String, requestedBuckets: Int = 0
   }
 
   /** Incremental scavenge — mirroring the reference's chunk-by-chunk
-    * staged scavenge (TransactionLog/Scavenging/Stages): removes exactly
-    * the rows [[readRetained]] no longer returns, plus the rows of `$tmp`
-    * streams. The bounds are [[retentionBounds]] — the stats table and the
-    * metastreams, the same bounds every retained read applies — with `$tmp`
-    * streams marked deleted. One detection scan finds the partitions that
-    * hold removable rows, and only those are rewritten, one at a time with
-    * an on-disk marker making each step restartable. Tombstones and
-    * metastreams are always kept. Returns the rewritten partition values. */
+    * staged scavenge (TransactionLog/Scavenging/Stages), which calculates
+    * discard points only for streams that carry metadata or a tombstone:
+    * removes exactly the rows [[readRetained]] no longer returns, plus the
+    * rows of `$tmp` streams. Only a data stream the stream index marks
+    * tombstoned or holds a `$$` metastream row for can lose rows (any other
+    * stream's bounds keep everything), so those are the candidates; with
+    * none, no Spark job runs. Their bounds are the ones [[readStreamEvents]]
+    * applies, from the index plus one bucket-pruned read of their
+    * metastreams, with `$tmp` streams marked deleted, and they reach the
+    * scans as one broadcast map. `asOf` is evaluated once, so detection and
+    * rewrite apply the same maxAge cutoff. One detection scan over the
+    * candidates' buckets counts each partition's removable and surviving
+    * rows; a partition with removable rows is rewritten by one scan and one
+    * write, with an on-disk marker making each swap restartable, and one
+    * with no survivors is deleted. Tombstones and metastreams are always
+    * kept. Returns the rewritten partition values.
+    *
+    * A [[graft.streaming.Subscriptions.subscribeAll]] query resumed from its
+    * checkpoint re-delivers every surviving row of a rewritten partition:
+    * its file source tracks files by name, and a rewrite writes new ones. */
   def scavengeIncremental(asOf: Column = current_timestamp()): Seq[String] = {
     if (!exists) return Seq.empty
     import graft.operators.Retention
+    val prefix = EventEnvelope.MetastreamPrefix
+    val idx = streamIndex()
+    val candidates = idx.streams.iterator.collect {
+      case (s, _) if s.startsWith(prefix) => s.drop(prefix.length)
+      case (s, st) if st.tombstoned => s
+    }.filterNot(_.startsWith(prefix)).toSeq.distinct
     // $tmp streams go at scavenge (their metastream row is kept, so the
     // flag and the stats row survive and numbering stays monotone)
-    val temp = Retention.metadataFromMetastreams(read()).where(col("temp"))
-      .select(col("stream_id"), col("temp").as("_temp"))
-    // materialized once: each partition swap refreshes the log's listing,
-    // which must neither recompute the bounds from a half-scavenged log nor
-    // leave them reading files that are gone
-    val bounds = retentionBounds(asOf).join(broadcast(temp), Seq("stream_id"), "left")
-      .withColumn("_deleted", col("_deleted") || coalesce(col("_temp"), lit(false)))
-      .drop("_temp").localCheckpoint(true)
-    val isData = !col("stream_id").startsWith(EventEnvelope.MetastreamPrefix) &&
-      col("event_type") =!= EventEnvelope.StreamDeletedEventType
+    val metas = metadataOf(candidates, idx)
+    val bounds = candidates.flatMap(s => idx.streams.get(s).map { st =>
+      val (meta, temp) = metas(s)
+      val b = boundsOf(st, meta)
+      s -> b.copy(deleted = b.deleted || temp)
+    }).filter { case (_, b) => b.deleted || b.minEvent > 0 || b.maxAgeSec.isDefined }.toMap
+    if (bounds.isEmpty) return Nil
+    // "now" from a one-row local relation: no Spark job
+    val now = lit(Seq(0).toDF("_").select(asOf).collect()(0).get(0))
+    val isData = !col("stream_id").startsWith(prefix) &&
+      !(col("event_type") <=> EventEnvelope.StreamDeletedEventType)
+    val shipped = spark.sparkContext.broadcast(bounds)
     try {
-      val affected = read().where(isData).join(broadcast(bounds), Seq("stream_id"), "left")
-        .where(!Retention.keepCondition).select(partitionSuffix)
-        .distinct().as[String].collect().sorted.toSeq
-      affected.foreach { suffix =>
-        val slice = read().where(partitionPredicate(suffix))
-        rewritePartition(suffix, Retention.applyBounds(slice.where(isData), bounds)
-          .unionByName(slice.where(!isData)))
+      val b = udf((s: String) => shipped.value.get(s)).apply(col("stream_id"))
+      // Retention.keepCondition over each row's looked-up bounds
+      val keep = !isData || Retention.keepCondition(b("minEvent"),
+        Retention.cutoff(now, b("maxAgeSec")), b("deleted"))
+      val scan = if (!bucketed) read()
+        else read().where(col("p_bucket").isin(bounds.keys.map(bucketFor).toSeq.distinct: _*))
+      // per task (partition suffix -> removable, surviving rows), summed on
+      // the driver: one job, no shuffle
+      val affected = scan.select(partitionSuffix, keep).as[(String, Boolean)]
+        .mapPartitions { rows =>
+          val n = scala.collection.mutable.HashMap.empty[String, Array[Long]]
+          rows.foreach { case (part, k) => n.getOrElseUpdate(part, Array(0L, 0L))(if (k) 1 else 0) += 1 }
+          n.iterator.map { case (part, c) => (part, c(0), c(1)) }
+        }.collect().toSeq
+        .groupMapReduce(_._1)(c => (c._2, c._3))((x, y) => (x._1 + y._1, x._2 + y._2))
+        .collect { case (part, (removed, kept)) if removed > 0 => (part, kept) }
+        .toSeq.sortBy(_._1)
+      affected.foreach {
+        case (suffix, 0L) =>
+          deleteRecursively(new java.io.File(s"$logDir/$suffix"))
+          refreshListings()
+        case (suffix, kept) =>
+          rewritePartition(suffix, read().where(partitionPredicate(suffix)).where(keep), kept)
       }
-      affected
-    } finally org.apache.spark.sql.graftbridge.Bridge.dropLocalCheckpoint(bounds)
+      affected.map(_._1)
+    } finally shipped.destroy()
   }
 
   /** Compact small files (§2.7 maintenance): every `append` commits at
@@ -794,29 +861,42 @@ class EventLogStore(spark: SparkSession, path: String, requestedBuckets: Int = 0
     * maintenance, not scavenge), using the same crash-safe marker+swap as
     * incremental scavenge. The reference's analog is chunk merging during
     * scavenge (TFChunk merge); here layout and data lifetime are separate
-    * concerns. Returns the rewritten partition suffixes. */
+    * concerns. Returns the rewritten partition suffixes.
+    *
+    * A [[graft.streaming.Subscriptions.subscribeAll]] query resumed from its
+    * checkpoint re-delivers every row of a compacted partition: its file
+    * source tracks files by name, and a rewrite writes new ones. */
   def compact(maxFilesPerPartition: Int = 8,
-      targetFileBytes: Long = 256L * 1024 * 1024): Seq[String] = {
+      targetFileBytes: Long = EventLogStore.TargetFileBytes): Seq[String] = {
     if (!exists) return Seq.empty
     val root = Paths.get(logDir)
-    val partitions = scala.collection.mutable.ArrayBuffer.empty[(String, Int, Long)]
-    def walk(dir: java.nio.file.Path): Unit = {
-      val children = dir.toFile.listFiles()
-      if (children == null) return
-      val subdirs = children.filter(_.isDirectory)
-      val files = children.filter(f => f.isFile && f.getName.endsWith(".parquet"))
-      if (files.nonEmpty)
-        partitions += ((root.relativize(dir).toString, files.length, files.map(_.length).sum))
-      subdirs.foreach(d => walk(d.toPath))
+    val partitions = scala.collection.mutable.ArrayBuffer.empty[(String, Seq[java.io.File])]
+    def walk(dir: java.io.File): Unit = {
+      val files = dataFiles(dir)
+      if (files.nonEmpty) partitions += ((root.relativize(dir.toPath).toString, files))
+      Option(dir.listFiles()).toSeq.flatten.filter(_.isDirectory).foreach(walk)
     }
-    walk(root)
-    val affected = partitions.filter(_._2 > maxFilesPerPartition).toSeq.sortBy(_._1)
-    affected.foreach { case (suffix, _, bytes) =>
-      val nFiles = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
-      rewritePartition(suffix, read().where(partitionPredicate(suffix)).coalesce(nFiles))
+    walk(root.toFile)
+    val affected = partitions.filter(_._2.size > maxFilesPerPartition).toSeq.sortBy(_._1)
+    affected.foreach { case (suffix, files) =>
+      rewritePartition(suffix, read().where(partitionPredicate(suffix)), footerRows(files),
+        targetFileBytes)
     }
     affected.map(_._1)
   }
+
+  /** The parquet data files directly in a directory. */
+  private def dataFiles(dir: java.io.File): Seq[java.io.File] =
+    Option(dir.listFiles()).toSeq.flatten.filter(f => f.isFile && f.getName.endsWith(".parquet"))
+
+  /** Rows in parquet files, summed from their footers on the driver (no
+    * Spark job). */
+  private def footerRows(files: Seq[java.io.File]): Long = files.map { f =>
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(f.getAbsolutePath), spark.sparkContext.hadoopConfiguration))
+    try reader.getRecordCount finally reader.close()
+  }.sum
 
   /** Each row's partition dir as a path suffix (`p_date=…[/p_bucket=…]`). */
   private def partitionSuffix: Column =
@@ -853,7 +933,7 @@ class EventLogStore(spark: SparkSession, path: String, requestedBuckets: Int = 0
     EventLogStore.appendLockFor(path).synchronized {
       val target = col("stream_id") === streamId &&
         col("event_number") === eventNumber
-      val hit = streamSlice(streamId).where(col("event_number") === eventNumber)
+      val hit = streamSlice(Seq(streamId)).where(col("event_number") === eventNumber)
       // one point-lookup job answers both WHERE (partition dirs) and HOW
       // MANY (the return value): stream + bucket pruned, stats bound it
       val hitParts = hit.groupBy(partitionSuffix).count().collect()
@@ -873,28 +953,28 @@ class EventLogStore(spark: SparkSession, path: String, requestedBuckets: Int = 0
           .withColumn("is_redacted",
             when(target, lit(true)).otherwise(col("is_redacted")))
           .withColumn("data",
-            when(target, lit("")).otherwise(col("data"))))
+            when(target, lit("")).otherwise(col("data"))),
+          footerRows(dataFiles(new java.io.File(s"$logDir/$suffix"))))
       }
       n
     }
   }
 
-  /** Rewrite one partition dir crash-safely: write the kept rows to a
-    * scratch dir, record a marker, swap, clean up. A crash at any point is
-    * repaired by recoverInterruptedScavenge() using the marker. */
-  private def rewritePartition(suffix: String, keepRows: DataFrame): Unit = {
+  /** Rewrite one partition dir crash-safely: write its `rows` kept rows to
+    * a scratch dir in files of about `targetFileBytes` (sized from the
+    * partition's bytes on disk), record a marker, swap, clean up. A crash
+    * at any point is repaired by recoverInterruptedScavenge() using the
+    * marker. */
+  private def rewritePartition(suffix: String, keepRows: DataFrame, rows: Long,
+      targetFileBytes: Long = EventLogStore.TargetFileBytes): Unit = {
     val partDir = s"$logDir/$suffix"
-    if (keepRows.isEmpty) {
-      // nothing survives: drop the partition dir outright
-      deleteRecursively(new java.io.File(partDir))
-      refreshListings()
-      return
-    }
+    val bytes = dataFiles(new java.io.File(partDir)).map(_.length).sum
     val tmp = s"$path/scavenge_part_tmp"
     val aside = s"$path/scavenge_part_old"
     keepRows.drop(partitionCols: _*)
+      .coalesce(math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt))
       .sortWithinPartitions(col("stream_id"), col("event_number"))
-      .write.mode(SaveMode.Overwrite).options(logWriteOptions).parquet(tmp)
+      .write.mode(SaveMode.Overwrite).options(logWriteOptions(rows)).parquet(tmp)
     // marker carries the partition being swapped, for crash recovery
     Files.write(Paths.get(s"$path/scavenge_part_marker"),
       suffix.getBytes(java.nio.charset.StandardCharsets.UTF_8))

@@ -55,7 +55,13 @@ object Subscriptions {
     * explicit start position — the reference's filtered $all subscription
     * takes a start TFPos (Enumerator.AllSubscriptionFiltered.cs); events at
     * or before `fromPosition` are excluded (new subscriber starting at P,
-    * distinct from checkpoint-restart which streaming offsets cover). */
+    * distinct from checkpoint-restart which streaming offsets cover).
+    *
+    * Warning: the checkpoint's offsets are the file source's, which tracks
+    * files by name, so a query resumed after `EventLogStore.compact` or a
+    * scavenge rewrote a partition re-delivers every surviving row of that
+    * partition; the fix is offsets by log position, as the reference
+    * positions subscriptions by TFPos. */
   def subscribeAll(spark: SparkSession, logDir: String,
       filter: Column = lit(true), fromPosition: Long = -1L): DataFrame =
     // scrub BEFORE the caller's filter — a data-referencing predicate
@@ -144,7 +150,7 @@ object Subscriptions {
     * the log; at very large stream counts feed it the incrementally
     * maintained stats table instead (EventLogStore keeps one:
     * store.subscribeAllRetained passes its retentionBounds,
-    * the bounds its retained reads and scavenge apply). */
+    * the bounds its retained reads apply and its scavenge enforces). */
   def subscribeAllRetained(spark: SparkSession, logDir: String,
       filter: Column = lit(true), fromPosition: Long = -1L,
       asOf: Column = current_timestamp(),

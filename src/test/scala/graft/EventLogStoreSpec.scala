@@ -399,6 +399,16 @@ class EventLogStoreSpec extends SparkTestBase {
     } finally reader.close()
   }
 
+  test("a one-event append writes a data file under 64 KiB (blooms sized to the rows)") {
+    val dir = TempDirs.create("graftlog")
+    new EventLogStore(spark, dir).append(Seq(pe("a-1", "e1")))
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get(dir, "log")).toArray.toSeq
+      .map(_.asInstanceOf[java.nio.file.Path].toFile)
+      .filter(f => f.isFile && f.getName.endsWith(".parquet"))
+    assert(files.size == 1)
+    assert(files.head.length < 64L * 1024, s"${files.head.length} bytes")
+  }
+
   test("append enforces the reference 1 MiB batch / 16 MiB record limits") {
     val store = freshStore()
     val big = "x" * (1024 * 1024 + 1)
@@ -466,25 +476,54 @@ class EventLogStoreSpec extends SparkTestBase {
   }
 
   // scavenge removes exactly what no reader can see: after every pass the
-  // log's data rows are readRetained's rows, for both entry points
-  Seq[(String, EventLogStore => Unit)](
-    "scavenge" -> (_.scavenge()),
-    "scavengeIncremental" -> (_.scavengeIncremental(): Unit)
+  // log's data rows are readRetained's rows (less the $tmp stream's), for
+  // both entry points, on a bucketed store spanning two dates
+  Seq[(String, (EventLogStore, org.apache.spark.sql.Column) => Unit)](
+    "scavenge" -> (_.scavenge(_)),
+    "scavengeIncremental" -> (_.scavengeIncremental(_): Unit)
   ).foreach { case (name, scavenge) =>
     test(s"$name leaves exactly the rows readRetained returns") {
-      val store = new EventLogStore(spark, TempDirs.create("graftlog"))
-      val now = new java.sql.Timestamp(System.currentTimeMillis())
-      store.append((0 to 2).map(i => PendingEvent("a-1", s"e$i", "E", "{}", timestamp = now)) :+
-        PendingEvent("a-1", "e3", "E", "{}", timestamp = ts("2020-01-01 00:00:00")))
+      val store = new EventLogStore(spark, TempDirs.create("graftlog"), requestedBuckets = 4)
+      val asOf = lit(ts("2024-06-02 12:00:00"))
+      def at(s: String, id: String, when: String): PendingEvent =
+        PendingEvent(s, id, "E", "{}", timestamp = ts(when))
+      val (day1, day2) = ("2024-06-01 10:00:00", "2024-06-02 10:00:00")
+      store.append(Seq(at("a-1", "a0", day1), at("a-1", "a1", "2024-06-02 09:00:00"),
+        at("a-1", "a2", day2), at("a-1", "a3", "2024-06-02 11:00:00")))
+      store.append(Seq(at("plain-1", "p0", day1), at("plain-1", "p1", day1),
+        at("plain-1", "p2", day2)))
+      store.append(Seq(at("tomb-1", "t0", day1), at("tomb-1", "t1", day2)))
+      store.tombstone("tomb-1")
+      store.append(Seq(at("tmp-1", "k0", day1), at("tmp-1", "k1", day2)))
+      store.setMetadata("tmp-1", temp = Some(true))
+      store.append(Seq(at("sd-1", "s0", day1), at("sd-1", "s1", day1)))
+      store.softDelete("sd-1")
+      store.append(Seq(at("sd-1", "s2", day2))) // recreation continues past $tb
+      store.append(Seq(at("age-1", "g0", day1), at("age-1", "g1", "2024-06-02 11:00:00")))
+      store.setMetadata("age-1", maxAgeSec = Some(3600L))
+      store.setMetadata("ghost-1", maxCount = Some(1L)) // no events of its own
       def rows(df: org.apache.spark.sql.DataFrame): Set[(String, Long)] =
         df.where(!col("stream_id").startsWith("$$") && col("event_type") =!= "$streamDeleted")
           .select("stream_id", "event_number").collect()
           .map(r => (r.getString(0), r.getLong(1))).toSet
+      def numbers(s: String): Seq[Long] = store.read().where(col("stream_id") === s)
+        .select("event_number").collect().map(_.getLong(0)).sorted.toSeq
       for (maxCount <- Seq(2L, 1L)) {
         store.setMetadata("a-1", maxCount = Some(maxCount), maxAgeSec = Some(86400L))
-        scavenge(store)
-        assert(rows(store.read()) == rows(store.readRetained()), s"maxCount=$maxCount")
+        val want = rows(store.readRetained(asOf)).filterNot(_._1 == "tmp-1")
+        scavenge(store, asOf)
+        assert(rows(store.read()) == want, s"maxCount=$maxCount")
+        assert(rows(store.readRetained(asOf)) == want, s"maxCount=$maxCount")
       }
+      assert(numbers("a-1") == Seq(3L))
+      assert(numbers("plain-1") == Seq(0L, 1L, 2L))
+      assert(numbers("tomb-1") == Seq(2L)) // the tombstone stays
+      assert(numbers("tmp-1").isEmpty)
+      assert(numbers("age-1") == Seq(1L))
+      assert(numbers("sd-1") == Seq(2L))
+      store.append(Seq(at("sd-1", "s3", day2)))
+      assert(numbers("sd-1") == Seq(2L, 3L))
+      assert(store.streamState("sd-1") == EventLogStore.StreamOk(3L))
     }
   }
 

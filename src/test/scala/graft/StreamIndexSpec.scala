@@ -2,7 +2,8 @@ package graft
 
 import java.nio.file.{Files, Path, Paths}
 import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import java.util.concurrent.atomic.AtomicLong
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.sources.{EventLogStore, PendingEvent, WrongExpectedVersionException}
@@ -225,6 +226,50 @@ class StreamIndexSpec extends SparkTestBase {
       // the append folded its own delta: no job to see it
       assert(jobsOf(assert(store.streamState("s-0") == EventLogStore.StreamOk(2L))) == 0)
       assert(jobsOf(store.readStreamEvents("s-0").collect()) == 1)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("scavengeIncremental reads only the candidates' and their metastreams' buckets, " +
+    "in at most 4 jobs; none without candidates") {
+    val store = new EventLogStore(spark, dir("graftscavcost"), requestedBuckets = 16)
+    val streams = (0 until 48).map(i => s"s-$i")
+    store.append(streams.flatMap(s => (0 until 3).map(i => pe(s, s"$s-e$i"))))
+    assert(store.streamState("s-0") == EventLogStore.StreamOk(2L)) // index loaded
+    val jobs = new AtomicInteger
+    val records = new AtomicLong
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m => records.addAndGet(m.inputMetrics.recordsRead))
+    }
+    def costOf[T](f: => T): (T, Int, Long) = {
+      org.apache.spark.graft.ListenerBusDrain(spark.sparkContext)
+      jobs.set(0); records.set(0)
+      val out = f
+      org.apache.spark.graft.ListenerBusDrain(spark.sparkContext)
+      (out, jobs.get, records.get)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      // no tombstone and no metastream: no stream can lose rows
+      assert(costOf(store.scavengeIncremental()) == ((Nil, 0, 0L)))
+      // a maxCount stream and a tombstoned one that share a bucket
+      val bucket = store.bucketFor("s-0")
+      val mate = streams.find(s => s != "s-0" && store.bucketFor(s) == bucket).get
+      store.setMetadata("s-0", maxCount = Some(1L))
+      store.tombstone(mate)
+      val metaBucket = store.bucketFor("$$s-0")
+      val perBucket = store.read().groupBy("p_bucket").count().collect()
+        .map(r => r.getInt(0) -> r.getLong(1)).toMap
+      val (rewritten, nJobs, nRecords) = costOf(store.scavengeIncremental())
+      assert(rewritten.size == 1 && rewritten.head.endsWith(s"p_bucket=$bucket"))
+      assert(nJobs <= 4, s"scavengeIncremental launched $nJobs jobs")
+      // one detection scan and one rewrite of the candidates' bucket, one
+      // lookup in the metastream's bucket: never the rest of the log
+      val bound = 2 * perBucket(bucket) + perBucket(metaBucket)
+      assert(nRecords <= bound, s"read $nRecords rows > $bound (log: ${perBucket.values.sum})")
+      assert(store.readStreamEvents("s-0").count() == 1L)
+      assert(store.read().where(col("stream_id") === mate).count() == 1L) // the tombstone
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 }
