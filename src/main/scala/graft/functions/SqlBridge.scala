@@ -33,6 +33,17 @@ object Bridge {
       .sessionState.functionRegistry.registerFunction(
         org.apache.spark.sql.catalyst.FunctionIdentifier(name), info, builder)
 
+  /** The session's SQL conf (`sessionState` is private[sql]). */
+  def sqlConf(spark: org.apache.spark.sql.SparkSession): org.apache.spark.sql.internal.SQLConf =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.conf
+
+  /** The Hadoop conf a file-source write of the session runs under: the
+    * context's conf, the session's SQL conf and the write's `options`. */
+  def hadoopConfWithOptions(spark: org.apache.spark.sql.SparkSession,
+      options: Map[String, String]): org.apache.hadoop.conf.Configuration =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.newHadoopConfWithOptions(options)
+
   /** Release the storage blocks of an EAGER `localCheckpoint(true)`
     * result. A local checkpoint persists its data as a plain RDD (NOT a
     * CacheManager entry), strongly registered in the context until the

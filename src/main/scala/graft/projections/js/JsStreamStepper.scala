@@ -166,15 +166,18 @@ object JsStreamStepper {
       }
       val runs = spills.zipWithIndex.map { case (f, i) => new Run(f, i) }
       // An iterator abandoned mid-merge (downstream exception / early
-      // termination) must not leak open handles + spill files until JVM
-      // exit (the former deleteOnExit also pinned one registry entry per
-      // file for the JVM lifetime — r16 ADVICE): a task-completion hook
-      // closes/deletes whatever the merge has not consumed. Outside a
-      // task (unit tests) the consumed-path delete in advance() covers
-      // the normal case and abandonment is test-process-scoped.
-      Option(org.apache.spark.TaskContext.get()).foreach(tc =>
-        tc.addTaskCompletionListener[Unit](_ =>
-          runs.foreach(r => if (r.head != null) r.close())))
+      // termination) must not leak open handles + spill files: inside a
+      // task, a task-completion hook closes/deletes whatever the merge has
+      // not consumed (deleteOnExit there would pin one registry entry per
+      // file for the JVM lifetime). Outside a task nothing signals the
+      // end, so each run is deleted at JVM exit at the latest; the
+      // consumed-path delete in advance() covers the normal case.
+      Option(org.apache.spark.TaskContext.get()) match {
+        case Some(tc) =>
+          tc.addTaskCompletionListener[Unit](_ =>
+            runs.foreach(r => if (r.head != null) r.close()))
+        case None => spills.foreach(_.deleteOnExit())
+      }
       // (pos, run index): earlier run wins ties — the stable-sort order
       val pq = new java.util.PriorityQueue[Run](runs.size,
         Ordering.by[Run, (Long, Int)](r => (r.head.getLong(posIdx), r.idx)))

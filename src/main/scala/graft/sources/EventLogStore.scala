@@ -33,12 +33,20 @@ import graft.model.{EventEnvelope, ExpectedVersion, StreamMeta}
   * [[streamState]], [[softDelete]] and [[readStreamEvents]]' retention
   * bounds — read the index instead of the stats table, the analog of the
   * reference's cached last-event-number and stream-info lookups
-  * (IndexReader.cs:226-306, `StreamInfoCacheCapacity`). The one remaining
-  * log touch per append is the event_id idempotency probe, bounded to the
-  * target streams; parquet row-group stats prune it and log files are
-  * written with bloom filters on (stream_id, event_id), sized to each
-  * write's rows — the analog of the reference's per-PTable blooms
-  * (PTable.cs:73-95).
+  * (IndexReader.cs:226-306, `StreamInfoCacheCapacity`).
+  *
+  * [[append]] runs no Spark job when the batch's ids are fresh, like the
+  * reference's single storage writer (no distributed job per write). Its
+  * idempotency check opens the target streams' bucket files on the driver
+  * and drops every row group parquet-mr's statistics, dictionary and bloom
+  * filters rule out for (stream_id, event_id); only the files left go to
+  * the exact Spark probe. A column chunk whose pages are all
+  * dictionary-encoded carries no bloom filter (parquet-mr writes none) and
+  * its dictionary answers exactly; a chunk that fell back to plain encoding
+  * carries one, sized to its file's rows — the analog of the reference's
+  * per-PTable blooms (PTable.cs:73-95). The batch and its stats delta are
+  * then written on the driver by Spark's own parquet writer, one file per
+  * partition dir, each renamed into place whole.
   *
   * The stats table is also what preserves stream numbering across scavenge:
   * a soft-deleted stream's rows are all physically removed, but its
@@ -63,6 +71,9 @@ import graft.model.{EventEnvelope, ExpectedVersion, StreamMeta}
   *
   * Single-writer discipline: one ingest job owns a log directory (the
   * reference is equally single-writer per log). Readers are unlimited.
+  * Inside one JVM, appends, scavenge, compaction and redaction serialize
+  * on the directory's append lock, so a partition rewrite never moves
+  * aside a file an append renamed in after the rewrite read the partition.
   */
 final case class PendingEvent(
     stream_id: String,
@@ -210,6 +221,11 @@ class EventLogStore(spark: SparkSession, path: String, requestedBuckets: Int = 0
     val base = EventEnvelope.schema.add("p_date", "date")
     if (bucketed) base.add("p_bucket", "int") else base
   }
+
+  /** The data columns of a driver-written log file: the envelope, every
+    * column optional, since a pending event may leave any string null. */
+  private val appendFileSchema = org.apache.spark.sql.types.StructType(
+    EventEnvelope.schema.map(_.copy(nullable = true)))
 
   /** Add the partition-layout columns to envelope rows. */
   private def withPartitionCols(df: DataFrame): DataFrame = {
@@ -478,18 +494,119 @@ class EventLogStore(spark: SparkSession, path: String, requestedBuckets: Int = 0
     next
   }
 
-  /** Write one stats delta and fold it into the index without reading it
-    * back. The single file the write adds is this delta; if the listing
-    * shows anything else new, the next refresh reads it all instead. */
+  /** Write one stats delta on the driver and fold it into the index under
+    * its file name, without reading it back. */
   private def writeStatsDelta(rows: Seq[(String, StreamStats)]): Unit = {
-    val before = statsFiles()
-    rows.map { case (s, st) => (s, st.last, st.tombstoned, st.pos) }
-      .toDF("stream_id", "last_event_number", "tombstoned", "max_log_position")
-      .coalesce(1).write.mode(SaveMode.Append).parquet(statsDir)
+    val name = writeFile(statsDir, statsSchema,
+      rows.map { case (s, st) => Row(s, st.last, st.tombstoned, st.pos) }, Map.empty,
+      "stats.rename")
     indexLock.synchronized {
-      val added = statsFiles() -- before
-      if (loadedIndex != null && added.size == 1)
-        loadedIndex = loadedIndex.fold(rows, added)
+      if (loadedIndex != null) loadedIndex = loadedIndex.fold(rows, Set(name))
+    }
+  }
+
+  // ------------------------------------------------- driver-side writes
+
+  /** Where a driver-side write puts its file before renaming it into place. */
+  private def appendTmpDir = s"$path/append_tmp"
+
+  /** Called with a step's name ("log.rename", "stats.rename") before each
+    * rename of a driver-side write. A crash test sets it to throw, which
+    * leaves the directory as a crash at that step would. */
+  @volatile private[graft] var failPoint: String => Unit = _ => ()
+
+  /** Write `rows` as one parquet file into `dir` on the driver, through
+    * Spark's own parquet writer (ParquetUtils.prepareWrite, then the
+    * ParquetOutputWriter it returns) under the session's conf plus
+    * `options` — what one task of a Spark write does, so codec, timestamp
+    * type, footer row metadata and bloom filters match a Spark-written
+    * file. The file is written in `append_tmp/` and renamed into `dir` by
+    * the FileSystem that wrote it, so its `.crc` sidecar moves with it and
+    * a concurrent listing of `dir` sees the whole file or none. `step`
+    * names the rename for [[failPoint]]. Returns the file's name. */
+  private def writeFile(dir: String, schema: org.apache.spark.sql.types.StructType,
+      rows: Seq[Row], options: Map[String, String], step: String): String = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
+    import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetUtils}
+    import org.apache.spark.sql.graftbridge.{Bridge, RowExec}
+    val sqlConf = Bridge.sqlConf(spark)
+    val job = Job.getInstance(Bridge.hadoopConfWithOptions(spark, options))
+    val factory = ParquetUtils.prepareWrite(sqlConf, job, schema,
+      new ParquetOptions(options, sqlConf))
+    val ctx = new TaskAttemptContextImpl(job.getConfiguration, new TaskAttemptID)
+    val name = s"part-00000-${java.util.UUID.randomUUID}.c000${factory.getFileExtension(ctx)}"
+    val tmp = new Path(appendTmpDir, name)
+    val toInternal = RowExec.toInternal(schema)
+    val writer = factory.newInstance(tmp.toString, schema, ctx)
+    try rows.foreach(r => writer.write(toInternal(r))) finally writer.close()
+    failPoint(step)
+    val fs = tmp.getFileSystem(job.getConfiguration)
+    if (!fs.mkdirs(new Path(dir)) || !fs.rename(tmp, new Path(dir, name)))
+      throw new java.io.IOException(s"could not move $tmp into $dir")
+    name
+  }
+
+  /** The partition dir (`p_date=…[/p_bucket=…]`) of a row with this
+    * timestamp and stream: the write path's Catalyst expressions
+    * (`to_date` is a cast under the session time zone, [[bucketFor]]) and
+    * Spark's partition-path formatting, evaluated on the driver. */
+  private def partitionDirOf(ts: java.sql.Timestamp, streamId: String): String = {
+    import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
+    import org.apache.spark.sql.types.{DateType, IntegerType, StringType}
+    val tz = Option(org.apache.spark.sql.graftbridge.Bridge.sqlConf(spark).sessionLocalTimeZone)
+    def dir(name: String, value: Literal): String =
+      org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.getPartitionPathString(
+        name, Cast(value, StringType, tz).eval().toString)
+    val day = Cast(Literal(ts), DateType, tz).eval()
+    (dir("p_date", Literal(day, DateType)) +:
+      (if (bucketed) Seq(dir("p_bucket", Literal(bucketFor(streamId), IntegerType))) else Nil))
+      .mkString("/")
+  }
+
+  /** The log data files of the target streams' bucket dirs (every
+    * partition dir on an unbucketed log): the files [[streamSlice]] scans
+    * for them. A plain listing, no Spark job. */
+  private def sliceFiles(targetStreams: Seq[String]): Seq[java.io.File] = {
+    val buckets = if (bucketed) targetStreams.map(s => s"p_bucket=${bucketFor(s)}").toSet
+      else Set.empty[String]
+    def walk(dir: java.io.File): Seq[java.io.File] =
+      dataFiles(dir) ++ Option(dir.listFiles()).toSeq.flatten.filter { d =>
+        d.isDirectory && !d.getName.startsWith("_") && !d.getName.startsWith(".") &&
+          (!bucketed || !d.getName.startsWith("p_bucket=") || buckets.contains(d.getName))
+      }.flatMap(walk)
+    walk(new java.io.File(logDir))
+  }
+
+  /** The files of the target streams' slice that may hold one of
+    * `batchIds` in one of `targetStreams`, decided on the driver: each
+    * file's row groups go through parquet-mr's row-group filter with
+    * `stream_id IN targets AND event_id IN ids` at the statistics,
+    * dictionary and bloom-filter levels, and a file whose row groups all
+    * drop holds no duplicate. Neither level alone answers every file: a
+    * chunk whose pages are all dictionary-encoded (every append file, and
+    * small bulk files) carries no bloom filter, but its dictionary answers
+    * exactly; a chunk that fell back to plain encoding has no usable
+    * dictionary, but carries a bloom filter. */
+  private[graft] def maybeDuplicateFiles(batchIds: Seq[String],
+      targetStreams: Seq[String]): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.parquet.filter2.predicate.FilterApi
+    import org.apache.parquet.io.api.Binary
+    def in(c: String, values: Seq[String]) =
+      FilterApi.in(FilterApi.binaryColumn(c), values.map(Binary.fromString).toSet.asJava)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val options = org.apache.parquet.HadoopReadOptions.builder(conf)
+      .withRecordFilter(org.apache.parquet.filter2.compat.FilterCompat.get(
+        FilterApi.and(in("stream_id", targetStreams), in("event_id", batchIds))))
+      .useStatsFilter(true).useDictionaryFilter(true).useBloomFilter(true)
+      .build()
+    sliceFiles(targetStreams).map(_.getAbsolutePath).filter { f =>
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(f), conf), options)
+      try !reader.getRowGroups.isEmpty finally reader.close()
     }
   }
 
@@ -512,8 +629,11 @@ class EventLogStore(spark: SparkSession, path: String, requestedBuckets: Int = 0
   /** Repair a crash between an append's log write and its stats write:
     * marker present → compare stats' recorded max position against the
     * log's actual max (one scan, paid only after a crash) and append
-    * catch-up stats deltas for the tail the stats table missed. */
-  private def recoverInterruptedAppend(): Unit = {
+    * catch-up stats deltas for the tail the stats table missed. Files a
+    * crashed driver-side write left unrenamed in `append_tmp/` are deleted
+    * (their rows were never visible). */
+  private def recoverInterruptedAppend(): Unit = EventLogStore.appendLockFor(path).synchronized {
+    deleteRecursively(new java.io.File(appendTmpDir))
     if (!Files.exists(appendMarker)) return
     if (exists && statsExists) {
       val statsMax = maxOf(spark.read.schema(statsSchema).parquet(statsDir), "max_log_position")
@@ -529,17 +649,18 @@ class EventLogStore(spark: SparkSession, path: String, requestedBuckets: Int = 0
 
   // --------------------------------------------------------------- append
 
-  /** The append path's idempotency probe: which of `batchIds` already exist
-    * in the target streams' slice of the log. A distributed left-semi join
-    * (batch ids broadcast); the log side is stream- and bucket-pruned and
-    * bloom-filtered on event_id. At most |batchIds| rows ever leave the
-    * executors. Exposed for PlanSpec, which pins the no-driver-collect
-    * shape. */
+  /** The append path's exact idempotency probe: which of `batchIds` exist
+    * in the target streams' rows of the given log data files — the files
+    * [[maybeDuplicateFiles]] could not rule out. A distributed left-semi
+    * join (batch ids broadcast) over those files only; at most |batchIds|
+    * rows ever leave the executors. Exposed for PlanSpec, which pins the
+    * no-driver-collect shape. */
   private[graft] def duplicateIdProbe(batchIds: Seq[String],
-      targetStreams: Seq[String]): DataFrame = {
-    streamSlice(targetStreams).join(broadcast(batchIds.toDF("event_id")), Seq("event_id"), "left_semi")
+      targetStreams: Seq[String], files: Seq[String]): DataFrame =
+    spark.read.schema(logSchema).option("basePath", logDir).parquet(files: _*)
+      .where(col("stream_id").isin(targetStreams: _*))
+      .join(broadcast(batchIds.toDF("event_id")), Seq("event_id"), "left_semi")
       .select("event_id")
-  }
 
   /** Append a batch of events. `expected` maps stream -> expected version
     * (ExpectedVersion.Any if absent). Returns count actually appended
@@ -571,15 +692,16 @@ class EventLogStore(spark: SparkSession, path: String, requestedBuckets: Int = 0
     // Idempotency FIRST: drop events whose event_id already exists, then
     // in-batch dedup. A batch that is entirely already-committed is an
     // idempotent success — version checks are skipped, mirroring the
-    // reference's idempotent-write path. The duplicate check is a
-    // DISTRIBUTED semi-join of the log slice (stream + bucket pruned,
-    // bloom-filtered on event_id) against the broadcast batch ids; only the
-    // ids found to be duplicates come back to the driver, so driver memory
-    // is bounded by the 1 MiB batch — never by stream length.
-    val dupIds: Set[String] = if (exists)
-      duplicateIdProbe(events.map(_.event_id).distinct, targetStreams)
-        .as[String].collect().toSet
-    else Set.empty
+    // reference's idempotent-write path. The row-group filter rules out
+    // files on the driver; the files it cannot rule out go to the exact
+    // probe, a distributed semi-join whose output is at most the batch ids,
+    // so driver memory is bounded by the 1 MiB batch — never by stream
+    // length. Fresh ids run no Spark job.
+    val batchIds = events.map(_.event_id).distinct
+    val dupIds: Set[String] = maybeDuplicateFiles(batchIds, targetStreams) match {
+      case Nil => Set.empty
+      case files => duplicateIdProbe(batchIds, targetStreams, files).as[String].collect().toSet
+    }
     val fresh = events.filterNot(e => dupIds.contains(e.event_id))
       .distinctBy(_.event_id)
     if (fresh.isEmpty) return 0L
@@ -616,35 +738,31 @@ class EventLogStore(spark: SparkSession, path: String, requestedBuckets: Int = 0
     }
 
     val now = new java.sql.Timestamp(System.currentTimeMillis())
-    val numbered = fresh.zipWithIndex.map { case (e, i) =>
-      (e, maxPos + 1 + i)
-    }
     val perStream = scala.collection.mutable.Map[String, Long]()
     val nowTomb = scala.collection.mutable.Set[String]()
-    val rows = numbered.map { case (e, pos) =>
+    val rows = fresh.zipWithIndex.map { case (e, i) =>
       val next = perStream.getOrElse(e.stream_id, lastOf(e.stream_id).getOrElse(-1L)) + 1
       perStream(e.stream_id) = next
       if (e.event_type == EventEnvelope.StreamDeletedEventType) nowTomb += e.stream_id
-      (e.stream_id, next, e.event_id, e.event_type,
-        Option(e.timestamp).getOrElse(now), pos, e.correlation_id,
-        true, e.data, e.metadata, false)
+      Row(e.stream_id, next, e.event_id, e.event_type, Option(e.timestamp).getOrElse(now),
+        maxPos + 1 + i, e.correlation_id, true, e.data, e.metadata, false)
     }
     writeLayoutMarker()
-    val df = withPartitionCols(
-      rows.toDF("stream_id", "event_number", "event_id", "event_type",
-        "timestamp", "log_position", "correlation_id", "is_json", "data",
-        "metadata", "is_redacted"))
     armAppendMarker()
-    // the batch is at most 1 MiB: one task writes one file per partition
-    // dir, sorted by (stream_id, event_number) behind the partition columns
-    // (the order the writer needs, so it adds no sort of its own)
-    df.coalesce(1)
-      .sortWithinPartitions((partitionCols ++ Seq("stream_id", "event_number")).map(col): _*)
-      .write.mode(SaveMode.Append).options(logWriteOptions(fresh.size))
-      .partitionBy(partitionCols: _*).parquet(logDir)
+    // durability order: marker, log files, stats delta, disarm. One file per
+    // partition dir, sorted by (stream_id, event_number) — in Spark's string
+    // order, UTF-8 bytes — as a Spark write of the batch would sort it
+    val byStream = Ordering.by[Row, (org.apache.spark.unsafe.types.UTF8String, Long)](r =>
+      (org.apache.spark.unsafe.types.UTF8String.fromString(r.getString(0)), r.getLong(1)))
+    rows.groupBy(r => partitionDirOf(r.getTimestamp(4), r.getString(0))).toSeq.sortBy(_._1)
+      .foreach { case (dir, part) =>
+        writeFile(s"$logDir/$dir", appendFileSchema, part.sorted(byStream),
+          logWriteOptions(part.size), "log.rename")
+      }
     writeStatsDelta(fresh.map(_.stream_id).distinct.map(s =>
       s -> StreamStats(perStream(s), nowTomb.contains(s), maxPos + fresh.size)))
     disarmAppendMarker()
+    refreshListings() // as a Spark write would: cached reads see the new files
     fresh.size.toLong
     }
   }
@@ -763,13 +881,17 @@ class EventLogStore(spark: SparkSession, path: String, requestedBuckets: Int = 0
     * to a scavenged log is still correct). */
   def scavenge(asOf: Column = current_timestamp()): Unit = {
     if (!exists) return
-    scavengeIncremental(asOf)
-    val tmpStats = s"$path/stats_scavenged"
-    statsLatest().coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmpStats)
-    moveAtomic(statsDir, s"$path/stats_old")
-    moveAtomic(tmpStats, statsDir)
-    deleteRecursively(new java.io.File(s"$path/stats_old"))
-    refreshListings()
+    // under the append lock: an append's stats delta landing between the
+    // compaction's read and its swap would be deleted with the old table
+    EventLogStore.appendLockFor(path).synchronized {
+      scavengeIncremental(asOf)
+      val tmpStats = s"$path/stats_scavenged"
+      statsLatest().coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmpStats)
+      moveAtomic(statsDir, s"$path/stats_old")
+      moveAtomic(tmpStats, statsDir)
+      deleteRecursively(new java.io.File(s"$path/stats_old"))
+      refreshListings()
+    }
   }
 
   /** Spark caches file listings per path; directories swapped in behind a
@@ -802,6 +924,10 @@ class EventLogStore(spark: SparkSession, path: String, requestedBuckets: Int = 0
     * its file source tracks files by name, and a rewrite writes new ones. */
   def scavengeIncremental(asOf: Column = current_timestamp()): Seq[String] = {
     if (!exists) return Seq.empty
+    // under the append lock, like every partition rewrite: a file an append
+    // renames into a partition between the rewrite's read and its swap
+    // would be moved aside and deleted with the old files
+    EventLogStore.appendLockFor(path).synchronized {
     import graft.operators.Retention
     val prefix = EventEnvelope.MetastreamPrefix
     val idx = streamIndex()
@@ -850,6 +976,7 @@ class EventLogStore(spark: SparkSession, path: String, requestedBuckets: Int = 0
       }
       affected.map(_._1)
     } finally shipped.destroy()
+    }
   }
 
   /** Compact small files (§2.7 maintenance): every `append` commits at
@@ -869,6 +996,8 @@ class EventLogStore(spark: SparkSession, path: String, requestedBuckets: Int = 0
   def compact(maxFilesPerPartition: Int = 8,
       targetFileBytes: Long = EventLogStore.TargetFileBytes): Seq[String] = {
     if (!exists) return Seq.empty
+    // under the append lock (see scavengeIncremental)
+    EventLogStore.appendLockFor(path).synchronized {
     val root = Paths.get(logDir)
     val partitions = scala.collection.mutable.ArrayBuffer.empty[(String, Seq[java.io.File])]
     def walk(dir: java.io.File): Unit = {
@@ -883,6 +1012,7 @@ class EventLogStore(spark: SparkSession, path: String, requestedBuckets: Int = 0
         targetFileBytes)
     }
     affected.map(_._1)
+    }
   }
 
   /** The parquet data files directly in a directory. */

@@ -342,6 +342,167 @@ class EventLogStoreSpec extends SparkTestBase {
       .collect().map(_.getLong(0)).sorted.toSeq
     assert(positions == Seq(0L, 1L, 2L, 3L, 4L), s"positions=$positions")
     assert(reopened.streamState("b-1") == EventLogStore.StreamOk(0L))
+
+    // the same crash in the driver-side writer: the log file renamed into
+    // place, the stats delta written but never renamed into stats/
+    reopened.failPoint = step => if (step == "stats.rename") throw new RuntimeException("crash")
+    intercept[RuntimeException](reopened.append(Seq(pe("d-1", "e6"), pe("a-1", "e7")))) // 5, 6
+    assert(Files.exists(java.nio.file.Paths.get(s"$dir/append_pending")))
+    val again = new EventLogStore(spark, dir)
+    assert(Option(new java.io.File(s"$dir/append_tmp").list()).forall(_.isEmpty))
+    assert(again.streamState("d-1") == EventLogStore.StreamOk(0L))
+    assert(again.streamState("a-1") == EventLogStore.StreamOk(3L))
+    again.append(Seq(pe("c-1", "e8")))
+    assert(again.read().select("log_position").collect().map(_.getLong(0)).sorted.toSeq ==
+      (0L to 7L))
+  }
+
+  test("append crash before the log file's rename: nothing visible, no temp file, " +
+    "no position reused") {
+    val dir = Files.createTempDirectory("graftcrashtmp").toString
+    val tmpFiles = () => Option(new java.io.File(s"$dir/append_tmp").list()).toSeq.flatten
+    val crash: String => Unit = step =>
+      if (step == "log.rename") throw new RuntimeException("crash")
+    val store = new EventLogStore(spark, dir, requestedBuckets = 4)
+    store.failPoint = crash
+    intercept[RuntimeException](store.append(Seq(pe("a-1", "e1"), pe("b-1", "e2"))))
+    assert(tmpFiles().exists(_.endsWith(".parquet")), "the crash left its temp file")
+    val reopened = new EventLogStore(spark, dir) // recovery runs here
+    assert(reopened.read().count() == 0)
+    assert(tmpFiles().isEmpty)
+    assert(reopened.streamState("a-1") == EventLogStore.NoStream)
+    // the crashed batch was never acknowledged: its ids append normally
+    assert(reopened.append(Seq(pe("a-1", "e1"))) == 1L) // position 0
+    reopened.failPoint = crash
+    intercept[RuntimeException](reopened.append(Seq(pe("a-1", "e3"), pe("b-1", "e4"))))
+    val again = new EventLogStore(spark, dir)
+    assert(tmpFiles().isEmpty)
+    assert(again.append(Seq(pe("b-1", "e5"))) == 1L)
+    val rows = again.read().orderBy("log_position")
+      .select("event_id", "log_position", "event_number").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
+    assert(rows == Seq(("e1", 0L, 0L), ("e5", 1L, 0L)))
+    assert(again.streamState("a-1") == EventLogStore.StreamOk(0L))
+    assert(again.streamState("b-1") == EventLogStore.StreamOk(0L))
+  }
+
+  test("a driver-written append equals a Spark write of the same rows") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.types.StructType
+    val dir = Files.createTempDirectory("graftdiff").toString
+    val store = new EventLogStore(spark, dir, requestedBuckets = 4)
+    // two dates, several buckets, a null event type, a non-ASCII stream id
+    val events = (0 until 12).map(i => PendingEvent(
+      if (i % 6 == 5) "流-1" else s"s-${i % 4}", s"e$i", if (i == 3) null else "E",
+      s"""{"i":$i}""", correlation_id = if (i % 2 == 0) "c" else null,
+      timestamp = ts(if (i < 6) "2024-06-01 23:30:00" else "2024-06-02 00:30:00")))
+    assert(store.append(events) == 12L)
+
+    // the same rows through a one-task Spark write, partitioned by the
+    // write path's expressions
+    val schema = StructType(graft.model.EventEnvelope.schema.map(_.copy(nullable = true)))
+    val written = store.read().orderBy("log_position").select(schema.fieldNames.map(col): _*)
+    val sparkDir = Files.createTempDirectory("graftdiffspark").toString
+    spark.createDataFrame(written.collect().toSeq.asJava, schema)
+      .withColumn("p_date", to_date(col("timestamp")))
+      .withColumn("p_bucket", pmod(xxhash64(col("stream_id")), lit(4L)).cast("int"))
+      .coalesce(1)
+      .sortWithinPartitions("p_date", "p_bucket", "stream_id", "event_number")
+      .write.options(Seq("stream_id", "event_id").flatMap(c => Seq(
+        s"parquet.bloom.filter.enabled#$c" -> "true",
+        s"parquet.bloom.filter.expected.ndv#$c" -> "12")).toMap)
+      .partitionBy("p_date", "p_bucket").parquet(s"$sparkDir/log")
+
+    def filesByDir(root: String): Map[String, java.io.File] = {
+      val base = java.nio.file.Paths.get(root, "log")
+      Files.walk(base).toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path].toFile)
+        .filter(f => f.isFile && f.getName.endsWith(".parquet"))
+        .groupBy(f => base.relativize(f.getParentFile.toPath).toString)
+        .map { case (d, fs) => assert(fs.size == 1, s"$d holds ${fs.size} files"); d -> fs.head }
+    }
+    val mine = filesByDir(dir)
+    val theirs = filesByDir(sparkDir)
+    assert(mine.keySet == theirs.keySet)
+    assert(mine.size > 2)
+    // each rename moved the file's checksum sidecar and left no temp file
+    assert(mine.values.forall(f => new java.io.File(f.getParentFile, s".${f.getName}.crc").isFile))
+    assert(Option(new java.io.File(s"$dir/append_tmp").list()).forall(_.isEmpty))
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
+      df.orderBy("log_position").collect().map(_.toSeq).toSeq
+    assert(rows(store.read()) == rows(new EventLogStore(spark, sparkDir, 4).read()))
+    val conf = spark.sparkContext.hadoopConfiguration
+    def footer(f: java.io.File) = {
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(f.getAbsolutePath), conf))
+      try reader.getFooter finally reader.close()
+    }
+    mine.keys.foreach { d =>
+      val (a, b) = (footer(mine(d)), footer(theirs(d)))
+      assert(a.getFileMetaData.getSchema == b.getFileMetaData.getSchema, d)
+      val rowMeta = "org.apache.spark.sql.parquet.row.metadata"
+      assert(a.getFileMetaData.getKeyValueMetaData.get(rowMeta) != null, d)
+      assert(a.getFileMetaData.getKeyValueMetaData == b.getFileMetaData.getKeyValueMetaData, d)
+      def chunks(m: org.apache.parquet.hadoop.metadata.ParquetMetadata) =
+        m.getBlocks.asScala.flatMap(_.getColumns.asScala).map(c => c.getPath.toDotString -> c).toMap
+      val (ca, cb) = (chunks(a), chunks(b))
+      cb.foreach { case (c, chunk) =>
+        assert(ca(c).getCodec == chunk.getCodec, s"$d $c codec")
+        if (chunk.getBloomFilterOffset > 0)
+          assert(ca(c).getBloomFilterOffset > 0, s"$d $c: the Spark file has a bloom filter")
+      }
+      // same rows in the same order in each file
+      def fileRows(f: java.io.File) = spark.read.parquet(f.getAbsolutePath).collect().toSeq
+      assert(fileRows(mine(d)) == fileRows(theirs(d)), d)
+    }
+
+    // a checkpointed subscription delivers the driver-written rows once
+    val ck = Files.createTempDirectory("graftdiffck").toString
+    val out = Files.createTempDirectory("graftdiffout").toString + "/out"
+    def drain(): Unit = graft.streaming.Subscriptions.subscribeAll(spark, s"$dir/log")
+      .writeStream.format("parquet").option("path", out).option("checkpointLocation", ck)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+      .awaitTermination(60000): Unit
+    drain()
+    store.append(Seq(pe("s-0", "e12"), pe("s-9", "e13")))
+    drain()
+    drain()
+    val delivered = spark.read.parquet(out).select("event_id").collect().map(_.getString(0)).toSeq
+    assert(delivered.sorted == (0 until 14).map(i => s"e$i").sorted)
+  }
+
+  test("compaction under concurrent appends keeps every acknowledged append") {
+    val dir = Files.createTempDirectory("graftrace").toString
+    val store = new EventLogStore(spark, dir)
+    (0 until 12).foreach(i => store.append(Seq(pe("s-1", s"a$i"))))
+    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val acked = new java.util.concurrent.atomic.AtomicLong(0L)
+    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    val writer = new Thread(() =>
+      try while (!stop.get) {
+        if (store.append(Seq(pe("s-2", s"w${acked.get}"))) == 1L) acked.incrementAndGet()
+        Thread.sleep(1) // the append lock is not fair: let the main thread in
+      } catch { case t: Throwable => failure.set(t) })
+    writer.start()
+    try (0 until 6).foreach { r =>
+      (0 until 10).foreach(i => store.append(Seq(pe("s-1", s"r$r-$i"))))
+      store.compact(maxFilesPerPartition = 8)
+    } finally { stop.set(true); writer.join(120000) }
+    assert(failure.get == null, s"the writer thread failed: ${failure.get}")
+    val n = acked.get
+    assert(n > 0)
+    def numbers(s: EventLogStore, stream: String): Seq[Long] =
+      s.read().where(col("stream_id") === stream).select("event_number")
+        .collect().map(_.getLong(0)).sorted.toSeq
+    val reopened = new EventLogStore(spark, dir)
+    Seq(store, reopened).foreach { s =>
+      assert(numbers(s, "s-2") == (0L until n), "an acknowledged append is missing")
+      assert(numbers(s, "s-1") == (0L until 72L))
+      assert(s.streamState("s-2") == EventLogStore.StreamOk(n - 1))
+      assert(s.streamState("s-1") == EventLogStore.StreamOk(71L))
+    }
+    assert(store.read().select("log_position").collect().map(_.getLong(0)).sorted.toSeq ==
+      (0L until 72L + n))
   }
 
   test("$tmp temp streams: readable until scavenge, then physically removed") {

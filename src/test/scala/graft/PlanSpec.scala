@@ -158,7 +158,12 @@ class PlanSpec extends SparkTestBase {
   }
 
   test("append idempotency probe is a distributed semi-join, ids broadcast") {
-    val df = store.duplicateIdProbe(Seq("e1", "e2", "zz"), Seq("acct-1", "acct-2"))
+    val (ids, streams) = (Seq("e1", "e2", "zz"), Seq("acct-1", "acct-2"))
+    // the probe runs over the files the driver's row-group filter keeps
+    val files = store.maybeDuplicateFiles(ids, streams)
+    assert(files.nonEmpty)
+    val df = store.duplicateIdProbe(ids, streams, files)
+    assert(df.collect().map(_.getString(0)).toSet == Set("e1", "e2"))
     val plan = executedPlan(df)
     // the probe's shape: log-side scan semi-joined against the broadcast
     // batch ids — the driver only ever receives found duplicates, never the

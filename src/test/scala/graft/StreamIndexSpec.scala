@@ -42,6 +42,21 @@ class StreamIndexSpec extends SparkTestBase {
         if (tb.exists(_ > last)) EventLogStore.NoStream else EventLogStore.StreamOk(last)
     }
 
+  /** The Spark jobs `f` launches. */
+  private def jobsOf(f: => Any): Int = {
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    org.apache.spark.graft.ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      f
+      org.apache.spark.graft.ListenerBusDrain(spark.sparkContext)
+      jobs.get
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   private def sortedRows(df: DataFrame): Seq[Seq[Any]] =
     df.collect().map(_.toSeq).toSeq.sortBy(r => r(df.columns.indexOf("event_number")).asInstanceOf[Long])
 
@@ -205,28 +220,52 @@ class StreamIndexSpec extends SparkTestBase {
     store.append((0 until 4).map(i => pe(s"s-${i % 2}", s"e$i")))
     store.setMetadata("s-1", maxCount = Some(1L))
     assert(store.streamState("s-0") == EventLogStore.StreamOk(1L)) // index loaded
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
-    }
-    def jobsOf(f: => Any): Int = {
-      org.apache.spark.graft.ListenerBusDrain(spark.sparkContext)
-      jobs.set(0)
-      f
-      org.apache.spark.graft.ListenerBusDrain(spark.sparkContext)
-      jobs.get
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      assert(jobsOf(store.streamState("s-0")) == 0)
-      assert(jobsOf(store.bucketFor("s-0")) == 0)
-      assert(jobsOf(store.readStreamEvents("s-0").collect()) == 1)
-      val appendJobs = jobsOf(store.append(Seq(pe("s-0", "e9")), Map("s-0" -> 1L)))
-      assert(appendJobs <= 5, s"append launched $appendJobs jobs")
-      // the append folded its own delta: no job to see it
-      assert(jobsOf(assert(store.streamState("s-0") == EventLogStore.StreamOk(2L))) == 0)
-      assert(jobsOf(store.readStreamEvents("s-0").collect()) == 1)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobsOf(store.streamState("s-0")) == 0)
+    assert(jobsOf(store.bucketFor("s-0")) == 0)
+    assert(jobsOf(store.readStreamEvents("s-0").collect()) == 1)
+    // fresh ids: the row-group filter rules out every file on the driver,
+    // and the batch and its stats delta are written on the driver
+    val appendJobs = jobsOf(store.append(Seq(pe("s-0", "e9")), Map("s-0" -> 1L)))
+    assert(appendJobs == 0, s"append launched $appendJobs jobs")
+    // the append folded its own delta: no job to see it
+    assert(jobsOf(assert(store.streamState("s-0") == EventLogStore.StreamOk(2L))) == 0)
+    assert(jobsOf(store.readStreamEvents("s-0").collect()) == 1)
+    // a retried batch: only the file holding the id goes to the exact
+    // probe, which builds the broadcast of the batch ids and scans that
+    // file, two jobs
+    val retryJobs = jobsOf(assert(store.append(Seq(pe("s-0", "e9")), Map("s-0" -> 1L)) == 0L))
+    assert(retryJobs <= 2, s"retried append launched $retryJobs jobs")
+  }
+
+  test("the idempotency check reads a real event_id bloom filter: a retried id is found, " +
+    "a fresh one appends without a job") {
+    val d = dir("graftbloom")
+    val store = new EventLogStore(spark, d)
+    // 40k distinct UUIDs in one stream land in one bulk file whose event_id
+    // chunk falls back from dictionary to plain encoding, so it carries a
+    // bloom filter and no dictionary the row-group filter could read
+    val rnd = new scala.util.Random(7)
+    val ids = Vector.fill(40000)(new java.util.UUID(rnd.nextLong(), rnd.nextLong()).toString)
+    assert(store.appendBulk(pending(ids.map("big-1" -> _))) == 40000L)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val chunks = Files.walk(Paths.get(d, "log")).toArray.toSeq.map(_.asInstanceOf[Path])
+      .filter(_.toString.endsWith(".parquet")).flatMap { f =>
+        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            new org.apache.hadoop.fs.Path(f.toString), conf))
+        import scala.jdk.CollectionConverters._
+        try reader.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala)
+          .filter(_.getPath.toDotString == "event_id").toSeq
+        finally reader.close()
+      }
+    assert(chunks.exists(c => c.getBloomFilterOffset > 0 &&
+      c.getEncodings.contains(org.apache.parquet.column.Encoding.PLAIN)),
+      "no plain-encoded event_id chunk with a bloom filter")
+    assert(store.streamState("big-1") == EventLogStore.StreamOk(39999L)) // index loaded
+    assert(jobsOf(assert(store.append(Seq(pe("big-1", ids(12345)))) == 0L)) <= 2)
+    assert(jobsOf(assert(store.append(Seq(pe("big-1", "fresh-1"))) == 1L)) == 0)
+    assert(store.streamState("big-1") == EventLogStore.StreamOk(40000L))
+    assert(store.read().where(col("event_id") === ids(12345)).count() == 1)
   }
 
   test("scavengeIncremental reads only the candidates' and their metastreams' buckets, " +
