@@ -2,6 +2,7 @@ package graft.projections
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import scala.collection.mutable.ArrayBuffer
 
 /** Input event type for projection folds: the envelope plus the testdata's
@@ -257,8 +258,9 @@ final class FoldBuilder[S] private[projections] (
   /** P5 $created: fires once per partition, on its first event, BEFORE that
     * event's own handler (JintProjectionStateHandler.cs:677-684 registers it
     * alongside the typed handlers; the reference delivers it when the
-    * source stream is first seen). Resumed folds (statesFrom) do not
-    * re-fire it for checkpointed partitions. */
+    * source stream is first seen). Resumed folds (statesFrom, and the
+    * streaming folds across micro-batches) do not re-fire it for
+    * partitions that already have state (see [[KeyFold]]). */
   def whenCreated(f: (S, LogEvent) => S): FoldBuilder[S] = copyWith(created = Some(f))
 
   /** P5 + P13: handler that can also emit events. */
@@ -287,41 +289,35 @@ final class FoldBuilder[S] private[projections] (
       }
   }
 
-  /** Run the fold; produce one row per partition key with its final state
-    * (P19 query mode / P8 outputState). */
-  def states(log: DataFrame)(implicit enc: Encoder[(String, S)]): Dataset[(String, S)] = {
-    val spark = log.sparkSession
-    import spark.implicits._
-    val events = Projections.toLogEvents(log.where(sourceFilter), withMeta)
+  /** The per-key fold over this builder's handlers, built without
+    * capturing `this`. */
+  private def kernel: KeyFold[S] = new KeyFold[S](initFn, createdHandler, mkStep)
+
+  /** The selected events, keyed by partition; keyless events are skipped. */
+  private def keyed(log: DataFrame): Dataset[(String, LogEvent)] = {
+    import log.sparkSession.implicits._
     val pf = partitionFn
-    val initF = initFn
-    val step = mkStep
-    val stepF = (s: S, e: LogEvent) => step(s, e, new Emitter)
-    val createdF = createdHandler
-    val keyed: Dataset[(String, LogEvent)] =
-      events.flatMap(e => pf(e).map(k => (k, e)))
-    keyed
+    Projections.toLogEvents(log.where(sourceFilter), withMeta)
+      .flatMap(e => pf(e).map(k => (k, e)))
+  }
+
+  /** The batch shape every batch fold shares: shuffle by key, sort each
+    * Spark partition by (key, log_position), then one streaming pass that
+    * hands `f` the partition's key groups in order. */
+  private def foldByKey[O: Encoder](rows: Dataset[(String, LogEvent)])(
+      f: Iterator[(String, Iterator[LogEvent])] => Iterator[O]): Dataset[O] =
+    rows
       .repartition(col("_1"))
       .sortWithinPartitions(col("_1"), col("_2.log_position"))
       .mapPartitions { it =>
-        new Iterator[(String, S)] {
-          private var nextKV: Option[(String, LogEvent)] =
-            if (it.hasNext) Some(it.next()) else None
-          def hasNext: Boolean = nextKV.isDefined
-          def next(): (String, S) = {
-            val key = nextKV.get._1
-            var state = initF()
-            var first = true
-            while (nextKV.isDefined && nextKV.get._1 == key) {
-              val e = nextKV.get._2
-              if (first) { createdF.foreach(f => state = f(state, e)); first = false }
-              state = stepF(state, e)
-              nextKV = if (it.hasNext) Some(it.next()) else None
-            }
-            (key, state)
-          }
-        }
+        f(KeyFold.groupAdjacent(it)(_._1).map { case (k, g) => (k, g.map(_._2)) })
       }
+
+  /** Run the fold; produce one row per partition key with its final state
+    * (P19 query mode / P8 outputState). */
+  def states(log: DataFrame)(implicit enc: Encoder[(String, S)]): Dataset[(String, S)] = {
+    val fold = kernel
+    foldByKey(keyed(log))(_.map { case (k, es) => (k, fold.run(k, None, es).state) })
   }
 
   /** Opt-in two-level fold for SKEWED partitions. The serial [[states]]
@@ -359,11 +355,7 @@ final class FoldBuilder[S] private[projections] (
     require(blockSize > 0, s"statesMonoid: blockSize must be positive, got $blockSize")
     val spark = log.sparkSession
     import spark.implicits._
-    val events = Projections.toLogEvents(log.where(sourceFilter), withMeta)
-    val pf = partitionFn
-    val initF = initFn
-    val step = mkStep
-    val stepF = (s: S, e: LogEvent) => step(s, e, new Emitter)
+    val fold = kernel
     val comb = combine
     val bs = blockSize
     implicit val encKBE: Encoder[(String, Long, LogEvent)] =
@@ -373,24 +365,13 @@ final class FoldBuilder[S] private[projections] (
       org.apache.spark.sql.Encoders.tuple(org.apache.spark.sql.Encoders.STRING,
         org.apache.spark.sql.Encoders.scalaLong, encS)
     // level 1: fold each contiguous (key, log-range block) from init
-    val partials: Dataset[(String, Long, S)] = events
-      .flatMap(e => pf(e).map(k => (k, e.log_position / bs, e)))
+    val partials: Dataset[(String, Long, S)] = keyed(log)
+      .map { case (k, e) => (k, e.log_position / bs, e) }
       .repartition(col("_1"), col("_2"))
       .sortWithinPartitions(col("_1"), col("_2"), col("_3.log_position"))
       .mapPartitions { it =>
-        new Iterator[(String, Long, S)] {
-          private var nextKV: Option[(String, Long, LogEvent)] =
-            if (it.hasNext) Some(it.next()) else None
-          def hasNext: Boolean = nextKV.isDefined
-          def next(): (String, Long, S) = {
-            val (key, block, _) = nextKV.get
-            var state = initF()
-            while (nextKV.isDefined && nextKV.get._1 == key && nextKV.get._2 == block) {
-              state = stepF(state, nextKV.get._3)
-              nextKV = if (it.hasNext) Some(it.next()) else None
-            }
-            (key, block, state)
-          }
+        KeyFold.groupAdjacent(it)(r => (r._1, r._2)).map { case ((k, block), g) =>
+          (k, block, fold.run(k, None, g.map(_._3)).state)
         }
       }
     // level 2: merge each key's partials in block (= log) order
@@ -398,21 +379,7 @@ final class FoldBuilder[S] private[projections] (
       .repartition(col("_1"))
       .sortWithinPartitions(col("_1"), col("_2"))
       .mapPartitions { it =>
-        new Iterator[(String, S)] {
-          private var nextKV: Option[(String, Long, S)] =
-            if (it.hasNext) Some(it.next()) else None
-          def hasNext: Boolean = nextKV.isDefined
-          def next(): (String, S) = {
-            val key = nextKV.get._1
-            var state = nextKV.get._3
-            nextKV = if (it.hasNext) Some(it.next()) else None
-            while (nextKV.isDefined && nextKV.get._1 == key) {
-              state = comb(state, nextKV.get._3)
-              nextKV = if (it.hasNext) Some(it.next()) else None
-            }
-            (key, state)
-          }
-        }
+        KeyFold.groupAdjacent(it)(_._1).map { case (k, g) => (k, g.map(_._3).reduce(comb)) }
       }
   }
 
@@ -432,48 +399,22 @@ final class FoldBuilder[S] private[projections] (
       implicit enc: Encoder[(String, S)]): Dataset[(String, S)] = {
     val spark = log.sparkSession
     import spark.implicits._
-    val events = Projections.toLogEvents(
-      log.where(sourceFilter && col("log_position") > fromPosExclusive), withMeta)
-    val pf = partitionFn
-    val initF = initFn
-    val step = mkStep
+    val fold = kernel
     val ser = serialize
     val deser = deserialize
-    val createdF = createdHandler
     val stateType = StateEventType // local copy: the closure must not capture `this`
-    val keyedEvents: Dataset[(String, LogEvent)] =
-      events.flatMap(e => pf(e).map(k => (k, e)))
     val stateRows: Dataset[(String, LogEvent)] = priorStates.map { case (k, s) =>
       (k, LogEvent(k, -1L, stateType, Long.MinValue,
         new java.sql.Timestamp(0L), null, ser(s), 0.0))
     }
-    keyedEvents.unionAll(stateRows)
-      .repartition(col("_1"))
-      .sortWithinPartitions(col("_1"), col("_2.log_position"))
-      .mapPartitions { it =>
-        new Iterator[(String, S)] {
-          private var nextKV: Option[(String, LogEvent)] =
-            if (it.hasNext) Some(it.next()) else None
-          def hasNext: Boolean = nextKV.isDefined
-          def next(): (String, S) = {
-            val key = nextKV.get._1
-            var state = initF()
-            var first = true
-            while (nextKV.isDefined && nextKV.get._1 == key) {
-              val e = nextKV.get._2
-              if (e.event_type == stateType) {
-                state = deser(e.data)
-                first = false // checkpointed key: $created already fired
-              } else {
-                if (first) { createdF.foreach(f => state = f(state, e)); first = false }
-                state = step(state, e, new Emitter)
-              }
-              nextKV = if (it.hasNext) Some(it.next()) else None
-            }
-            (key, state)
-          }
-        }
-      }
+    foldByKey(keyed(log.where(col("log_position") > fromPosExclusive)).unionAll(stateRows))(
+      _.map { case (k, es) =>
+        // a checkpointed key's state row sorts first: it is the prior state
+        val in = es.buffered
+        var prior = Option.empty[S]
+        while (in.hasNext && in.head.event_type == stateType) prior = Some(deser(in.next().data))
+        (k, fold.run(k, prior, in).state)
+      })
   }
 
   private val StateEventType = "$graft-checkpoint-state"
@@ -502,81 +443,66 @@ final class FoldBuilder[S] private[projections] (
   /** Run the fold; produce the emitted-event rows (P13/P14). Replays are
     * idempotent downstream via (stream_id, caused_by_position) keys (P21). */
   def emitted(log: DataFrame)(implicit enc: Encoder[Emitted]): Dataset[Emitted] = {
-    val spark = log.sparkSession
-    import spark.implicits._
-    val events = Projections.toLogEvents(log.where(sourceFilter), withMeta)
-    val pf = partitionFn
-    val initF = initFn
-    val stepF = mkStep
-    val createdF = createdHandler
-    val keyed: Dataset[(String, LogEvent)] =
-      events.flatMap(e => pf(e).map(k => (k, e)))
-    keyed
-      .repartition(col("_1"))
-      .sortWithinPartitions(col("_1"), col("_2.log_position"))
-      .mapPartitions { it =>
-        var curKey: String = null
-        var state: S = null.asInstanceOf[S]
-        it.flatMap { case (k, e) =>
-          if (k != curKey) {
-            curKey = k; state = initF()
-            createdF.foreach(f => state = f(state, e))
-          }
-          val em = new Emitter
-          state = stepF(state, e, em)
-          em.buf.iterator.zipWithIndex.map { case ((stream, tpe, body, md), i) =>
-            Emitted(stream, tpe, body, k, e.log_position, i, md)
-          }
-        }
-      }
+    val fold = kernel
+    foldByKey(keyed(log))(_.flatMap { case (k, es) => fold.run(k, None, es) })
   }
 
+  /** P20 continuous mode: the fold as a Structured Streaming query that
+    * outputs one (partition, state) row per key touched in a micro-batch
+    * (outputState after each batch). State lives in the state store in
+    * `codec`'s storage form, survives restarts via the checkpoint dir,
+    * and the rows carry that form: stream == batch [[states]] over the
+    * same prefix of the log, `$created` included. `outputMode` is Update
+    * for a plain subscription; Append when chained after another stateful
+    * operator (Spark requires all-Append then). */
+  def statesStream[T](events: DataFrame, codec: StateCodec[S, T],
+      outputMode: OutputMode)(implicit encT: Encoder[T],
+      encOut: Encoder[(String, T)]): Dataset[(String, T)] =
+    foldStream(events, codec, outputMode)((k, t, _) => Iterator.single((k, t)))
+
+  /** [[statesStream]] in Update mode, with the state stored as is. */
+  def statesStream(events: DataFrame)(implicit encS: Encoder[S],
+      encOut: Encoder[(String, S)]): Dataset[(String, S)] =
+    statesStream(events, StateCodec.identity[S], OutputMode.Update)
+
   /** P13/P14 continuous mode: the fold as a Structured Streaming query
-    * that outputs the EMITTED events (not states). Per-partition fold
-    * state lives in the state store and survives restarts via the
-    * checkpoint dir; each micro-batch steps the new events in
-    * log_position order and appends their emissions (OutputMode.Append —
-    * emitted events are immutable facts). Emitted rows are identical to
-    * the batch [[emitted]] rows for the same events, so
-    * [[EmittedSink.appendIdempotent]]'s deterministic ids dedup replays
-    * across restarts and foreachBatch retries — the reference's
-    * continuous-projection EmittedStream semantics
-    * (Processing/Emitting/EmittedStream.cs). */
+    * that outputs the EMITTED events (not states), in OutputMode.Append —
+    * emitted events are immutable facts. State is kept as in
+    * [[statesStream]]. Emitted rows are identical to the batch [[emitted]]
+    * rows for the same events, so [[EmittedSink.appendIdempotent]]'s
+    * deterministic ids dedup replays across restarts and foreachBatch
+    * retries — the reference's continuous-projection EmittedStream
+    * semantics (Processing/Emitting/EmittedStream.cs). */
+  def emittedStream[T](events: DataFrame, codec: StateCodec[S, T])(implicit
+      encT: Encoder[T], encOut: Encoder[Emitted]): Dataset[Emitted] =
+    foldStream(events, codec, OutputMode.Append)((_, _, emitted) => emitted.iterator)
+
+  /** [[emittedStream]] with the state stored as is. */
   def emittedStream(events: DataFrame)(implicit encS: Encoder[S],
-      encOut: Encoder[Emitted],
-      encKV: Encoder[(String, LogEvent)]): Dataset[Emitted] = {
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    val ds = Projections.toLogEvents(events.where(sourceFilter), withMeta)
-    val pf = partitionFn
-    val initF = initFn
-    val stepF = mkStep
-    val createdF = createdHandler
-    ds.flatMap(e => pf(e).map(k => (k, e)))(encKV)
+      encOut: Encoder[Emitted]): Dataset[Emitted] =
+    emittedStream(events, StateCodec.identity[S])
+
+  /** The one flatMapGroupsWithState behind [[statesStream]] and
+    * [[emittedStream]]: each micro-batch folds a key's new events in
+    * log_position order on top of its decoded state, stores the encoded
+    * final state, and hands `out` the key, that encoded state and the
+    * key's emitted rows. */
+  private def foldStream[T, O](events: DataFrame, codec: StateCodec[S, T],
+      outputMode: OutputMode)(out: (String, T, Seq[Emitted]) => Iterator[O])(
+      implicit encT: Encoder[T], encOut: Encoder[O]): Dataset[O] = {
+    val fold = kernel
+    val encode = codec.encode
+    val decode = codec.decode
+    keyed(events)
       .groupByKey(_._1)(org.apache.spark.sql.Encoders.STRING)
-      .flatMapGroupsWithState[S, Emitted](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: String, rows: Iterator[(String, LogEvent)],
-            state: org.apache.spark.sql.streaming.GroupState[S]) =>
-          val sorted = rows.map(_._2).toSeq.sortBy(_.log_position)
-          val out = ArrayBuffer.empty[Emitted]
-          // $created fires only on the key's very first event ever — a
-          // checkpointed key (state exists) already had it
-          var first = !state.exists
-          var s = state.getOption.getOrElse(null.asInstanceOf[S])
-          sorted.foreach { e =>
-            if (first) {
-              s = initF()
-              createdF.foreach(f => s = f(s, e))
-              first = false
-            }
-            val em = new Emitter
-            s = stepF(s, e, em)
-            em.buf.iterator.zipWithIndex.foreach { case ((stream, tpe, body, md), i) =>
-              out += Emitted(stream, tpe, body, key, e.log_position, i, md)
-            }
-          }
-          if (sorted.nonEmpty) state.update(s)
-          out.iterator
+      .flatMapGroupsWithState[T, O](outputMode, GroupStateTimeout.NoTimeout) {
+        (key: String, rows: Iterator[(String, LogEvent)], state: GroupState[T]) =>
+          val sorted = rows.map(_._2).toArray.sortBy(_.log_position)
+          val run = fold.run(key, state.getOption.map(decode), sorted.iterator)
+          val emitted = run.toVector
+          val t = encode(run.state)
+          state.update(t)
+          out(key, t, emitted)
       }
   }
 }

@@ -109,10 +109,8 @@ private[js] object JsColumnCompiler {
       requiredCols: Set[String],
       usesTimestamp: Boolean,
       /** The definition's source-selector predicate. NOT applied by
-        * `build`: the batch states()/emitted() paths filter with it
-        * (mirroring the Scala DSL's sourceFilter), while statesStream
-        * mirrors the interpreter streaming path, which folds the caller's
-        * stream as given (the subscription supplies the slice). */
+        * `build`: every batch and streaming path filters with it before
+        * the build, mirroring the Scala DSL's sourceFilter. */
       selector: Column,
       build: DataFrame => DataFrame,
       /** True when the build adds pre-state running-sum WINDOW columns

@@ -1,9 +1,11 @@
 package graft.projections.js
 
 import scala.collection.mutable
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions.{col, udf}
-import graft.projections.{Emitted, Emitter, FoldBuilder, LogEvent, PartitionedBuilder, ProjectionBuilder0, Projections}
+import org.apache.spark.sql.streaming.OutputMode
+import graft.projections.{BiStateFold, Emitted, Emitter, FoldBuilder, LogEvent, PartitionedBuilder,
+  ProjectionBuilder0, Projections, StateCodec}
 
 /** JS projection definitions — the reference's actual query language
   * (JintProjectionStateHandler.cs:55-75; grammar registered at :449-466:
@@ -119,12 +121,48 @@ final class JsProjection(val source: String) extends Serializable {
     else base
   }
 
+  /** The exact interleaved bi-state fold of a `$initShared` definition
+    * (see PartitionedBuilder.initBi). */
+  private def biFold: BiStateFold[JsVal] = {
+    val src = source
+    partBuilder.initBi[JsVal](
+      CompiledJsProjection.get(src).initState(),
+      CompiledJsProjection.get(src).initSharedState())(
+      (s, sh, e) => CompiledJsProjection.get(src).biStep(s, sh, e))
+  }
+
+  /** Final states as (partition, state JSON), transformBy/filterBy applied
+    * (JintProjectionStateHandler TransformStateToResult); a bi-state
+    * fold's "$shared" row passes through untransformed, like the
+    * reference's separate shared-state slot. */
+  private def renderStates(folded: Dataset[(String, JsVal)]): Dataset[(String, String)] = {
+    import folded.sparkSession.implicits._
+    val src = source
+    folded.mapPartitions { it =>
+      val c = CompiledJsProjection.get(src)
+      it.flatMap { case (k, s) =>
+        val out = if (k == BiStateFold.SharedKey) Some(s) else c.applyTransforms(s)
+        out.map(v => (k, JsProjection.JsonState.encode(v)))
+      }
+    }
+  }
+
   /** The definition's options({...}) that map outside the fold. */
   def options: JsProjectionOptions =
     JsProjectionOptions(spec.includeLinks, spec.reorderEvents, spec.processingLagMs)
 
   private def jsValEncoder: Encoder[(String, JsVal)] =
     Encoders.tuple(Encoders.STRING, Encoders.javaSerialization(classOf[JsVal]))
+
+  /** `spark.graft.js.columnCompile` (default true): false forces the
+    * interpreter on every path, the reference the fast paths must match. */
+  private def columnCompile(spark: SparkSession): Boolean =
+    spark.conf.getOption("spark.graft.js.columnCompile").forall(_.toBoolean)
+
+  /** `spark.graft.js.streamStepper` (default true): false sends pre-state
+    * streaming definitions to the interpreter state-store fold. */
+  private def streamStepper(spark: SparkSession): Boolean =
+    spark.conf.getOption("spark.graft.js.streamStepper").forall(_.toBoolean)
 
   /** P19 query mode: final state per partition, as (partition, state JSON)
     * — transformBy/filterBy applied (JintProjectionStateHandler
@@ -141,10 +179,6 @@ final class JsProjection(val source: String) extends Serializable {
   def compilesToColumns: Boolean =
     CompiledJsProjection.get(source).fastPlan.isDefined
 
-  /** The Column-compiled states() plan, when the definition is
-    * expressible, the session allows it, and the input log carries the
-    * referenced columns (TimestampType `timestamp` when Date math is
-    * used). Public for plan-shape tests. */
   /** Whether `frame` carries every column a compiled plan requires
     * (optional envelope metas are defaulted by the build) and, when the
     * plan does Date math, a true TimestampType `timestamp`. The single
@@ -160,10 +194,12 @@ final class JsProjection(val source: String) extends Serializable {
           org.apache.spark.sql.types.TimestampType))
   }
 
+  /** The Column-compiled states() plan, when the definition is
+    * expressible, the session allows it, and the input log carries the
+    * referenced columns (TimestampType `timestamp` when Date math is
+    * used). Public for plan-shape tests. */
   def fastStates(log: DataFrame): Option[DataFrame] = {
-    val enabled = log.sparkSession.conf
-      .getOption("spark.graft.js.columnCompile").forall(_.toBoolean)
-    if (!enabled) None
+    if (!columnCompile(log.sparkSession)) None
     else CompiledJsProjection.get(source).fastPlan.flatMap { p =>
       if (columnsCompatible(p, log))
         Some(p.build(prepared(log).where(p.selector)))
@@ -174,30 +210,10 @@ final class JsProjection(val source: String) extends Serializable {
   /** The interpreter execution of states() — the reference semantics the
     * fast path must match (equivalence suite in JsEngineSpec). */
   def statesInterpreted(log: DataFrame): DataFrame = {
-    val spark = log.sparkSession
-    import spark.implicits._
-    val src = source
     val folded =
-      if (spec.isBiState)
-        // exact interleaved bi-state: one ordered pass (see
-        // PartitionedBuilder.initBi); the "$shared" row passes through
-        // untransformed, like the reference's separate shared-state slot
-        partBuilder.initBi[JsVal](
-          CompiledJsProjection.get(src).initState(),
-          CompiledJsProjection.get(src).initSharedState())(
-          (s, sh, e) => CompiledJsProjection.get(src).biStep(s, sh, e))
-          .states(prepared(log))(jsValEncoder)
+      if (spec.isBiState) biFold.states(prepared(log))(jsValEncoder)
       else foldBuilder.states(prepared(log))(jsValEncoder)
-    folded
-      .mapPartitions { it =>
-        val c = CompiledJsProjection.get(src)
-        it.flatMap { case (k, s) =>
-          val out = if (k == graft.projections.BiStateFold.SharedKey) Some(s)
-            else c.applyTransforms(s)
-          out.map(v => (k, JsVal.stringify(v).getOrElse("null")))
-        }
-      }
-      .toDF("partition", "state")
+    renderStates(folded).toDF("partition", "state")
   }
 
   /** P20 batch resume: fold only events past `fromPosExclusive` on top of
@@ -208,82 +224,55 @@ final class JsProjection(val source: String) extends Serializable {
       fromPosExclusive: Long): DataFrame = {
     if (spec.isBiState)
       throw new JsError("statesFrom is not available for bi-state projections")
-    val spark = log.sparkSession
-    import spark.implicits._
-    val src = source
-    val prior = priorStates.map { case (k, json) =>
-      (k, JsVal.parseJson(json)) }(jsValEncoder)
-    foldBuilder.statesFrom(prepared(log), prior, fromPosExclusive,
-      (s: JsVal) => JsVal.stringify(s).getOrElse("null"),
-      (j: String) => JsVal.parseJson(j))(jsValEncoder)
-      .mapPartitions { it =>
-        val c = CompiledJsProjection.get(src)
-        it.flatMap { case (k, s) =>
-          c.applyTransforms(s).map(v => (k, JsVal.stringify(v).getOrElse("null")))
-        }
-      }
+    val json = JsProjection.JsonState
+    val prior = priorStates.map { case (k, j) => (k, json.decode(j)) }(jsValEncoder)
+    renderStates(foldBuilder.statesFrom(prepared(log), prior, fromPosExclusive,
+      json.encode, json.decode)(jsValEncoder))
       .toDF("partition", "state")
   }
 
   /** P20 continuous mode: the fold as a Structured Streaming query — state
     * per partition lives in the state store (JSON between micro-batches,
     * live JS values within one), surviving restarts via the checkpoint
-    * dir. Emits (partition, state JSON) after every update, like
-    * outputState-after-each-batch.
+    * dir. Emits (partition, state JSON) for every key a micro-batch
+    * touches, like outputState-after-each-batch: stream == batch states()
+    * over the same log, `$created` included. Every path applies the
+    * definition's selector, as batch states() does.
     *
-    * Bi-state ($initShared) definitions run through the serial
-    * [[graft.streaming.Subscriptions.biProjectionStream]] — exact
-    * interleaved semantics, one group in the state store, the streaming
-    * twin of the batch exact mode. $deleted handlers fire on
-    * `$streamDeleted` events on both paths (routing lives in
+    * The interpreter path is [[FoldBuilder.statesStream]] over
+    * [[foldBuilder]]. Bi-state ($initShared) definitions run through the
+    * serial [[BiStateFold.statesStream]] — exact interleaved semantics,
+    * one group in the state store, the streaming twin of the batch exact
+    * mode. $deleted handlers fire on `$streamDeleted` events on both
+    * paths (routing lives in
     * [[CompiledJsProjection.step]]/[[CompiledJsProjection.biStep]]). */
   def statesStream(events: DataFrame): Dataset[(String, String)] = {
     val spark = events.sparkSession
     import spark.implicits._
-    val src = source
-    val pf: LogEvent => Option[String] =
-      if (spec.foreachStream) e => Some(e.stream_id)
-      else if (spec.hasPartitionBy) e => CompiledJsProjection.get(src).partitionKey(e)
-      else _ => Some("")
-    // options({reorderEvents: true, processingLag: ms}): buffer arrivals
-    // through the time-lag reorder before the fold, as the reference's
-    // multi-stream reader does ahead of the projection pump
-    val ordered =
-      if (spec.reorderEvents)
-        graft.streaming.Subscriptions.reorderedStreamByTime(
-          events, spec.processingLagMs.getOrElse(500L)).toDF()
-      else events
-    if (spec.isBiState) {
-      if (spec.reorderEvents)
-        throw new JsError(
-          "options(reorderEvents) with $initShared is not supported in " +
-            "streaming: Spark requires chained stateful operators to all be " +
-            "Append, and the bi-state fold emits in Update mode")
-      val folded = graft.streaming.Subscriptions.biProjectionStream[JsVal](
-        ordered, pf,
-        () => CompiledJsProjection.get(src).initState(),
-        () => CompiledJsProjection.get(src).initSharedState(),
-        (s, sh, e) => CompiledJsProjection.get(src).biStep(s, sh, e))(
-        jsValEncoder, implicitly)
-      folded.mapPartitions { it =>
-        val c = CompiledJsProjection.get(src)
-        it.flatMap { case (k, v) =>
-          // shared passes through untransformed, like the batch states()
-          val out = if (k == graft.projections.BiStateFold.SharedKey) Some(v)
-            else c.applyTransforms(v)
-          out.map(x => (k, JsVal.stringify(x).getOrElse("null")))
-        }
-      }
-    } else fastStatesStream(ordered).getOrElse(
-      graft.streaming.Subscriptions.projectionStream[String](
-        ordered, pf,
-        () => JsVal.stringify(CompiledJsProjection.get(src).initState()).getOrElse("{}"),
-        (json: String, e: LogEvent) => CompiledJsProjection.get(src).stepJson(json, e),
+    if (spec.isBiState && spec.reorderEvents)
+      throw new JsError(
+        "options(reorderEvents) with $initShared is not supported in " +
+          "streaming: Spark requires chained stateful operators to all be " +
+          "Append, and the bi-state fold emits in Update mode")
+    val ordered = reordered(events)
+    if (spec.isBiState)
+      renderStates(biFold.statesStream(ordered)(jsValEncoder, implicitly))
+    else fastStatesStream(ordered).getOrElse(
+      foldBuilder.statesStream(ordered, JsProjection.JsonState,
         // chained after the reorder buffer (itself stateful, Append), Spark
         // requires every stateful operator in the query to be Append
-        outputMode = if (spec.reorderEvents)
-          org.apache.spark.sql.streaming.OutputMode.Append
-        else org.apache.spark.sql.streaming.OutputMode.Update))
+        if (spec.reorderEvents) OutputMode.Append else OutputMode.Update))
+  }
+
+  /** options({reorderEvents: true, processingLag: ms}): buffer arrivals
+    * through the time-lag reorder before the fold, as the reference's
+    * multi-stream reader does ahead of the projection pump. */
+  private def reordered(events: DataFrame): DataFrame = {
+    import events.sparkSession.implicits._
+    if (spec.reorderEvents)
+      graft.streaming.Subscriptions.reorderedStreamByTime(
+        events, spec.processingLagMs.getOrElse(500L)).toDF()
+    else events
   }
 
   /** Column-compiled continuous mode: the same Plan that powers the batch
@@ -292,26 +281,24 @@ final class JsProjection(val source: String) extends Serializable {
     * per-key JSON blobs folded by the interpreter, codegen'd end to end.
     * Emits one (partition, state JSON) row per touched key per
     * micro-batch (Update), exactly the flatMapGroupsWithState contract.
-    * Mirrors the interpreter streaming path in NOT applying the
-    * definition's selector — the caller's subscription supplies the
-    * slice. reorderEvents definitions stay interpreted (the reorder
+    * Applies the definition's selector, like the interpreter path.
+    * reorderEvents definitions stay interpreted (the reorder
     * buffer forces all-Append chains; an aggregation after it cannot
     * run in Update mode). */
   def fastStatesStream(events: DataFrame): Option[Dataset[(String, String)]] = {
     val spark = events.sparkSession
     import spark.implicits._
-    val enabled = spark.conf
-      .getOption("spark.graft.js.columnCompile").forall(_.toBoolean)
     // transform chains are a batch states() feature — the interpreter
     // streaming path emits raw fold state, so the fast path must too
-    if (!enabled || spec.reorderEvents || spec.includeLinks ||
+    if (!columnCompile(spark) || spec.reorderEvents || spec.includeLinks ||
       CompiledJsProjection.get(source).transformsList.nonEmpty) None
     else CompiledJsProjection.get(source).fastPlan.flatMap { p =>
       val ok = columnsCompatible(p, events)
       // streaming projections are readers too: redacted events fold with
       // empty data on the compiled paths exactly as the interpreter
-      // fallback does through toLogEvents (PrepareLogRecord.cs:65)
-      val scrubbed = graft.operators.Redaction.scrub(events)
+      // fallback does through toLogEvents (PrepareLogRecord.cs:65); the
+      // selector applies here as the interpreter's sourceFilter does
+      val scrubbed = graft.operators.Redaction.scrub(events).where(p.selector)
       if (!ok) None
       else if (!p.usesPreState)
         Some(p.build(scrubbed)
@@ -326,8 +313,7 @@ final class JsProjection(val source: String) extends Serializable {
         // per event by the same compiled expressions — no interpreter
         // node, no window. spark.graft.js.streamStepper=false forces the
         // interpreter state-store path.
-        p.stepSpec.filter(_ => spark.conf
-            .getOption("spark.graft.js.streamStepper").forall(_.toBoolean))
+        p.stepSpec.filter(_ => streamStepper(spark))
           .map(ss => JsStreamStepper.stream(ss, scrubbed))
     }
   }
@@ -353,9 +339,7 @@ final class JsProjection(val source: String) extends Serializable {
   def fastEmitted(log: DataFrame): Option[Dataset[Emitted]] = {
     val spark = log.sparkSession
     import spark.implicits._
-    val enabled = spark.conf
-      .getOption("spark.graft.js.columnCompile").forall(_.toBoolean)
-    if (!enabled) None
+    if (!columnCompile(spark)) None
     else CompiledJsProjection.get(source).fastEmitPlan.flatMap { p =>
       if (columnsCompatible(p, log))
         Some(p.build(prepared(log).where(p.selector)).as[Emitted])
@@ -382,23 +366,8 @@ final class JsProjection(val source: String) extends Serializable {
           "(link resolution is a batch self-join); resolve links batch-side")
     val spark = events.sparkSession
     import spark.implicits._
-    fastEmittedStream(events).orElse(stepperEmittedStream(events)).getOrElse {
-      val src = source
-      val base = partBuilder
-        .init[String](JsVal.stringify(
-          CompiledJsProjection.get(src).initState()).getOrElse("{}"))
-        .whenAnyEmit((json, e, em) =>
-          CompiledJsProjection.get(src).stepJsonEmit(json, e, em))
-      val fold = if (spec.hasCreated)
-        base.whenCreated((json, e) => CompiledJsProjection.get(src).createdJson(json, e))
-      else base
-      val ordered =
-        if (spec.reorderEvents)
-          graft.streaming.Subscriptions.reorderedStreamByTime(
-            events, spec.processingLagMs.getOrElse(500L)).toDF()
-        else events
-      fold.emittedStream(ordered)
-    }
+    fastEmittedStream(events).orElse(stepperEmittedStream(events)).getOrElse(
+      foldBuilder.emittedStream(reordered(events), JsProjection.JsonState))
   }
 
   /** Column-compiled continuous emit: a definition whose emissions are
@@ -413,9 +382,7 @@ final class JsProjection(val source: String) extends Serializable {
   def fastEmittedStream(events: DataFrame): Option[Dataset[Emitted]] = {
     val spark = events.sparkSession
     import spark.implicits._
-    val enabled = spark.conf
-      .getOption("spark.graft.js.columnCompile").forall(_.toBoolean)
-    if (!enabled || spec.reorderEvents || spec.includeLinks) None
+    if (!columnCompile(spark) || spec.reorderEvents || spec.includeLinks) None
     else CompiledJsProjection.get(source).fastEmitPlan
       // the STATEFUL emit variant reconstructs state with window
       // columns — not streamable as a select; such definitions serve
@@ -441,11 +408,8 @@ final class JsProjection(val source: String) extends Serializable {
     * is disabled. */
   def stepperEmittedStream(events: DataFrame): Option[Dataset[Emitted]] = {
     val spark = events.sparkSession
-    val enabled = spark.conf
-      .getOption("spark.graft.js.columnCompile").forall(_.toBoolean) &&
-      spark.conf
-        .getOption("spark.graft.js.streamStepper").forall(_.toBoolean)
-    if (!enabled || spec.reorderEvents || spec.includeLinks) None
+    if (!columnCompile(spark) || !streamStepper(spark) || spec.reorderEvents ||
+      spec.includeLinks) None
     else for {
       p <- CompiledJsProjection.get(source).fastEmitPlan
       ss <- p.stepSpec
@@ -480,6 +444,11 @@ final class JsProjection(val source: String) extends Serializable {
 }
 
 object JsProjection {
+  /** Storage form of JS fold state between micro-batches and in
+    * checkpoints: the state's JSON. */
+  private[js] val JsonState: StateCodec[JsVal, String] =
+    StateCodec(s => JsVal.stringify(s).getOrElse("null"), JsVal.parseJson)
+
   /** Compile a definition (throws JsParseError/JsError on invalid source —
     * the reference's "compilation" step, JintProjectionStateHandler ctor). */
   def compile(source: String): JsProjection = {
@@ -941,25 +910,6 @@ final class CompiledJsProjection private (source: String) {
         } finally currentEvent = null
     }
   }
-
-  /** Storage-form step for the streaming state store: state rides as JSON
-    * between micro-batches (emitted events are not produced on this path —
-    * use [[JsProjection.emittedStream]] for continuous emission). */
-  def stepJson(json: String, e: LogEvent): String = {
-    val s = step(JsVal.parseJson(json), e, new Emitter)
-    JsVal.stringify(s).getOrElse("null")
-  }
-
-  /** Storage-form step that ALSO collects emissions into `em` — the
-    * streaming-emit path ([[JsProjection.emittedStream]]). */
-  def stepJsonEmit(json: String, e: LogEvent, em: Emitter): String = {
-    val s = step(JsVal.parseJson(json), e, em)
-    JsVal.stringify(s).getOrElse("null")
-  }
-
-  /** Storage-form $created. */
-  def createdJson(json: String, e: LogEvent): String =
-    JsVal.stringify(created(JsVal.parseJson(json), e)).getOrElse("null")
 
   /** $created (fires before the first event's own handler). */
   def created(state: JsVal, e: LogEvent): JsVal = createdFn match {

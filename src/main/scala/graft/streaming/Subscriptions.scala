@@ -29,9 +29,10 @@ final case class BiStreamState[S](shared: S, parts: Map[String, S])
   *    sink via foreachBatch try/catch; replay-parked = batch re-union of the
   *    parked table (competing-consumer dispatch itself is OLTP serving,
   *    out of scope per BASELINE.json).
-  *  - P20 continuous projections: flatMapGroupsWithState carries partition
-  *    state across micro-batches; the state store + offset log replace
-  *    CheckpointTag (Processing/Checkpointing/).
+  *  - P20 continuous projections run over these subscriptions through
+  *    `FoldBuilder.statesStream`/`emittedStream`: flatMapGroupsWithState
+  *    carries partition state across micro-batches; the state store +
+  *    offset log replace CheckpointTag (Processing/Checkpointing/).
   */
 object Subscriptions {
 
@@ -78,6 +79,15 @@ object Subscriptions {
     subscribeAll(spark, logDir,
       col("stream_id") === streamId && col("event_number") >= from)
 
+  /** Batch view of the on-disk log, or None when there is no history yet
+    * (missing dir, or an existing dir with no parquet segments — schema
+    * inference throws on those; same guard as [[logSchema]]). */
+  private def historyOpt(spark: SparkSession, logDir: String): Option[DataFrame] =
+    if (!new java.io.File(logDir).exists()) None
+    else
+      try Some(spark.read.parquet(logDir))
+      catch { case _: org.apache.spark.sql.AnalysisException => None }
+
   /** SUB1 + R1: subscribe to one stream honoring read-time retention
     * (maxCount/maxAge/$tb metadata, tombstones) — the reference applies
     * retention at EVERY read (IndexReader.ReadStreamEventsForwardInternal),
@@ -90,15 +100,6 @@ object Subscriptions {
     * retired catch-up history, and live-tail events are always newer than
     * any fixed cutoff (they can never be over-trimmed). A tombstoned
     * stream yields no rows, like the reference's StreamDeleted outcome. */
-  /** Batch view of the on-disk log, or None when there is no history yet
-    * (missing dir, or an existing dir with no parquet segments — schema
-    * inference throws on those; same guard as [[logSchema]]). */
-  private def historyOpt(spark: SparkSession, logDir: String): Option[DataFrame] =
-    if (!new java.io.File(logDir).exists()) None
-    else
-      try Some(spark.read.parquet(logDir))
-      catch { case _: org.apache.spark.sql.AnalysisException => None }
-
   def subscribeStreamRetained(spark: SparkSession, logDir: String,
       streamId: String, from: Long = 0L,
       asOf: Column = current_timestamp()): DataFrame = {
@@ -170,37 +171,6 @@ object Subscriptions {
           .where(graft.operators.Retention.keepCondition)
           .drop("_min_event_number", "_cutoff_ts", "_deleted")
     }
-  }
-
-  /** P20: run a projection fold as a continuous streaming query. State per
-    * partition key lives in the state store and survives restarts via the
-    * checkpoint dir. Emits (partition, state) after every update
-    * (OutputMode.Update semantics — outputState after each event batch).
-    *
-    * Events inside a micro-batch are folded in log_position order; across
-    * batches the file source preserves append order. */
-  def projectionStream[S](events: DataFrame,
-      partitionFn: LogEvent => Option[String],
-      init: () => S,
-      step: (S, LogEvent) => S,
-      // Update by default; Append when chained after another stateful
-      // operator (Spark requires all-append in that case) — either way
-      // one (key, state) row is emitted per touched key per micro-batch
-      outputMode: OutputMode = OutputMode.Update)(implicit encS: Encoder[S],
-      encOut: Encoder[(String, S)],
-      encKV: Encoder[(String, LogEvent)]): Dataset[(String, S)] = {
-    val ds = Projections.toLogEvents(events)
-    ds.flatMap(e => partitionFn(e).map(k => (k, e)))(encKV)
-      .groupByKey(_._1)(org.apache.spark.sql.Encoders.STRING)
-      .flatMapGroupsWithState[S, (String, S)](
-        outputMode, GroupStateTimeout.NoTimeout) {
-        (key: String, rows: Iterator[(String, LogEvent)], state: GroupState[S]) =>
-          val sorted = rows.map(_._2).toSeq.sortBy(_.log_position)
-          var s = state.getOption.getOrElse(init())
-          sorted.foreach(e => s = step(s, e))
-          state.update(s)
-          Iterator.single((key, s))
-      }
   }
 
   /** P16 continuous mode: the EXACT interleaved bi-state fold as a
@@ -296,22 +266,8 @@ object Subscriptions {
   def reorderedStream(events: DataFrame, lagPositions: Long)(
       implicit encS: Encoder[ReorderBuffer],
       encOut: Encoder[LogEvent],
-      encKV: Encoder[(String, LogEvent)]): Dataset[LogEvent] = {
-    val ds = Projections.toLogEvents(events)
-    ds.map(e => ("", e))(encKV)
-      .groupByKey(_._1)(org.apache.spark.sql.Encoders.STRING)
-      .flatMapGroupsWithState[ReorderBuffer, LogEvent](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: String, rows: Iterator[(String, LogEvent)], state: GroupState[ReorderBuffer]) =>
-          val buf = state.getOption.getOrElse(ReorderBuffer(Seq.empty, Long.MinValue))
-          val incoming = rows.map(_._2).toSeq
-          val all = (buf.pending ++ incoming).sortBy(_.log_position)
-          val highWater = (buf.highWater +: incoming.map(_.log_position)).max
-          val (release, hold) = all.partition(_.log_position <= highWater - lagPositions)
-          state.update(ReorderBuffer(hold, highWater))
-          release.iterator
-      }
-  }
+      encKV: Encoder[(String, LogEvent)]): Dataset[LogEvent] =
+    reorderBy(events, lagPositions, _.log_position)
 
   /** P17 with the reference's actual lag unit: MILLISECONDS of event time
     * (processingLag — docs/server/features/projections/custom.md:46-47
@@ -322,9 +278,18 @@ object Subscriptions {
   def reorderedStreamByTime(events: DataFrame, lagMillis: Long)(
       implicit encS: Encoder[ReorderBuffer],
       encOut: Encoder[LogEvent],
-      encKV: Encoder[(String, LogEvent)]): Dataset[LogEvent] = {
-    val ds = Projections.toLogEvents(events)
-    ds.map(e => ("", e))(encKV)
+      encKV: Encoder[(String, LogEvent)]): Dataset[LogEvent] =
+    reorderBy(events, lagMillis, _.timestamp.getTime)
+
+  /** The reorder buffer behind both P17 forms: events are held until the
+    * highest `coord` seen (kept as `highWater`) is `lag` past their own,
+    * then released in log_position order. */
+  private def reorderBy(events: DataFrame, lag: Long, coord: LogEvent => Long)(
+      implicit encS: Encoder[ReorderBuffer],
+      encOut: Encoder[LogEvent],
+      encKV: Encoder[(String, LogEvent)]): Dataset[LogEvent] =
+    Projections.toLogEvents(events)
+      .map(e => ("", e))(encKV)
       .groupByKey(_._1)(org.apache.spark.sql.Encoders.STRING)
       .flatMapGroupsWithState[ReorderBuffer, LogEvent](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
@@ -332,14 +297,11 @@ object Subscriptions {
           val buf = state.getOption.getOrElse(ReorderBuffer(Seq.empty, Long.MinValue))
           val incoming = rows.map(_._2).toSeq
           val all = (buf.pending ++ incoming).sortBy(_.log_position)
-          // highWater carries the max TIMESTAMP (millis) seen so far
-          val highWater = (buf.highWater +: incoming.map(_.timestamp.getTime)).max
-          val (release, hold) =
-            all.partition(_.timestamp.getTime <= highWater - lagMillis)
+          val highWater = (buf.highWater +: incoming.map(coord)).max
+          val (release, hold) = all.partition(e => coord(e) <= highWater - lag)
           state.update(ReorderBuffer(hold, highWater))
           release.iterator
       }
-  }
 
   /** Flush a reorder buffer at end-of-input: returns everything still held,
     * in order (batch-mode tail; streaming would flush via timeout). */

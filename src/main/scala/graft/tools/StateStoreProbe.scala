@@ -12,7 +12,7 @@ import graft.streaming.Subscriptions
   *
   * Synthesizes a log with N DISTINCT streams (default 1M; pass 5000000
   * for the 5M point), runs the continuous projection fold
-  * ([[Subscriptions.projectionStream]], flatMapGroupsWithState) and the
+  * (`FoldBuilder.statesStream`, flatMapGroupsWithState) and the
   * JS engine's `statesStream` over it on the RocksDB state store
   * ([[graft.GraftSession]] largeStreamingState config), and measures the
   * three numbers that size a production deployment:
@@ -110,9 +110,8 @@ object StateStoreProbe {
     }
 
     def scalaFold(src: DataFrame) =
-      Subscriptions.projectionStream[Long](src,
-        e => Some(e.stream_id), () => 0L,
-        (n, e) => n + math.round(e.value))
+      graft.projections.Projections.fromAll().foreachStream().init(0L)
+        .whenAny((n, e) => n + math.round(e.value)).statesStream(src)
 
     val jsSource = """
 fromAll()

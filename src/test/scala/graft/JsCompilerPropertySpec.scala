@@ -523,9 +523,9 @@ class JsCompilerPropertySpec extends SparkTestBase {
     // The stepper's contract is bit-identity with the batch plan; this
     // sweeps it over the generator's pre-state idioms (first-event sums,
     // extremum/overwrite reads, map guards, array guards) × the hostile
-    // log. statesStream folds the caller's slice without the selector
-    // and emits RAW fold state, so the comparison pre-slices by the
-    // generated selector and skips transform-chain definitions.
+    // log. statesStream emits RAW fold state, so the comparison skips
+    // transform-chain definitions; it pre-slices by the generated
+    // selector as a subscription would (both sides apply it as well).
     val log = genLog(new Random(13)).cache()
     log.count()
     var stepperSeeds = 0

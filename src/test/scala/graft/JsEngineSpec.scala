@@ -2665,8 +2665,8 @@ fromAll()
         "js_map_last_guard", "js_array_guard")) {
       val p = JsProjection.compile(defs(name))
       assert(p.compilesToColumns, name)
-      // statesStream folds the caller's slice (no selector); the batch
-      // states() applies the definition's selector — pre-slice to match
+      // statesStream and batch states() both apply the definition's
+      // selector; the pre-slice mirrors a subscription that carries it
       val sliced =
         if (defs(name).contains("fromCategory(\"purchase\")"))
           log.where(col("stream_id").startsWith("purchase-"))

@@ -169,15 +169,12 @@ class StreamingSpec extends SparkTestBase {
       else if (e.event_type == "Withdrawn") bal - amt(e.data) else bal
 
     // batch fold
-    val batchStates = Projections.fromCategory("acct")
-      .foreachStream().init(0L).whenAny(stepFn)
-      .states(store.read()).collect().toMap
+    val fold = Projections.fromCategory("acct").foreachStream().init(0L).whenAny(stepFn)
+    val batchStates = fold.states(store.read()).collect().toMap
 
     // streaming fold (flatMapGroupsWithState), one AvailableNow pass
     val streamDf = Subscriptions.subscribeAll(spark, s"$dir/log")
-    val q = Subscriptions.projectionStream[Long](
-        streamDf.where(col("stream_id").startsWith("acct-")),
-        e => Option(e.stream_id), () => 0L, stepFn)
+    val q = fold.statesStream(streamDf.where(col("stream_id").startsWith("acct-")))
       .toDF("partition", "state")
       .writeStream.format("memory").queryName("proj").outputMode("update")
       .trigger(Trigger.AvailableNow()).start()
@@ -588,10 +585,10 @@ fromAll().foreachStream().when({
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
-      val q = Subscriptions.projectionStream[Long](
-          Subscriptions.subscribeAll(spark, s"$dir/log")
-            .where(col("stream_id").startsWith("acct-")),
-          e => Some(e.stream_id), () => 0L, (n, _) => n + 1)
+      val q = Projections.fromCategory("acct").foreachStream().init(0L)
+        .whenAny((n, _) => n + 1)
+        .statesStream(Subscriptions.subscribeAll(spark, s"$dir/log")
+          .where(col("stream_id").startsWith("acct-")))
         .writeStream.format("memory").queryName("rocksfold").outputMode("update")
         .option("checkpointLocation", Files.createTempDirectory("rockck").toString)
         .trigger(Trigger.AvailableNow()).start()
@@ -639,12 +636,12 @@ fromAll().foreachStream().when({
     val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val count = Projections.fromAll().foreachStream().init(0L).whenAny((c, _) => c + 1L)
+    def events = spark.readStream.schema(Subscriptions.logSchema(spark, logDir))
+      .parquet(logDir)
     try {
       def runPass(): Unit = {
-        val q = Subscriptions.projectionStream[Long](
-            spark.readStream.schema(Subscriptions.logSchema(spark, logDir))
-              .parquet(logDir),
-            e => Some(e.stream_id), () => 0L, (c, _) => c + 1L)
+        val q = count.statesStream(events)
           .writeStream.format("noop")
           .option("checkpointLocation", ck)
           .outputMode("update").trigger(Trigger.AvailableNow()).start()
@@ -661,10 +658,7 @@ fromAll().foreachStream().when({
       writeChunk(3, n + 500)
       // memory sink cannot resume a checkpoint; foreachBatch can
       val captured = new java.util.concurrent.ConcurrentHashMap[String, Long]()
-      val q = Subscriptions.projectionStream[Long](
-          spark.readStream.schema(Subscriptions.logSchema(spark, logDir))
-            .parquet(logDir),
-          e => Some(e.stream_id), () => 0L, (c, _) => c + 1L)
+      val q = count.statesStream(events)
         .writeStream
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[(String, Long)], _: Long) =>
           batch.collect().foreach { case (k, v) => captured.put(k, v) }: Unit
@@ -1092,6 +1086,49 @@ fromCategory("acct")
       .map(r => r.getString(0) -> r.getString(1)).toMap
     assert(batch.contains(graft.projections.BiStateFold.SharedKey))
     assert(streamed == batch)
+  }
+
+  test("P5/P20 JS $created: statesStream == batch states across two " +
+    "checkpointed micro-batches, $created once per key") {
+    val (store, dir) = newStore()
+    seed(store)
+    val p = graft.projections.js.JsProjection.compile("""
+fromCategory("acct")
+    .foreachStream()
+    .when({
+        $init: function() { return { bal: 0, first: "", created: 0 } },
+        $created: function(s, e) { s.first = e.eventType; s.created += 1; return s; },
+        Deposited: function(s, e) { s.bal += e.body.amt; return s; },
+        Withdrawn: function(s, e) { s.bal -= e.body.amt; return s; }
+    })""")
+    val ck = Files.createTempDirectory("jscreated").toString
+    val captured = new java.util.concurrent.ConcurrentHashMap[String, String]()
+    def runPass(): Map[String, String] = {
+      val q = p.statesStream(Subscriptions.subscribeAll(spark, s"$dir/log")
+          .where(col("stream_id").startsWith("acct-")))
+        .writeStream
+        .foreachBatch { (b: org.apache.spark.sql.Dataset[(String, String)], _: Long) =>
+          b.collect().foreach { case (k, v) => captured.put(k, v) }: Unit
+        }
+        .option("checkpointLocation", ck)
+        .outputMode("update").trigger(Trigger.AvailableNow()).start()
+      q.awaitTermination(120000)
+      q.exception.foreach(e => throw e)
+      captured.asScala.toMap
+    }
+    def batch(): Map[String, String] = p.states(store.read()).collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap
+    val first = runPass()
+    assert(first("acct-1") == """{"bal":7,"first":"Deposited","created":1}""")
+    assert(first == batch())
+    // batch 2: more events for an old key, and a key never seen before
+    store.append(Seq(
+      PendingEvent("acct-1", "e5", "Withdrawn", """{"amt":2}"""),
+      PendingEvent("acct-3", "e6", "Withdrawn", """{"amt":1}""")))
+    val second = runPass()
+    assert(second("acct-1") == """{"bal":5,"first":"Deposited","created":1}""")
+    assert(second("acct-3") == """{"bal":-1,"first":"Withdrawn","created":1}""")
+    assert(second == batch())
   }
 
   test("P18 JS $deleted: tombstones fire the handler in streaming, stream == batch") {
