@@ -6,7 +6,9 @@ import org.apache.spark.sql.SparkSession
   *
   * Scale defaults: AQE on (runtime re-plan, skew-join splitting, partition
   * coalescing), UTC session time, parquet bloom filters available for
-  * stream_id point lookups on written logs. On a real cluster, pass the
+  * stream_id point lookups on written logs, and local `file:` I/O through
+  * [[graft.io.NioLocalFileSystem]] (no forked `chmod`/`readlink` per
+  * file). On a real cluster, pass the
   * actual master/shuffle-partition values; `local[32]` + 32 shuffle
   * partitions matches the driver's bench environment. */
 object GraftSession {
@@ -30,6 +32,12 @@ object GraftSession {
       // overflows around 2000 terms (ParquetPushdown.EqListMax mirrors
       // this; larger key sets chunk into ≤1000-term range-scoped scans)
       .config("spark.sql.parquet.pushdown.inFilterThreshold", "1000")
+      // local file: I/O, FileSystem and FileContext, through graft.io.
+      // Hadoop caches one FileSystem per scheme for the whole JVM, so this
+      // binds only if the session opens the JVM's first file: FileSystem
+      .config("spark.hadoop.fs.file.impl", classOf[graft.io.NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[graft.io.NioLocalFs].getName)
     // SURVEY §7 "foreachStream over millions of streams in streaming mode":
     // the RocksDB state store spills per-key projection state to local disk
     // instead of holding every partition's state on the executor heap.

@@ -454,16 +454,18 @@ final class FoldBuilder[S] private[projections] (
     * and the rows carry that form: stream == batch [[states]] over the
     * same prefix of the log, `$created` included. `outputMode` is Update
     * for a plain subscription; Append when chained after another stateful
-    * operator (Spark requires all-Append then). */
+    * operator (Spark requires all-Append then). `render` turns a key's
+    * final state (and its stored form) into the row's state, or drops the
+    * row with None; the state store keeps the fold state either way. */
   def statesStream[T](events: DataFrame, codec: StateCodec[S, T],
-      outputMode: OutputMode)(implicit encT: Encoder[T],
+      outputMode: OutputMode, render: (S, T) => Option[T])(implicit encT: Encoder[T],
       encOut: Encoder[(String, T)]): Dataset[(String, T)] =
-    foldStream(events, codec, outputMode)((k, t, _) => Iterator.single((k, t)))
+    foldStream(events, codec, outputMode)((k, s, t, _) => render(s, t).iterator.map((k, _)))
 
-  /** [[statesStream]] in Update mode, with the state stored as is. */
+  /** [[statesStream]] in Update mode, with the state stored and output as is. */
   def statesStream(events: DataFrame)(implicit encS: Encoder[S],
       encOut: Encoder[(String, S)]): Dataset[(String, S)] =
-    statesStream(events, StateCodec.identity[S], OutputMode.Update)
+    statesStream(events, StateCodec.identity[S], OutputMode.Update, (_, t: S) => Some(t))
 
   /** P13/P14 continuous mode: the fold as a Structured Streaming query
     * that outputs the EMITTED events (not states), in OutputMode.Append —
@@ -475,7 +477,7 @@ final class FoldBuilder[S] private[projections] (
     * semantics (Processing/Emitting/EmittedStream.cs). */
   def emittedStream[T](events: DataFrame, codec: StateCodec[S, T])(implicit
       encT: Encoder[T], encOut: Encoder[Emitted]): Dataset[Emitted] =
-    foldStream(events, codec, OutputMode.Append)((_, _, emitted) => emitted.iterator)
+    foldStream(events, codec, OutputMode.Append)((_, _, _, emitted) => emitted.iterator)
 
   /** [[emittedStream]] with the state stored as is. */
   def emittedStream(events: DataFrame)(implicit encS: Encoder[S],
@@ -485,10 +487,10 @@ final class FoldBuilder[S] private[projections] (
   /** The one flatMapGroupsWithState behind [[statesStream]] and
     * [[emittedStream]]: each micro-batch folds a key's new events in
     * log_position order on top of its decoded state, stores the encoded
-    * final state, and hands `out` the key, that encoded state and the
-    * key's emitted rows. */
+    * final state, and hands `out` the key, the final state, its encoded
+    * form and the key's emitted rows. */
   private def foldStream[T, O](events: DataFrame, codec: StateCodec[S, T],
-      outputMode: OutputMode)(out: (String, T, Seq[Emitted]) => Iterator[O])(
+      outputMode: OutputMode)(out: (String, S, T, Seq[Emitted]) => Iterator[O])(
       implicit encT: Encoder[T], encOut: Encoder[O]): Dataset[O] = {
     val fold = kernel
     val encode = codec.encode
@@ -502,7 +504,7 @@ final class FoldBuilder[S] private[projections] (
           val emitted = run.toVector
           val t = encode(run.state)
           state.update(t)
-          out(key, t, emitted)
+          out(key, run.state, t, emitted)
       }
   }
 }

@@ -58,14 +58,35 @@ final class JsInterp(stepBudget: Long = JsInterp.DefaultStepBudget) {
   // (`function f(){return f()}`) overflows the JVM stack — a
   // StackOverflowError Error that would kill the executor thread. ES
   // specifies the catchable answer: "RangeError: Maximum call stack size
-  // exceeded". Each JS frame costs ~25 JVM frames in this tree-walker, so
-  // the cap must fit the smallest stack the engine may run on: 256 JS
-  // frames ≈ 6–7k JVM frames, safe on a default 512 KiB thread stack and
-  // still an order of magnitude past any real projection handler.
+  // exceeded". Each JS frame costs ~25 JVM frames in this tree-walker:
+  // 256 JS frames ≈ 6–7k JVM frames, an order of magnitude past any real
+  // projection handler. The caller's thread may not have that much stack
+  // left (a 1 MiB default thread stack overflowed at about 200 JS frames),
+  // so a call that reaches HopDepth runs its subtree on a thread with a
+  // known stack, where the cap, not the stack, stops a runaway recursion.
   private var callDepth = 0
   private val MaxCallDepth = 256
+  private val HopDepth = 32
+  private val DeepStackBytes = 16L << 20
 
   def callFunction(f: JsVal, args: Seq[JsVal]): JsVal = f match {
+    case _: JsFunc if callDepth == HopDepth => onDeepStack(callFunction0(f, args))
+    case _ => callFunction0(f, args)
+  }
+
+  /** Run `body` on a fresh thread with a [[DeepStackBytes]] stack and wait
+    * for it; its result or exception comes back to the calling thread. */
+  private def onDeepStack(body: => JsVal): JsVal = {
+    var result: Either[Throwable, JsVal] = null
+    val t = new Thread(null, () => result =
+      try Right(body) catch { case e: Throwable => Left(e) }, "js-deep-call", DeepStackBytes)
+    t.setDaemon(true)
+    t.start()
+    t.join()
+    result.fold(e => throw e, v => v)
+  }
+
+  private def callFunction0(f: JsVal, args: Seq[JsVal]): JsVal = f match {
     case JsNative(_, _, fn) => fn(args)
     case JsFunc(params, body, closure) =>
       if (callDepth >= MaxCallDepth)

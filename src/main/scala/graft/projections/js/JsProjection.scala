@@ -237,7 +237,10 @@ final class JsProjection(val source: String) extends Serializable {
     * dir. Emits (partition, state JSON) for every key a micro-batch
     * touches, like outputState-after-each-batch: stream == batch states()
     * over the same log, `$created` included. Every path applies the
-    * definition's selector, as batch states() does.
+    * definition's selector, as batch states() does, and its
+    * transformBy/filterBy chain to each emitted row (the state store keeps
+    * the raw fold state). `options($includeLinks)` is rejected, as in
+    * [[emittedStream]].
     *
     * The interpreter path is [[FoldBuilder.statesStream]] over
     * [[foldBuilder]]. Bi-state ($initShared) definitions run through the
@@ -254,14 +257,25 @@ final class JsProjection(val source: String) extends Serializable {
         "options(reorderEvents) with $initShared is not supported in " +
           "streaming: Spark requires chained stateful operators to all be " +
           "Append, and the bi-state fold emits in Update mode")
+    if (spec.includeLinks)
+      throw new JsError(
+        "options($includeLinks) is not supported for streaming states " +
+          "(link resolution is a batch self-join); resolve links batch-side")
     val ordered = reordered(events)
     if (spec.isBiState)
       renderStates(biFold.statesStream(ordered)(jsValEncoder, implicitly))
-    else fastStatesStream(ordered).getOrElse(
+    else fastStatesStream(ordered).getOrElse {
+      val src = source
+      val transformed = CompiledJsProjection.get(src).transformsList.nonEmpty
       foldBuilder.statesStream(ordered, JsProjection.JsonState,
         // chained after the reorder buffer (itself stateful, Append), Spark
         // requires every stateful operator in the query to be Append
-        if (spec.reorderEvents) OutputMode.Append else OutputMode.Update))
+        if (spec.reorderEvents) OutputMode.Append else OutputMode.Update,
+        (s: JsVal, json: String) =>
+          if (!transformed) Some(json)
+          else CompiledJsProjection.get(src).applyTransforms(s)
+            .map(JsProjection.JsonState.encode))
+    }
   }
 
   /** options({reorderEvents: true, processingLag: ms}): buffer arrivals
@@ -288,8 +302,9 @@ final class JsProjection(val source: String) extends Serializable {
   def fastStatesStream(events: DataFrame): Option[Dataset[(String, String)]] = {
     val spark = events.sparkSession
     import spark.implicits._
-    // transform chains are a batch states() feature — the interpreter
-    // streaming path emits raw fold state, so the fast path must too
+    // the compiled plans fold without the transformBy/filterBy chain;
+    // such definitions stream through the interpreter fold, which applies
+    // it to each emitted row
     if (!columnCompile(spark) || spec.reorderEvents || spec.includeLinks ||
       CompiledJsProjection.get(source).transformsList.nonEmpty) None
     else CompiledJsProjection.get(source).fastPlan.flatMap { p =>

@@ -992,6 +992,21 @@ fromCategory("chat").when({
       == JsNum(200.0))
   }
 
+  test("bounded recursion to depth 200 and the depth cap hold on a 256 KiB thread stack") {
+    var got: Either[Throwable, (JsVal, JsVal)] = null
+    val t = new Thread(null, () => got =
+      try Right((
+        evalJs("function g(n){ return n <= 0 ? 0 : 1 + g(n - 1); } g(200)"),
+        evalJs("""var msg = '';
+          |function f() { return f(); }
+          |try { f(); } catch (e) { msg = e.message; }
+          |msg.indexOf('Maximum call stack') >= 0""".stripMargin)))
+      catch { case e: Throwable => Left(e) }, "small-stack", 256L << 10)
+    t.start()
+    t.join()
+    assert(got == Right((JsNum(200.0), JsBool(true))))
+  }
+
   test("hostile nesting fails the parse loudly instead of overflowing the compile stack") {
     val deep = "(" * 2000 + "1" + ")" * 2000
     val err = intercept[graft.projections.js.JsParseError] {

@@ -1131,6 +1131,72 @@ fromCategory("acct")
     assert(second == batch())
   }
 
+  test("JS statesStream rejects options($includeLinks), which only batch " +
+    "states resolves") {
+    val (store, dir) = newStore()
+    store.append(Seq(
+      PendingEvent("account-01", "a1", "test", """{"a":1}"""),
+      PendingEvent("account-02", "a2", "test", """{"a":10}""")))
+    store.append(Seq(
+      PendingEvent("stream", "l1", "$>", "0@account-01"),
+      PendingEvent("stream", "l2", "$>", "0@account-02")))
+    val p = graft.projections.js.JsProjection.compile("""
+options({ $includeLinks: true })
+fromStream("stream").when({
+    $init: function() { return { sum: 0, n: 0 } },
+    $any: function(s, e) { if (e.body && e.body.a) s.sum += e.body.a; s.n += 1; return s; }
+})""")
+    val batch = p.states(store.read()).collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(batch == Map("" -> """{"sum":11,"n":2}"""))
+    // folding the raw links would give {"sum":0,"n":2}
+    intercept[graft.projections.js.JsError] {
+      p.statesStream(Subscriptions.subscribeAll(spark, s"$dir/log"))
+    }
+  }
+
+  test("JS statesStream applies transformBy/filterBy to each emitted row and " +
+    "keeps the raw fold state across micro-batches") {
+    val (store, dir) = newStore()
+    seed(store)
+    val p = graft.projections.js.JsProjection.compile("""
+fromCategory("acct")
+    .foreachStream()
+    .when({
+        $init: function() { return { bal: 0 } },
+        Deposited: function(s, e) { s.bal += e.body.amt; return s; }
+    })
+    .transformBy(function(s) { return { doubled: s.bal * 2 }; })
+    .filterBy(function(s) { return s.doubled > 10; })""")
+    val ck = Files.createTempDirectory("jstransform").toString
+    val captured = new java.util.concurrent.ConcurrentHashMap[String, String]()
+    def runPass(): Map[String, String] = {
+      val q = p.statesStream(Subscriptions.subscribeAll(spark, s"$dir/log")
+          .where(col("stream_id").startsWith("acct-")))
+        .writeStream
+        .foreachBatch { (b: org.apache.spark.sql.Dataset[(String, String)], _: Long) =>
+          b.collect().foreach { case (k, v) => captured.put(k, v) }: Unit
+        }
+        .option("checkpointLocation", ck)
+        .outputMode("update").trigger(Trigger.AvailableNow()).start()
+      q.awaitTermination(120000)
+      q.exception.foreach(e => throw e)
+      captured.asScala.toMap
+    }
+    def batch(): Map[String, String] = p.states(store.read()).collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap
+    // acct-2 (bal 5) is filtered out; the raw state would be {"bal":10}
+    assert(batch() == Map("acct-1" -> """{"doubled":20}"""))
+    assert(runPass() == batch())
+    // the second micro-batch folds on the stored {"bal":...}, not the
+    // transformed row
+    store.append(Seq(
+      PendingEvent("acct-1", "e5", "Deposited", """{"amt":1}"""),
+      PendingEvent("acct-2", "e6", "Deposited", """{"amt":1}""")))
+    assert(batch() == Map("acct-1" -> """{"doubled":22}""", "acct-2" -> """{"doubled":12}"""))
+    assert(runPass() == batch())
+  }
+
   test("P18 JS $deleted: tombstones fire the handler in streaming, stream == batch") {
     val (store, dir) = newStore()
     seed(store)
