@@ -11,9 +11,10 @@ import graft.sources.EventLogStore
   * expected-version tracking so projection replays don't duplicate. The
   * Spark shape: every emitted event gets a DETERMINISTIC event_id
   * `{projection}:{partition}:{causedByPosition}:{emitSeq}` — a pure
-  * function of its cause — and the append dedups against the target log
-  * by event_id with a distributed anti-join. Re-running the projection
-  * (full or resumed) re-derives identical ids, so replays are no-ops. */
+  * function of its cause — and the store's one idempotent write,
+  * [[EventLogStore.appendIdempotent]], drops every id already in its
+  * target stream. Re-running the projection (full or resumed) re-derives
+  * identical ids, so replays are no-ops. */
 object EmittedSink {
 
   /** Deterministic idempotency key for an emitted event. The projection
@@ -32,11 +33,10 @@ object EmittedSink {
     * [[ProjectionLifecycle.reset]] uses to find and truncate emitted
     * streams.
     *
-    * The registry doubles as the dedup SCOPE: emitted ids can only collide
-    * with events in streams this projection emitted into before (registry
-    * rows are committed before their events, so the registry is a superset
-    * even across crashes) — the anti-join reads only those streams plus
-    * this batch's targets, never the whole log's event_ids. */
+    * The dedup scope is the batch's target streams, the per-stream rule of
+    * [[EventLogStore.append]] and the reference's EmittedStream: an
+    * emitted id is a function of its cause, so it always lands in the
+    * same stream. */
   def appendIdempotent(store: EventLogStore, projection: String,
       emitted: Dataset[Emitted]): Long = {
     val (epoch, resetPending, runState) =
@@ -69,37 +69,22 @@ object EmittedSink {
       .select("stream_id", "event_id", "event_type", "data", "metadata",
         "correlation_id", "timestamp", "caused_by_position")
       // one materialization of the projection lineage (which may be the
-      // serial JS fold): the registry pass, the anti-join, and the append
-      // all read the cached rows, not three re-executions
+      // serial JS fold): the registry pass and the append both read the
+      // cached rows, not two re-executions
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
       // registry first: a crash between the two commits leaves a stream
       // registered but empty (harmless); the reverse order could leave
       // emitted events invisible to a later reset
       registerEmittedStreams(store, registry, tag, pending)
-      // dedup scope: streams previously registered + this batch's targets
-      val scope = store.read()
-        .where(col("stream_id") === registry).select(col("data").as("_s"))
-        .unionByName(pending.select(col("stream_id").as("_s")))
-        .distinct()
-      val existing = store.read()
-        .join(scope, col("stream_id") === col("_s"), "left_semi")
-        .select(col("event_id").as("_eid"))
-      val fresh = pending
-        .join(existing, col("event_id") === col("_eid"), "left_anti")
-        .dropDuplicates("event_id")
-      // positions assigned in cause order → emitted streams replay stably;
-      // an all-duplicate replay is a cheap no-op inside appendBulk (the
-      // lineage runs once against its persisted output)
-      store.appendBulk(fresh, orderBy = Seq("caused_by_position", "event_id"))
+      // positions assigned in cause order → emitted streams replay stably
+      store.appendIdempotent(pending, orderBy = Seq("caused_by_position", "event_id"))
     } finally pending.unpersist()
   }
 
   /** Record the distinct target streams of this batch into the
     * projection's emittedstreams registry, idempotently per (epoch,
-    * stream). One row per NEW stream — the anti-join is a point lookup on
-    * the registry stream itself (stream + bucket pruned), not a full-log
-    * event_id scan. */
+    * stream): one row per NEW stream. */
   private def registerEmittedStreams(store: EventLogStore, registry: String,
       tag: String, pendingEvents: DataFrame): Unit = {
     val pending = pendingEvents
@@ -112,20 +97,16 @@ object EmittedSink {
         lit(null).cast("string").as("metadata"),
         lit(null).cast("string").as("correlation_id"),
         lit(null).cast("timestamp").as("timestamp"))
-    val existing = store.read()
-      .where(col("stream_id") === registry)
-      .select(col("event_id").as("_eid"))
-    val fresh = pending.join(existing, col("event_id") === col("_eid"), "left_anti")
-    store.appendBulk(fresh, orderBy = Seq("event_id"))
+    store.appendIdempotent(pending, orderBy = Seq("event_id")): Unit
   }
 
   /** Continuous emission: run a streaming Dataset[Emitted] (from
     * [[FoldBuilder.emittedStream]] / JsProjection.emittedStream) into the
     * store via foreachBatch, exactly-once. Emitted ids are deterministic
     * per (tag, partition, causedBy, seq), so a micro-batch replayed after
-    * a crash re-derives the same ids and the anti-join drops them — the
-    * streaming face of the reference's EmittedStream checkpointing
-    * (Processing/Emitting/EmittedStream.cs). */
+    * a crash re-derives the same ids and the idempotent append drops
+    * them — the streaming face of the reference's EmittedStream
+    * checkpointing (Processing/Emitting/EmittedStream.cs). */
   def streamTo(store: EventLogStore, projection: String,
       emitted: Dataset[Emitted], checkpoint: String,
       trigger: org.apache.spark.sql.streaming.Trigger =

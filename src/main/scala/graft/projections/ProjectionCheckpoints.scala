@@ -39,14 +39,7 @@ object ProjectionCheckpoints {
         lit(null).cast("string").as("metadata"),
         lit(null).cast("string").as("correlation_id"),
         lit(null).cast("timestamp").as("timestamp"))
-    // checkpoint ids only ever live in the checkpoint stream — the dedup
-    // anti-join is a point lookup there, not a full-log event_id scan
-    val existing = store.read()
-      .where(col("stream_id") === checkpointStream(name))
-      .select(col("event_id").as("_eid"))
-    val fresh = pending.join(existing, col("event_id") === col("_eid"), "left_anti")
-    if (fresh.isEmpty) 0L
-    else store.appendBulk(fresh, orderBy = Seq("event_id"))
+    store.appendIdempotent(pending, orderBy = Seq("event_id"))
   }
 
   /** Load the most recent checkpoint of the CURRENT epoch: (covered

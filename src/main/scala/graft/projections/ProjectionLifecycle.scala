@@ -239,7 +239,7 @@ object ProjectionLifecycle {
         lit(null).cast("string").as("metadata"),
         lit(null).cast("string").as("correlation_id"),
         lit(null).cast("timestamp").as("timestamp"))
-      store.appendBulk(metaEvents, orderBy = Seq("stream_id"))
+      store.appendIdempotent(metaEvents, orderBy = Seq("stream_id"))
     }
     store.append(Seq(PendingEvent(
       controlStream(name), s"$name:reset:$next", "$ProjectionReset",

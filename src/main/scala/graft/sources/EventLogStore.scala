@@ -651,15 +651,15 @@ class EventLogStore(spark: SparkSession, path: String, requestedBuckets: Int = 0
 
   /** The append path's exact idempotency probe: which of `batchIds` exist
     * in the target streams' rows of the given log data files — the files
-    * [[maybeDuplicateFiles]] could not rule out. A distributed left-semi
-    * join (batch ids broadcast) over those files only; at most |batchIds|
-    * rows ever leave the executors. Exposed for PlanSpec, which pins the
-    * no-driver-collect shape. */
+    * [[maybeDuplicateFiles]] could not rule out. A plain filter, `stream_id
+    * IN targets AND event_id IN batchIds`, pushed into the scan of those
+    * files: one job, and at most |batchIds| rows leave the executors. The
+    * 1 MiB append batch bounds the id list. Exposed for PlanSpec, which
+    * pins the pushed-filter shape. */
   private[graft] def duplicateIdProbe(batchIds: Seq[String],
       targetStreams: Seq[String], files: Seq[String]): DataFrame =
     spark.read.schema(logSchema).option("basePath", logDir).parquet(files: _*)
-      .where(col("stream_id").isin(targetStreams: _*))
-      .join(broadcast(batchIds.toDF("event_id")), Seq("event_id"), "left_semi")
+      .where(col("stream_id").isin(targetStreams: _*) && col("event_id").isin(batchIds: _*))
       .select("event_id")
 
   /** Append a batch of events. `expected` maps stream -> expected version
@@ -694,8 +694,8 @@ class EventLogStore(spark: SparkSession, path: String, requestedBuckets: Int = 0
     // idempotent success — version checks are skipped, mirroring the
     // reference's idempotent-write path. The row-group filter rules out
     // files on the driver; the files it cannot rule out go to the exact
-    // probe, a distributed semi-join whose output is at most the batch ids,
-    // so driver memory is bounded by the 1 MiB batch — never by stream
+    // probe, a filtered scan whose output is at most the batch ids, so
+    // driver memory is bounded by the 1 MiB batch — never by stream
     // length. Fresh ids run no Spark job.
     val batchIds = events.map(_.event_id).distinct
     val dupIds: Set[String] = maybeDuplicateFiles(batchIds, targetStreams) match {
@@ -767,13 +767,40 @@ class EventLogStore(spark: SparkSession, path: String, requestedBuckets: Int = 0
     }
   }
 
+  /** Idempotent distributed append: [[append]]'s rule for a DataFrame of
+    * pending events, the store's one idempotent write for batches that can
+    * replay (emitted events, checkpoints, parked links, reset truncations).
+    * An event whose `event_id` is already in one of the batch's target
+    * streams, or earlier in the batch, is dropped; the rest go to
+    * [[appendBulk]] ordered by `orderBy`. Under the append lock, `pending`
+    * is persisted once, so a lineage that reads this log runs once, before
+    * the write. The dedup reads only the target streams' bucket-pruned
+    * slice. Returns the number of rows written (0 for a pure replay or an
+    * empty batch). */
+  def appendIdempotent(pending: DataFrame, orderBy: Seq[String]): Long =
+    EventLogStore.appendLockFor(path).synchronized {
+      val rows = pending.persist(StorageLevel.MEMORY_AND_DISK)
+      try {
+        // a per-partition distinct, finished on the driver: no shuffle
+        val targets = rows.select("stream_id").as[String]
+          .mapPartitions(_.toSet.iterator).collect().distinct.toSeq
+        if (targets.isEmpty) 0L
+        else appendBulk(
+          rows.join(streamSlice(targets).select(col("event_id").as("_eid")),
+              col("event_id") === col("_eid"), "left_anti")
+            .dropDuplicates("event_id"),
+          orderBy)
+      } finally rows.unpersist()
+    }
+
   /** Distributed append for large DataFrames of pending events (ingest
     * path): assigns positions via sorted zipWithIndex — no single-partition
-    * window, scales to arbitrary batch sizes. Skips per-event expected
-    * version (bulk ingest is ExpectedVersion.Any by definition) but still
-    * refuses tombstoned streams. Returns the number of rows written,
-    * counted from the persisted output — the pending lineage (which may
-    * itself read this log, e.g. EmittedSink's anti-join) runs once. */
+    * window, scales to arbitrary batch sizes. No idempotency check; use
+    * [[appendIdempotent]] for writes that can replay. Skips per-event
+    * expected version (bulk ingest is ExpectedVersion.Any by definition)
+    * but still refuses tombstoned streams. Returns the number of rows
+    * written, counted from the persisted output — the pending lineage
+    * (which may itself read this log) runs once. */
   def appendBulk(pending: DataFrame, orderBy: Seq[String] = Seq("timestamp", "event_id")): Long = {
     // same writer serialization as append() (EventLogStore object doc)
     EventLogStore.appendLockFor(path).synchronized {

@@ -180,9 +180,9 @@ class PersistentGroup(
     * for crash-retries of one pass but distinct across replay truncations.
     * Returns the number parked. */
   private def park(rows: DataFrame): Long = {
-    val lastRow = store.read().where(col("stream_id") === parkedStream)
-      .agg(max(col("event_number"))).collect()
-    val gen = if (lastRow.isEmpty || lastRow(0).isNullAt(0)) 0L else lastRow(0).getLong(0) + 1
+    // the index's raw last event number: unlike streamState, a truncated
+    // parked stream still counts, so a replay's re-park gets a new generation
+    val gen = store.streamIndex().streams.get(parkedStream).fold(0L)(_.last + 1)
     val pending = rows.select(
       lit(parkedStream).as("stream_id"),
       concat(lit(s"$baseName:parked:g$gen:"),
@@ -192,10 +192,7 @@ class PersistentGroup(
       lit(null).cast("string").as("metadata"),
       lit(null).cast("string").as("correlation_id"),
       col("ts").as("timestamp"))
-    val existing = store.read().where(col("stream_id") === parkedStream)
-      .select(col("event_id").as("_eid"))
-    val freshRows = pending.join(existing, col("event_id") === col("_eid"), "left_anti")
-    store.appendBulk(freshRows, orderBy = Seq("event_id"))
+    store.appendIdempotent(pending, orderBy = Seq("event_id"))
   }
 
   /** Replay parked messages (reference: ReplayParkedMessages): resolve the

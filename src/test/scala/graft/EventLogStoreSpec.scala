@@ -688,6 +688,62 @@ class EventLogStoreSpec extends SparkTestBase {
     }
   }
 
+  /** Pending rows (stream_id, event_id) in appendBulk's input schema. */
+  private def pendingOf(rows: (String, String)*): org.apache.spark.sql.DataFrame = {
+    val s = spark; import s.implicits._
+    rows.map { case (sid, eid) =>
+      (sid, eid, "E", "{}", null: String, null: String, ts("2024-01-02 00:00:00"))
+    }.toDF("stream_id", "event_id", "event_type", "data", "metadata",
+      "correlation_id", "timestamp")
+  }
+
+  private def bucketedStore(): EventLogStore =
+    new EventLogStore(spark, TempDirs.create("graftidem"), requestedBuckets = 4)
+
+  test("appendIdempotent: a replayed batch writes no rows") {
+    val store = bucketedStore()
+    val batch = pendingOf("a-1" -> "x1", "a-1" -> "x2", "b-1" -> "x3")
+    assert(store.appendIdempotent(batch, Seq("event_id")) == 3L)
+    assert(store.appendIdempotent(batch, Seq("event_id")) == 0L)
+    assert(store.read().count() == 3L)
+    assert(store.streamState("a-1") == EventLogStore.StreamOk(1L))
+  }
+
+  test("appendIdempotent: ids repeated inside one batch are written once") {
+    val store = bucketedStore()
+    store.append(Seq(pe("a-1", "x1")))
+    assert(store.appendIdempotent(
+      pendingOf("a-1" -> "x1", "a-1" -> "x2", "a-1" -> "x2", "b-1" -> "x3", "b-1" -> "x3"),
+      Seq("event_id")) == 2L)
+    assert(store.read().select("event_id").collect().map(_.getString(0)).sorted.toSeq ==
+      Seq("x1", "x2", "x3"))
+    assert(store.streamState("a-1") == EventLogStore.StreamOk(1L))
+  }
+
+  test("appendIdempotent: an id present only outside the batch's target streams is written") {
+    val store = bucketedStore()
+    store.append(Seq(pe("other-1", "x1")))
+    assert(store.appendIdempotent(pendingOf("a-1" -> "x1"), Seq("event_id")) == 1L)
+    assert(store.read().where(col("event_id") === "x1")
+      .select("stream_id").collect().map(_.getString(0)).sorted.toSeq == Seq("a-1", "other-1"))
+  }
+
+  test("appendIdempotent refuses a tombstoned target stream") {
+    val store = bucketedStore()
+    store.append(Seq(pe("a-1", "x1")))
+    store.tombstone("a-1")
+    intercept[WrongExpectedVersionException] {
+      store.appendIdempotent(pendingOf("a-1" -> "x2"), Seq("event_id"))
+    }
+    assert(store.read().where(col("event_id") === "x2").count() == 0L)
+  }
+
+  test("appendIdempotent of an empty batch returns 0 and writes nothing") {
+    val store = bucketedStore()
+    assert(store.appendIdempotent(pendingOf(), Seq("event_id")) == 0L)
+    assert(!store.exists)
+  }
+
   test("appendBulk assigns order-respecting positions and per-stream numbers") {
     val store = freshStore()
     store.append(Seq(pe("a-1", "seed")))

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.projections.LogEvent
 import graft.sources.{EventLogStore, PendingEvent}
@@ -12,7 +11,7 @@ import graft.streaming.{Outcome, PersistentGroup}
 class PersistentGroupSpec extends SparkTestBase {
 
   private def freshStore(): (EventLogStore, String) = {
-    val dir = Files.createTempDirectory("graftpsub").toString
+    val dir = TempDirs.create("graftpsub")
     (new EventLogStore(spark, dir), dir)
   }
 

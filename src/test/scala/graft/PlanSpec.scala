@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.sources.{EventLogStore, PendingEvent}
 import graft.operators.Retention
@@ -11,7 +10,7 @@ import graft.operators.Retention
 class PlanSpec extends SparkTestBase {
 
   private lazy val store = {
-    val s = new EventLogStore(spark, Files.createTempDirectory("plan").toString)
+    val s = new EventLogStore(spark, TempDirs.create("plan"))
     s.append((0 until 50).map(i => PendingEvent(s"acct-${i % 5}", s"e$i", "E", "{}")))
     s
   }
@@ -157,22 +156,23 @@ class PlanSpec extends SparkTestBase {
     assert(!plan.contains("CartesianProduct"), plan.take(1200))
   }
 
-  test("append idempotency probe is a distributed semi-join, ids broadcast") {
+  test("append idempotency probe is one filtered scan, ids pushed as an In filter") {
     val (ids, streams) = (Seq("e1", "e2", "zz"), Seq("acct-1", "acct-2"))
     // the probe runs over the files the driver's row-group filter keeps
     val files = store.maybeDuplicateFiles(ids, streams)
     assert(files.nonEmpty)
     val df = store.duplicateIdProbe(ids, streams, files)
     assert(df.collect().map(_.getString(0)).toSet == Set("e1", "e2"))
-    val plan = executedPlan(df)
-    // the probe's shape: log-side scan semi-joined against the broadcast
-    // batch ids — the driver only ever receives found duplicates, never the
+    // the probe's shape: the batch ids and target streams reach the parquet
+    // scan as pushed filters — no broadcast build side (a job of its own),
+    // and the driver only ever receives found duplicates, never the
     // streams' full id sets
-    assert(plan.contains("BroadcastHashJoin") && plan.contains("LeftSemi"),
-      plan.take(1500))
+    val pushed = pushedFilters(df)
+    assert(pushed.contains("In(event_id"), pushed)
+    assert(pushed.contains("In(stream_id"), pushed)
+    val plan = executedPlan(df)
+    assert(!plan.contains("BroadcastExchange") && !plan.contains("Join"), plan.take(1500))
     assert(!plan.contains("CollectLimit"), plan.take(1500))
-    assert(plan.contains("In(stream_id") || plan.contains("stream_id IN"),
-      plan.take(2000))
   }
 
   test("real-codec decode pushes the id filter into the documents scan") {
@@ -196,7 +196,7 @@ class PlanSpec extends SparkTestBase {
     // and registered emitted streams commit as ONE bulk append: the plan
     // aggregates max(event_number) grouped by stream — a distributed
     // aggregate — never a driver-side loop of point lookups
-    val s = new EventLogStore(spark, Files.createTempDirectory("planreset").toString)
+    val s = new EventLogStore(spark, TempDirs.create("planreset"))
     s.append((0 until 20).map(i =>
       PendingEvent(s"$$projections-p-acct-${i % 3}-result", s"r$i", "Result", "{}")))
     val inventory = s.read()

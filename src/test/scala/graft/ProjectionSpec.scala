@@ -104,7 +104,7 @@ class ProjectionSpec extends SparkTestBase {
   test("P20 checkpoint round-trip: save to $projections-{name}-checkpoint, load, resume == full") {
     val s = spark; import s.implicits._
     val store = new graft.sources.EventLogStore(spark,
-      java.nio.file.Files.createTempDirectory("ckpt").toString)
+      TempDirs.create("ckpt"))
     def proj = Projections.fromCategory("chat")
       .foreachStream()
       .init("")
@@ -125,7 +125,7 @@ class ProjectionSpec extends SparkTestBase {
     val s = spark; import s.implicits._
     import org.apache.spark.sql.functions.{col, concat, lit}
     val store = new graft.sources.EventLogStore(spark,
-      java.nio.file.Files.createTempDirectory("resfor").toString)
+      TempDirs.create("resfor"))
     // nothing materialized yet — and a store with no log at all
     assert(ProjectionLifecycle.resultFor(store, "counts", "chat-1").isEmpty)
     val results = Projections.fromCategory("chat")
@@ -152,7 +152,7 @@ class ProjectionSpec extends SparkTestBase {
   test("P21: emitted-stream writes are exactly-once across projection replays") {
     val s = spark; import s.implicits._
     val store = new graft.sources.EventLogStore(spark,
-      java.nio.file.Files.createTempDirectory("emit").toString)
+      TempDirs.create("emit"))
     def emittedRun = Projections.fromCategory("chat")
       .foreachStream()
       .init(0L)
@@ -182,7 +182,7 @@ class ProjectionSpec extends SparkTestBase {
   test("reset lifecycle: truncate outputs, bump epoch, updated definition re-runs fresh") {
     val s = spark; import s.implicits._
     val store = new graft.sources.EventLogStore(spark,
-      java.nio.file.Files.createTempDirectory("reset").toString)
+      TempDirs.create("reset"))
     // version N of the projection: emits one `tag` event per ChatMessage
     def run(tag: String) = Projections.fromCategory("chat")
       .foreachStream()
@@ -232,7 +232,7 @@ class ProjectionSpec extends SparkTestBase {
   test("half-applied reset is detected and refused, then recoverable by re-running reset") {
     val s = spark; import s.implicits._
     val store = new graft.sources.EventLogStore(spark,
-      java.nio.file.Files.createTempDirectory("resetcrash").toString)
+      TempDirs.create("resetcrash"))
     def run() = Projections.fromCategory("chat")
       .foreachStream().init(0L)
       .whenEmit("ChatMessage") { (n, e, em) =>
@@ -409,7 +409,7 @@ class ProjectionSpec extends SparkTestBase {
   test("disabled projection writes nothing anywhere; enable resumes and emits") {
     val s = spark; import s.implicits._
     val store = new graft.sources.EventLogStore(spark,
-      java.nio.file.Files.createTempDirectory("disable").toString)
+      TempDirs.create("disable"))
     assert(ProjectionLifecycle.runState(store, "digests") ==
       ProjectionLifecycle.RunState.Enabled)
     ProjectionLifecycle.disable(store, "digests")
@@ -444,7 +444,7 @@ class ProjectionSpec extends SparkTestBase {
   test("re-enable resumes from the checkpoint (epoch untouched, dedup continues)") {
     val s = spark; import s.implicits._
     val store = new graft.sources.EventLogStore(spark,
-      java.nio.file.Files.createTempDirectory("reenable").toString)
+      TempDirs.create("reenable"))
     def proj = Projections.fromCategory("chat").foreachStream().init("")
       .whenAny((st, e) => st + e.log_position + ";")
     val full = proj.states(chat).collect().toMap
@@ -466,7 +466,7 @@ class ProjectionSpec extends SparkTestBase {
   test("faulted projection surfaces the recorded reason; enable clears it") {
     val s = spark; import s.implicits._
     val store = new graft.sources.EventLogStore(spark,
-      java.nio.file.Files.createTempDirectory("fault").toString)
+      TempDirs.create("fault"))
     ProjectionLifecycle.fault(store, "digests", """handler threw: cannot read "k"""")
     ProjectionLifecycle.runState(store, "digests") match {
       case ProjectionLifecycle.RunState.Faulted(reason) =>
