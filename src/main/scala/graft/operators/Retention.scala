@@ -16,9 +16,11 @@ import org.apache.spark.sql.functions._
   * Spark-first: the per-stream lower bound is computed once into a small
   * `bounds` table (stream_id, min_event_number, cutoff_ts, deleted) and
   * broadcast-joined into the scan, so retention costs one broadcast hash
-  * join — no shuffle of the event log itself. At 100 TB the bounds table is
-  * one row per retained stream (≪ events) and is maintained incrementally
-  * at ingest alongside the last-event-number stats table.
+  * join — no shuffle of the event log itself. The bounds table is one row
+  * per stream (≪ events). [[bounds]] derives it from a raw log; an
+  * EventLogStore builds the same rows on the driver from its stream index,
+  * which folds the stats table maintained at ingest, so its retained reads
+  * never aggregate the log.
   */
 object Retention {
 
@@ -36,33 +38,12 @@ object Retention {
 
   /** The per-stream retention bounds table — computed once from the FULL
     * log (last event numbers are global state), then applicable to any
-    * slice of it. For standalone readers of a raw log directory; a store
-    * derives the same table from its stats instead ([[boundsFromLasts]]). */
+    * slice of it. For readers of a raw log directory; a store builds the
+    * same table on the driver from its stream index
+    * (EventLogStore.retentionBounds). */
   def bounds(log: DataFrame, meta: DataFrame, asOf: Column): DataFrame =
-    boundsFromLasts(
-      log.groupBy(col("stream_id")).agg(max(col("event_number")).as("_last")),
-      meta, asOf)
-
-  /** [[bounds]] over a PRECOMPUTED per-stream last-event-number table
-    * `(stream_id, _last[, _tombstoned])` — the incremental-stats fast
-    * path: EventLogStore maintains exactly this table at append time, so
-    * its retained reads and subscriptions derive their bounds from one
-    * small point table plus the metastream rows
-    * (EventLogStore.retentionBounds), never aggregating the event log
-    * itself; its scavenge and single-stream reads compute the same row per
-    * stream on the driver from its stream index. An optional `_tombstoned` column ORs into the deleted flag
-    * alongside the metadata-derived one. */
-  def boundsFromLasts(lasts: DataFrame, meta: DataFrame, asOf: Column): DataFrame = {
-    val withTomb =
-      if (lasts.columns.contains("_tombstoned")) lasts
-      else lasts.withColumn("_tombstoned", lit(false))
-    // metadataFromMetastreams carries no tombstoned column (that is the
-    // point — its callers bring tombstones via `_tombstoned`)
-    val metaTomb: Column =
-      if (meta.columns.contains("tombstoned"))
-        coalesce(col("tombstoned"), lit(false))
-      else lit(false)
-    withTomb.join(meta, Seq("stream_id"), "left")
+    log.groupBy(col("stream_id")).agg(max(col("event_number")).as("_last"))
+      .join(meta, Seq("stream_id"), "left")
       .select(
         col("stream_id"),
         greatest(
@@ -71,10 +52,8 @@ object Retention {
           coalesce(col("truncate_before"), lit(0L))
         ).as("_min_event_number"),
         cutoff(asOf, col("max_age_sec")).as("_cutoff_ts"),
-        (metaTomb ||
-          coalesce(col("_tombstoned"), lit(false)) ||
+        (coalesce(col("tombstoned"), lit(false)) ||
           coalesce(col("truncate_before"), lit(0L)) === DeletedStream).as("_deleted"))
-  }
 
   /** The maxAge cutoff: events older than `maxAgeSec` before `asOf` are
     * gone (IndexReader.cs:277-283). Null when `maxAgeSec` is null. */
@@ -104,7 +83,17 @@ object Retention {
     * metadata event per metastream wins. Tombstones come from
     * `$streamDeleted` events in the base stream. */
   def metadataFromLog(log: DataFrame): DataFrame = {
-    val metaRows = metadataFromMetastreams(log)
+    val metaRows = log.where(col("stream_id").startsWith("$$"))
+      .withColumn("_rn", row_number().over(
+        org.apache.spark.sql.expressions.Window
+          .partitionBy(col("stream_id")).orderBy(col("event_number").desc)))
+      .where(col("_rn") === 1)
+      .select(
+        expr("substring(stream_id, 3)").as("stream_id"),
+        get_json_object(col("data"), "$.$maxCount").cast("long").as("max_count"),
+        get_json_object(col("data"), "$.$maxAge").cast("long").as("max_age_sec"),
+        get_json_object(col("data"), "$.$tb").cast("long").as("truncate_before"),
+        coalesce(get_json_object(col("data"), "$.$tmp").cast("boolean"), lit(false)).as("temp"))
     val tombstones = log
       .where(col("event_type") === graft.model.EventEnvelope.StreamDeletedEventType)
       .select(col("stream_id")).distinct()
@@ -117,23 +106,4 @@ object Retention {
         // a read-time one, so applyRetention/bounds ignore it
         coalesce(col("temp"), lit(false)).as("temp"))
   }
-
-  /** The metastream-derived half of [[metadataFromLog]] — WITHOUT the
-    * tombstone scan over the base log (tombstoned = false throughout).
-    * Callers that already know tombstone state from a stats table
-    * (EventLogStore.retentionBounds) pair this with
-    * [[boundsFromLasts]]' `_tombstoned` column, and the `$$`-prefix
-    * filter pushes to the parquet scan as a StringStartsWith. */
-  def metadataFromMetastreams(log: DataFrame): DataFrame =
-    log.where(col("stream_id").startsWith("$$"))
-      .withColumn("_rn", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy(col("stream_id")).orderBy(col("event_number").desc)))
-      .where(col("_rn") === 1)
-      .select(
-        expr("substring(stream_id, 3)").as("stream_id"),
-        get_json_object(col("data"), "$.$maxCount").cast("long").as("max_count"),
-        get_json_object(col("data"), "$.$maxAge").cast("long").as("max_age_sec"),
-        get_json_object(col("data"), "$.$tb").cast("long").as("truncate_before"),
-        coalesce(get_json_object(col("data"), "$.$tmp").cast("boolean"), lit(false)).as("temp"))
 }

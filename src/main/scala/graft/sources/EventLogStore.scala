@@ -18,20 +18,22 @@ import graft.model.{EventEnvelope, ExpectedVersion, StreamMeta}
   *
   * A side table `{path}/stats` holds per-stream (last_event_number,
   * tombstoned) plus the global max log_position, written LSM-style: each
-  * append adds delta rows for the streams it touched, readers take the
-  * latest row per stream, and scavenge compacts to one row per stream
-  * (mirroring the reference's memtable -> PTable merge).
+  * write adds one delta file for the streams it touched, and scavenge
+  * compacts it to one row per stream (mirroring the reference's memtable
+  * -> PTable merge).
   *
   * Each store instance folds the stats table into a driver-resident stream
   * index: per stream (metastreams included) the latest (last_event_number,
   * tombstoned), the global max log_position, and the set of stats files
-  * folded in. It loads with one Spark job; the instance's own appends fold
-  * their delta in directly, and before every use a plain listing of
-  * `stats/` (no job) folds files written by anyone else — a vanished file
-  * (scavenge swap, crash recovery) forces a reload. The point operations —
-  * append's version/tombstone checks and position assignment,
-  * [[streamState]], [[softDelete]] and [[readStreamEvents]]' retention
-  * bounds — read the index instead of the stats table, the analog of the
+  * folded in. The index is the only code that reads or writes `stats/`:
+  * it loads with one Spark job, every write of this instance writes its
+  * delta on the driver and folds it in directly, and before every use a
+  * plain listing of `stats/` (no job) folds files written by anyone else —
+  * a vanished file (scavenge swap, crash recovery) forces a reload. Every
+  * retention bound and point operation — append's version/tombstone
+  * checks and position assignment, [[appendBulk]]'s numbering,
+  * [[streamState]], [[softDelete]], [[readStreamEvents]],
+  * [[retentionBounds]] and scavenge — reads the index, the analog of the
   * reference's cached last-event-number and stream-info lookups
   * (IndexReader.cs:226-306, `StreamInfoCacheCapacity`).
   *
@@ -96,9 +98,10 @@ object EventLogStore {
   /** Target size of a log data file written by a partition rewrite. */
   val TargetFileBytes: Long = 256L * 1024 * 1024
 
-  /** One data stream's retention bounds, the row [[graft.operators.Retention.boundsFromLasts]]
-    * computes for it: events below `minEvent` and, with `maxAgeSec`, events
-    * older than that before "now" are gone; `deleted` hides every event. */
+  /** One data stream's retention bounds, the row [[graft.operators.Retention.bounds]]
+    * computes for it from the raw log: events below `minEvent` and, with
+    * `maxAgeSec`, events older than that before "now" are gone; `deleted`
+    * hides every event. */
   private[graft] final case class RetentionBounds(minEvent: Long, maxAgeSec: Option[Long],
       deleted: Boolean)
 
@@ -140,8 +143,8 @@ object EventLogStore {
   }
 
   /** One stream's latest stats row. Deltas are ordered by
-    * (max_log_position, last_event_number), the order `statsLatest` takes
-    * the latest row by; a full tie keeps the tombstone. */
+    * (max_log_position, last_event_number), and a full tie keeps the
+    * tombstone: the store's one rule for a stream's latest row. */
   private[graft] final case class StreamStats(last: Long, tombstoned: Boolean, pos: Long) {
     def supersedes(o: StreamStats): Boolean =
       pos > o.pos || pos == o.pos && (last > o.last || last == o.last && tombstoned)
@@ -286,8 +289,8 @@ class EventLogStore(spark: SparkSession, path: String, requestedBuckets: Int = 0
     }
   }
 
-  /** Retention.boundsFromLasts for one data stream, from its index row and
-    * its metadata. */
+  /** Retention.bounds' row for one data stream, from its index row and its
+    * metadata. */
   private def boundsOf(st: StreamStats, meta: StreamMeta): EventLogStore.RetentionBounds =
     EventLogStore.RetentionBounds(
       (Seq(0L) ++ meta.max_count.map(st.last - _ + 1L) ++ meta.truncate_before).max,
@@ -351,6 +354,20 @@ class EventLogStore(spark: SparkSession, path: String, requestedBuckets: Int = 0
   private def metadataOf(streamId: String, idx: StreamIndex): StreamMeta =
     metadataOf(Seq(streamId), idx)(streamId)._1
 
+  /** Every data stream in the index with its retention bounds — the ones
+    * [[readStreamEvents]] applies — and its `$tmp` flag. Only metastreams
+    * the index has a row for are read, in one bucket-pruned job; with none,
+    * no job runs. */
+  private def dataStreamBounds(
+      idx: StreamIndex): Seq[(String, EventLogStore.RetentionBounds, Boolean)] = {
+    val streams = idx.streams.keys.filterNot(_.startsWith(EventEnvelope.MetastreamPrefix)).toSeq
+    val metas = metadataOf(streams, idx)
+    streams.map { s =>
+      val (meta, temp) = metas(s)
+      (s, boundsOf(idx.streams(s), meta), temp)
+    }
+  }
+
   /** Parquet options for a log data write of `rows` rows: bloom filters on
     * the point-lookup columns — the analog of the reference's per-PTable
     * blooms (PTable.cs:73-95) and the backing for the append path's
@@ -370,34 +387,28 @@ class EventLogStore(spark: SparkSession, path: String, requestedBuckets: Int = 0
 
   /** The log with read-time retention applied (metastreams + tombstones
     * honored) — what a reference reader sees. Bounds come from
-    * [[retentionBounds]] — the stats fast path — not a log aggregation. */
+    * [[retentionBounds]] — the stream index — not a log aggregation. */
   def readRetained(asOf: Column = current_timestamp()): DataFrame =
     graft.operators.Retention.applyBounds(
       read().where(!col("stream_id").startsWith(EventEnvelope.MetastreamPrefix)),
       retentionBounds(asOf))
 
-  /** Per-stream retention bounds from the INCREMENTAL stats table — the
-    * read/subscription fast path: one point table (last event numbers +
-    * tombstone flags, maintained transactionally at append) joined with
-    * the metastream rows (a `$$`-prefix scan that pushes down), so the
-    * event log is never aggregated to learn its own bounds. */
-  def retentionBounds(asOf: Column = current_timestamp()): DataFrame = {
-    ensureStats()
-    // the stats table also carries metastream rows ($$x appends maintain
-    // them like any stream) — bounds are for DATA streams only
-    val lasts = statsLatest()
-      .where(!col("stream_id").startsWith(EventEnvelope.MetastreamPrefix))
-      .select(col("stream_id"),
-        col("last_event_number").as("_last"), col("tombstoned").as("_tombstoned"))
-    graft.operators.Retention.boundsFromLasts(lasts,
-      graft.operators.Retention.metadataFromMetastreams(
-        if (exists) read() else lasts.limit(0)
-          .select(col("stream_id"), lit(0L).as("event_number"),
-            lit(null).cast("string").as("data"))), asOf)
-  }
+  /** The [[graft.operators.Retention.bounds]] table of every data stream in
+    * the stream index, built on the driver: one row per stream
+    * (`stream_id`, `_min_event_number`, `_cutoff_ts`, `_deleted`), the
+    * bounds [[readStreamEvents]] applies, so the event log is never
+    * aggregated to learn its own bounds. Its only job is the bucket-pruned
+    * read of the metastreams the index has a row for. */
+  def retentionBounds(asOf: Column = current_timestamp()): DataFrame =
+    dataStreamBounds(streamIndex())
+      .map { case (s, b, _) => (s, b.minEvent, b.maxAgeSec, b.deleted) }
+      .toDF("stream_id", "_min_event_number", "_max_age_sec", "_deleted")
+      .select(col("stream_id"), col("_min_event_number"),
+        graft.operators.Retention.cutoff(asOf, col("_max_age_sec")).as("_cutoff_ts"),
+        col("_deleted"))
 
   /** SUB2 + R1 from this store: retained `$all` subscription whose bounds
-    * come from [[retentionBounds]] (the stats fast path) instead of
+    * come from [[retentionBounds]] (the stream index) instead of
     * Subscriptions' standalone full-log derivation. */
   def subscribeAllRetained(filter: Column = lit(true), fromPosition: Long = -1L,
       asOf: Column = current_timestamp()): DataFrame =
@@ -413,44 +424,27 @@ class EventLogStore(spark: SparkSession, path: String, requestedBuckets: Int = 0
     * the stats table existed (one full scan, once). */
   private def ensureStats(): Unit = {
     if (!exists || statsExists) return
-    statsOf(read(), maxOf(read(), "log_position"))
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(statsDir)
+    writeStatsDelta(statsOf(perStream(read())))
   }
 
-  /** Stats rows for a set of log rows: per stream the max event number and
-    * whether a tombstone is among them, stamped with `maxPos`. */
-  private def statsOf(rows: DataFrame, maxPos: Long): DataFrame =
+  /** Per stream of a set of log rows, in one job: (stream_id, row count,
+    * max event number, whether a tombstone is among them, max
+    * log_position, the largest record's size and its event_id). */
+  private def perStream(rows: DataFrame): Seq[Row] = {
+    val size = coalesce(length(col("data")), lit(0)).cast("long") +
+      coalesce(length(col("metadata")), lit(0)).cast("long")
     rows.groupBy(col("stream_id"))
-      .agg(
-        max(col("event_number")).as("last_event_number"),
-        max(col("event_type") === EventEnvelope.StreamDeletedEventType).as("tombstoned"))
-      .withColumn("max_log_position", lit(maxPos))
+      .agg(count(lit(1)), max(col("event_number")),
+        max(col("event_type") <=> EventEnvelope.StreamDeletedEventType),
+        max(col("log_position")), max(size), max_by(col("event_id"), size))
+      .collect().toSeq
+  }
 
-  /** The max of a long column, or -1 when there are no rows. */
-  private def maxOf(df: DataFrame, c: String): Long =
-    df.agg(max(c)).collect()(0) match {
-      case r if r.isNullAt(0) => -1L
-      case r => r.getLong(0)
-    }
-
-  /** Latest stats row per stream (LSM read path: last delta wins).
-    *
-    * Shape at scale: a per-stream window over the STATS table only — one
-    * shuffle of d·N delta rows (d = deltas since last compaction, N =
-    * streams), never the log. Measured at 1M/5M streams against both
-    * the full-log aggregation it replaces and a struct-max aggregation
-    * alternative; the window form ties or wins (per-group sort of d≈3
-    * rows is trivial, and the struct-max's partial combine buys nothing
-    * when a stream's deltas are scattered across input files). Numbers
-    * in BASELINE.md "Retention-bounds derivation measured". */
-  private[graft] def statsLatest(): DataFrame = {
-    if (!statsExists)
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], statsSchema)
-    spark.read.schema(statsSchema).parquet(statsDir)
-      .withColumn("_rn", row_number().over(
-        Window.partitionBy(col("stream_id"))
-          .orderBy(col("max_log_position").desc, col("last_event_number").desc)))
-      .where(col("_rn") === 1).drop("_rn")
+  /** The stats delta of a [[perStream]] aggregate: each stream's last event
+    * number and tombstone, stamped with the rows' max log_position. */
+  private def statsOf(agg: Seq[Row]): Seq[(String, StreamStats)] = {
+    val maxPos = agg.map(_.getLong(4)).maxOption.getOrElse(-1L)
+    agg.map(r => r.getString(0) -> StreamStats(r.getLong(2), r.getBoolean(3), maxPos))
   }
 
   // --------------------------------------------------------- stream index
@@ -458,8 +452,8 @@ class EventLogStore(spark: SparkSession, path: String, requestedBuckets: Int = 0
   private val indexLock = new Object
   @volatile private var loadedIndex: StreamIndex = null
 
-  /** Stats data files on disk — a plain listing, no Spark job. Spark names
-    * every file it writes uniquely, so a name identifies its rows. */
+  /** Stats data files on disk — a plain listing, no Spark job. Every stats
+    * file is named uniquely ([[writeFile]]), so a name identifies its rows. */
   private def statsFiles(): Set[String] =
     Option(new java.io.File(statsDir).list()).fold(Set.empty[String])(
       _.iterator.filterNot(n => n.startsWith("_") || n.startsWith(".")).toSet)
@@ -494,12 +488,17 @@ class EventLogStore(spark: SparkSession, path: String, requestedBuckets: Int = 0
     next
   }
 
+  /** Write stats rows as one file into `dir` on the driver; returns its
+    * name. */
+  private def writeStatsFile(dir: String, rows: Seq[(String, StreamStats)]): String =
+    writeFile(dir, statsSchema,
+      rows.map { case (s, st) => Row(s, st.last, st.tombstoned, st.pos) }, Map.empty,
+      "stats.rename")
+
   /** Write one stats delta on the driver and fold it into the index under
     * its file name, without reading it back. */
   private def writeStatsDelta(rows: Seq[(String, StreamStats)]): Unit = {
-    val name = writeFile(statsDir, statsSchema,
-      rows.map { case (s, st) => Row(s, st.last, st.tombstoned, st.pos) }, Map.empty,
-      "stats.rename")
+    val name = writeStatsFile(statsDir, rows)
     indexLock.synchronized {
       if (loadedIndex != null) loadedIndex = loadedIndex.fold(rows, Set(name))
     }
@@ -627,22 +626,17 @@ class EventLogStore(spark: SparkSession, path: String, requestedBuckets: Int = 0
   private def disarmAppendMarker(): Unit = Files.deleteIfExists(appendMarker)
 
   /** Repair a crash between an append's log write and its stats write:
-    * marker present → compare stats' recorded max position against the
-    * log's actual max (one scan, paid only after a crash) and append
-    * catch-up stats deltas for the tail the stats table missed. Files a
-    * crashed driver-side write left unrenamed in `append_tmp/` are deleted
-    * (their rows were never visible). */
+    * marker present → aggregate the log rows past the stream index's max
+    * position (one scan, paid only after a crash) and write their stats
+    * delta, the tail the stats table missed. Files a crashed driver-side
+    * write left unrenamed in `append_tmp/` are deleted (their rows were
+    * never visible). */
   private def recoverInterruptedAppend(): Unit = EventLogStore.appendLockFor(path).synchronized {
     deleteRecursively(new java.io.File(appendTmpDir))
     if (!Files.exists(appendMarker)) return
-    if (exists && statsExists) {
-      val statsMax = maxOf(spark.read.schema(statsSchema).parquet(statsDir), "max_log_position")
-      val logMax = maxOf(read(), "log_position")
-      if (logMax > statsMax) {
-        statsOf(read().where(col("log_position") > statsMax), logMax)
-          .coalesce(1).write.mode(SaveMode.Append).parquet(statsDir)
-        refreshListings()
-      }
+    if (exists) {
+      val tail = perStream(read().where(col("log_position") > streamIndex().maxPos))
+      if (tail.nonEmpty) writeStatsDelta(statsOf(tail))
     }
     disarmAppendMarker()
   }
@@ -795,30 +789,32 @@ class EventLogStore(spark: SparkSession, path: String, requestedBuckets: Int = 0
 
   /** Distributed append for large DataFrames of pending events (ingest
     * path): assigns positions via sorted zipWithIndex — no single-partition
-    * window, scales to arbitrary batch sizes. No idempotency check; use
-    * [[appendIdempotent]] for writes that can replay. Skips per-event
-    * expected version (bulk ingest is ExpectedVersion.Any by definition)
-    * but still refuses tombstoned streams. Returns the number of rows
-    * written, counted from the persisted output — the pending lineage
-    * (which may itself read this log) runs once. */
+    * window, scales to arbitrary batch sizes — and numbers each stream on
+    * from its last event number in the stream index, shipped as one
+    * broadcast map. No idempotency check; use [[appendIdempotent]] for
+    * writes that can replay. Skips per-event expected version (bulk ingest
+    * is ExpectedVersion.Any by definition) but still refuses streams the
+    * index marks tombstoned, and records over 16 MiB. One per-stream
+    * aggregate over the persisted output answers both checks, counts the
+    * rows written — the pending lineage (which may itself read this log)
+    * runs once — and is the stats delta, written on the driver after the
+    * log and folded into the index. Returns the number of rows written. */
   def appendBulk(pending: DataFrame, orderBy: Seq[String] = Seq("timestamp", "event_id")): Long = {
     // same writer serialization as append() (EventLogStore object doc)
     EventLogStore.appendLockFor(path).synchronized {
-    val maxPos = streamIndex().maxPos
-    val stats = statsLatest()
-    val lasts = stats.select(col("stream_id").as("_sid"), col("last_event_number").as("_last"))
+    val idx = streamIndex()
+    val maxPos = idx.maxPos
     val sorted = pending.orderBy(orderBy.map(col): _*)
     val schema = sorted.schema
     val withPos = spark.createDataFrame(
       sorted.rdd.zipWithIndex.map { case (r, i) =>
         Row.fromSeq(r.toSeq :+ (maxPos + 1 + i)) },
       schema.add("log_position", "long"))
+    val shipped = spark.sparkContext.broadcast(idx.streams)
+    val lastOf = udf((s: String) => shipped.value.get(s).fold(-1L)(_.last))
     val wStream = Window.partitionBy(col("stream_id")).orderBy(col("log_position"))
     val out = withPos
-      .join(lasts, col("stream_id") === col("_sid"), "left")
-      .withColumn("event_number",
-        coalesce(col("_last"), lit(-1L)) + row_number().over(wStream))
-      .drop("_sid", "_last")
+      .withColumn("event_number", lastOf(col("stream_id")) + row_number().over(wStream))
       .withColumn("timestamp", coalesce(col("timestamp"), current_timestamp()))
       .withColumn("is_json", lit(true))
       .withColumn("is_redacted", lit(false))
@@ -827,33 +823,29 @@ class EventLogStore(spark: SparkSession, path: String, requestedBuckets: Int = 0
         "is_redacted")
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      val n = out.count()
+      val agg = perStream(out)
+      val n = agg.map(_.getLong(1)).sum
       if (n == 0L) return 0L
-      val tomb = stats.where(col("tombstoned")).select(col("stream_id").as("_tsid"))
-      val bad = out.join(broadcast(tomb), col("stream_id") === col("_tsid"), "left_semi")
-        .select("stream_id").limit(1).collect()
-      bad.headOption.foreach { r =>
+      agg.find(r => idx.streams.get(r.getString(0)).exists(_.tombstoned)).foreach { r =>
         throw new WrongExpectedVersionException(s"stream ${r.getString(0)} is deleted")
       }
-      // the 16 MiB record ceiling applies to the bulk path too (cheap
-      // filter over the persisted output)
-      val oversize = out.where(
-        coalesce(length(col("data")), lit(0)).cast("long") +
-          coalesce(length(col("metadata")), lit(0)).cast("long") >
-          EventLogStore.MaxRecordSizeBytes)
-        .select("event_id").limit(1).collect()
-      oversize.headOption.foreach { r =>
+      // the 16 MiB record ceiling applies to the bulk path too
+      agg.find(_.getLong(5) > EventLogStore.MaxRecordSizeBytes).foreach { r =>
         throw new MaxAppendSizeExceededException(
-          s"event ${r.getString(0)} exceeds the 16 MiB record limit")
+          s"event ${r.getString(6)} exceeds the 16 MiB record limit")
       }
       writeLayoutMarker()
       armAppendMarker()
+      // durability order: marker, log files, stats delta, disarm
       withPartitionCols(out).write.mode(SaveMode.Append).options(logWriteOptions(n))
         .partitionBy(partitionCols: _*).parquet(logDir)
-      statsOf(out, maxPos + n).coalesce(1).write.mode(SaveMode.Append).parquet(statsDir)
+      writeStatsDelta(statsOf(agg))
       disarmAppendMarker()
       n
-    } finally out.unpersist()
+    } finally {
+      out.unpersist()
+      shipped.destroy()
+    }
     }
   }
 
@@ -894,15 +886,16 @@ class EventLogStore(spark: SparkSession, path: String, requestedBuckets: Int = 0
   // ------------------------------------------------------------- scavenge
 
   /** Scavenge (§2.7): [[scavengeIncremental]], then stats compaction. The
-    * stats table is compacted to its latest row per stream (not rebuilt
-    * from the log), so per-stream last event numbers survive even when
-    * every data row of a stream was removed.
+    * stats table is compacted to the stream index's rows, one per stream
+    * (not rebuilt from the log), so per-stream last event numbers survive
+    * even when every data row of a stream was removed.
     *
-    * Crash-safe swap: the compacted table is fully written to
-    * `stats_scavenged`, the live table atomically moved aside to
+    * Crash-safe swap: the index's rows are written on the driver as one
+    * file in `stats_scavenged`, the live table atomically moved aside to
     * `stats_old`, the new one moved into place, and only then is the old
-    * one deleted. Every move is `Files.move(ATOMIC_MOVE)` and throws on
-    * failure; an interrupted swap is repaired by
+    * one deleted; the index then records the one file as folded, so it
+    * reads nothing back. Every move is `Files.move(ATOMIC_MOVE)` and throws
+    * on failure; an interrupted swap is repaired by
     * recoverInterruptedScavenge() on next open (stats deltas are
     * order-insensitive per stream, so restoring pre-compaction stats next
     * to a scavenged log is still correct). */
@@ -912,33 +905,33 @@ class EventLogStore(spark: SparkSession, path: String, requestedBuckets: Int = 0
     // compaction's read and its swap would be deleted with the old table
     EventLogStore.appendLockFor(path).synchronized {
       scavengeIncremental(asOf)
+      val idx = streamIndex()
       val tmpStats = s"$path/stats_scavenged"
-      statsLatest().coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmpStats)
+      deleteRecursively(new java.io.File(tmpStats))
+      val name = writeStatsFile(tmpStats, idx.streams.toSeq)
       moveAtomic(statsDir, s"$path/stats_old")
       moveAtomic(tmpStats, statsDir)
       deleteRecursively(new java.io.File(s"$path/stats_old"))
-      refreshListings()
+      indexLock.synchronized { loadedIndex = idx.copy(files = Set(name)) }
     }
   }
 
   /** Spark caches file listings per path; directories swapped in behind a
-    * cached listing read as FILE_NOT_EXIST without this. */
-  private def refreshListings(): Unit = {
-    spark.catalog.refreshByPath(logDir)
-    spark.catalog.refreshByPath(statsDir)
-  }
+    * cached listing read as FILE_NOT_EXIST without this. (`stats/` is read
+    * only by [[readStatsRows]], a fresh listing each time.) */
+  private def refreshListings(): Unit = spark.catalog.refreshByPath(logDir)
 
   /** Incremental scavenge — mirroring the reference's chunk-by-chunk
     * staged scavenge (TransactionLog/Scavenging/Stages), which calculates
     * discard points only for streams that carry metadata or a tombstone:
     * removes exactly the rows [[readRetained]] no longer returns, plus the
-    * rows of `$tmp` streams. Only a data stream the stream index marks
+    * rows of `$tmp` streams. The bounds are [[retentionBounds]]' (the
+    * stream index plus one bucket-pruned read of the metastreams it holds),
+    * with `$tmp` streams marked deleted. Only a data stream the index marks
     * tombstoned or holds a `$$` metastream row for can lose rows (any other
     * stream's bounds keep everything), so those are the candidates; with
-    * none, no Spark job runs. Their bounds are the ones [[readStreamEvents]]
-    * applies, from the index plus one bucket-pruned read of their
-    * metastreams, with `$tmp` streams marked deleted, and they reach the
-    * scans as one broadcast map. `asOf` is evaluated once, so detection and
+    * none, no Spark job runs. Their bounds reach the scans as one broadcast
+    * map. `asOf` is evaluated once, so detection and
     * rewrite apply the same maxAge cutoff. One detection scan over the
     * candidates' buckets counts each partition's removable and surviving
     * rows; a partition with removable rows is rewritten by one scan and one
@@ -957,19 +950,11 @@ class EventLogStore(spark: SparkSession, path: String, requestedBuckets: Int = 0
     EventLogStore.appendLockFor(path).synchronized {
     import graft.operators.Retention
     val prefix = EventEnvelope.MetastreamPrefix
-    val idx = streamIndex()
-    val candidates = idx.streams.iterator.collect {
-      case (s, _) if s.startsWith(prefix) => s.drop(prefix.length)
-      case (s, st) if st.tombstoned => s
-    }.filterNot(_.startsWith(prefix)).toSeq.distinct
     // $tmp streams go at scavenge (their metastream row is kept, so the
     // flag and the stats row survive and numbering stays monotone)
-    val metas = metadataOf(candidates, idx)
-    val bounds = candidates.flatMap(s => idx.streams.get(s).map { st =>
-      val (meta, temp) = metas(s)
-      val b = boundsOf(st, meta)
+    val bounds = dataStreamBounds(streamIndex()).map { case (s, b, temp) =>
       s -> b.copy(deleted = b.deleted || temp)
-    }).filter { case (_, b) => b.deleted || b.minEvent > 0 || b.maxAgeSec.isDefined }.toMap
+    }.filter { case (_, b) => b.deleted || b.minEvent > 0 || b.maxAgeSec.isDefined }.toMap
     if (bounds.isEmpty) return Nil
     // "now" from a one-row local relation: no Spark job
     val now = lit(Seq(0).toDF("_").select(asOf).collect()(0).get(0))

@@ -148,10 +148,10 @@ object Subscriptions {
     * metadata through its own `$$` reads).
     *
     * Scale note: bounds() recomputes per-stream last-event-numbers from
-    * the log; at very large stream counts feed it the incrementally
-    * maintained stats table instead (EventLogStore keeps one:
-    * store.subscribeAllRetained passes its retentionBounds,
-    * the bounds its retained reads apply and its scavenge enforces). */
+    * the log. An EventLogStore already holds them in its driver-side
+    * stream index: store.subscribeAllRetained passes its retentionBounds,
+    * built from the index without aggregating the log — the bounds its
+    * retained reads apply and its scavenge enforces. */
   def subscribeAllRetained(spark: SparkSession, logDir: String,
       filter: Column = lit(true), fromPosition: Long = -1L,
       asOf: Column = current_timestamp(),
@@ -160,7 +160,7 @@ object Subscriptions {
     val base = subscribeAll(spark, logDir, filter && noMeta, fromPosition)
     val bounds = boundsOverride.orElse(historyOpt(spark, logDir).map { log =>
       // standalone derivation from the raw log; an EventLogStore caller
-      // passes its stats-table bounds instead (store.subscribeAllRetained)
+      // passes its stream-index bounds instead (store.subscribeAllRetained)
       graft.operators.Retention.bounds(
         log.where(noMeta), graft.operators.Retention.metadataFromLog(log), asOf)
     })

@@ -10,7 +10,7 @@ import graft.sources.{EventLogStore, PendingEvent, WrongExpectedVersionException
 class EventLogStoreSpec extends SparkTestBase {
 
   private def freshStore(): EventLogStore =
-    new EventLogStore(spark, Files.createTempDirectory("graftlog").toString)
+    new EventLogStore(spark, TempDirs.create("graftlog"))
 
   private def pe(stream: String, id: String, tpe: String = "E"): PendingEvent =
     PendingEvent(stream, id, tpe, s"""{"id":"$id"}""")
@@ -160,8 +160,27 @@ class EventLogStoreSpec extends SparkTestBase {
     intercept[WrongExpectedVersionException] { store.appendBulk(pending) }
   }
 
+  test("appendBulk refuses an event over 16 MiB, naming it, and writes nothing") {
+    val dir = TempDirs.create("graftbig")
+    val store = new EventLogStore(spark, dir)
+    store.append(Seq(pe("a-1", "e1")))
+    val big = "x" * (EventLogStore.MaxRecordSizeBytes.toInt + 1)
+    val s = spark; import s.implicits._
+    val pending = Seq(
+      ("a-1", "n1", "E", "{}", null: String, null: String, ts("2024-01-01 00:00:00")),
+      ("b-1", "big-1", "E", big, null: String, null: String, ts("2024-01-02 00:00:00"))
+    ).toDF("stream_id", "event_id", "event_type", "data", "metadata",
+      "correlation_id", "timestamp")
+    val e = intercept[graft.sources.MaxAppendSizeExceededException](store.appendBulk(pending))
+    assert(e.getMessage.contains("big-1"), e.getMessage)
+    assert(store.read().select("event_id").collect().map(_.getString(0)).toSeq == Seq("e1"))
+    assert(store.streamState("a-1") == EventLogStore.StreamOk(0L))
+    assert(store.streamState("b-1") == EventLogStore.NoStream)
+    assert(!Files.exists(java.nio.file.Paths.get(s"$dir/append_pending")))
+  }
+
   test("interrupted scavenge (log moved aside) is repaired on next open") {
-    val dir = Files.createTempDirectory("graftlog").toString
+    val dir = TempDirs.create("graftlog")
     val store = new EventLogStore(spark, dir)
     store.append(Seq(pe("a-1", "e1"), pe("b-1", "e2")))
     // simulate a crash after `log -> log_old` but before the new log landed
@@ -174,7 +193,7 @@ class EventLogStoreSpec extends SparkTestBase {
   }
 
   test("incremental scavenge rewrites only affected date partitions") {
-    val dir = Files.createTempDirectory("graftlog").toString
+    val dir = TempDirs.create("graftlog")
     val store = new EventLogStore(spark, dir)
     // 6 events for a-1 across 3 dates (2 per day), plus b-1 untouched
     val evs = (1 to 6).map { i =>
@@ -203,7 +222,7 @@ class EventLogStoreSpec extends SparkTestBase {
   }
 
   test("interrupted incremental scavenge (marker + moved-aside partition) recovers") {
-    val dir = Files.createTempDirectory("graftlog").toString
+    val dir = TempDirs.create("graftlog")
     val store = new EventLogStore(spark, dir)
     store.append(Seq(
       PendingEvent("a-1", "e1", "E", "{}", timestamp = ts("2024-02-01 10:00:00")),
@@ -250,7 +269,7 @@ class EventLogStoreSpec extends SparkTestBase {
   }
 
   test("compact merges small files, preserves every row, numbering intact") {
-    val dir = Files.createTempDirectory("graftcompact").toString
+    val dir = TempDirs.create("graftcompact")
     val store = new EventLogStore(spark, dir)
     (0 until 12).foreach(i => store.append(Seq(pe("a-1", s"e$i"), pe("b-1", s"f$i"))))
     def parquetFiles(): Int = {
@@ -310,7 +329,7 @@ class EventLogStoreSpec extends SparkTestBase {
   }
 
   test("append crash between log and stats writes is reconciled on reopen") {
-    val dir = Files.createTempDirectory("graftcrash").toString
+    val dir = TempDirs.create("graftcrash")
     val store = new EventLogStore(spark, dir)
     store.append(Seq(pe("a-1", "e1"), pe("a-1", "e2")))
     // snapshot the stats table, append more, then restore the stale stats
@@ -327,7 +346,7 @@ class EventLogStoreSpec extends SparkTestBase {
       if (f.isDirectory) f.listFiles.foreach(rmDir); f.delete()
     }
     val statsPath = java.nio.file.Paths.get(s"$dir/stats")
-    val saved = Files.createTempDirectory("statscopy")
+    val saved = java.nio.file.Paths.get(TempDirs.create("statscopy"))
     copyDir(statsPath, saved)
     store.append(Seq(pe("a-1", "e3"), pe("b-1", "e4"))) // positions 2, 3
     rmDir(statsPath.toFile)
@@ -355,11 +374,29 @@ class EventLogStoreSpec extends SparkTestBase {
     again.append(Seq(pe("c-1", "e8")))
     assert(again.read().select("log_position").collect().map(_.getLong(0)).sorted.toSeq ==
       (0L to 7L))
+
+    // the same crash in appendBulk: the log written, the stats delta
+    // written on the driver but never renamed into stats/
+    again.failPoint = step => if (step == "stats.rename") throw new RuntimeException("crash")
+    intercept[RuntimeException](again.appendBulk(pendingOf("a-1" -> "b1", "e-1" -> "b2"))) // 8, 9
+    assert(Files.exists(java.nio.file.Paths.get(s"$dir/append_pending")))
+    val afterBulk = new EventLogStore(spark, dir)
+    assert(Option(new java.io.File(s"$dir/append_tmp").list()).forall(_.isEmpty))
+    assert(afterBulk.streamState("a-1") == EventLogStore.StreamOk(4L))
+    assert(afterBulk.streamState("e-1") == EventLogStore.StreamOk(0L))
+    afterBulk.append(Seq(pe("c-1", "e9")))
+    assert(afterBulk.read().select("log_position").collect().map(_.getLong(0)).sorted.toSeq ==
+      (0L to 10L))
+    assert(afterBulk.streamState("c-1") == EventLogStore.StreamOk(2L))
+    val idx = afterBulk.streamIndex()
+    assert(idx.streams.map { case (k, v) => k -> (v.last, v.tombstoned) } ==
+      StreamIndexSpec.statsTable(spark, dir))
+    assert(idx.maxPos == 10L)
   }
 
   test("append crash before the log file's rename: nothing visible, no temp file, " +
     "no position reused") {
-    val dir = Files.createTempDirectory("graftcrashtmp").toString
+    val dir = TempDirs.create("graftcrashtmp")
     val tmpFiles = () => Option(new java.io.File(s"$dir/append_tmp").list()).toSeq.flatten
     val crash: String => Unit = step =>
       if (step == "log.rename") throw new RuntimeException("crash")
@@ -389,7 +426,7 @@ class EventLogStoreSpec extends SparkTestBase {
   test("a driver-written append equals a Spark write of the same rows") {
     import scala.jdk.CollectionConverters._
     import org.apache.spark.sql.types.StructType
-    val dir = Files.createTempDirectory("graftdiff").toString
+    val dir = TempDirs.create("graftdiff")
     val store = new EventLogStore(spark, dir, requestedBuckets = 4)
     // two dates, several buckets, a null event type, a non-ASCII stream id
     val events = (0 until 12).map(i => PendingEvent(
@@ -402,7 +439,7 @@ class EventLogStoreSpec extends SparkTestBase {
     // write path's expressions
     val schema = StructType(graft.model.EventEnvelope.schema.map(_.copy(nullable = true)))
     val written = store.read().orderBy("log_position").select(schema.fieldNames.map(col): _*)
-    val sparkDir = Files.createTempDirectory("graftdiffspark").toString
+    val sparkDir = TempDirs.create("graftdiffspark")
     spark.createDataFrame(written.collect().toSeq.asJava, schema)
       .withColumn("p_date", to_date(col("timestamp")))
       .withColumn("p_bucket", pmod(xxhash64(col("stream_id")), lit(4L)).cast("int"))
@@ -457,8 +494,8 @@ class EventLogStoreSpec extends SparkTestBase {
     }
 
     // a checkpointed subscription delivers the driver-written rows once
-    val ck = Files.createTempDirectory("graftdiffck").toString
-    val out = Files.createTempDirectory("graftdiffout").toString + "/out"
+    val ck = TempDirs.create("graftdiffck")
+    val out = TempDirs.create("graftdiffout") + "/out"
     def drain(): Unit = graft.streaming.Subscriptions.subscribeAll(spark, s"$dir/log")
       .writeStream.format("parquet").option("path", out).option("checkpointLocation", ck)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
@@ -472,7 +509,7 @@ class EventLogStoreSpec extends SparkTestBase {
   }
 
   test("compaction under concurrent appends keeps every acknowledged append") {
-    val dir = Files.createTempDirectory("graftrace").toString
+    val dir = TempDirs.create("graftrace")
     val store = new EventLogStore(spark, dir)
     (0 until 12).foreach(i => store.append(Seq(pe("s-1", s"a$i"))))
     val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
@@ -534,7 +571,7 @@ class EventLogStoreSpec extends SparkTestBase {
   }
 
   test("readAt is positional time travel; log files carry bloom filters") {
-    val dir = Files.createTempDirectory("graftlog").toString
+    val dir = TempDirs.create("graftlog")
     val store = new EventLogStore(spark, dir)
     store.append(Seq(pe("a-1", "e1"), pe("a-1", "e2")))
     store.append(Seq(pe("a-1", "e3")))
@@ -583,7 +620,7 @@ class EventLogStoreSpec extends SparkTestBase {
   }
 
   test("bucketed layout: p_bucket dirs, pruned single-stream reads, persistent marker") {
-    val dir = Files.createTempDirectory("graftlog").toString
+    val dir = TempDirs.create("graftlog")
     val store = new EventLogStore(spark, dir, requestedBuckets = 4)
     store.append((1 to 12).map(i => pe(s"s-${i % 6}", s"e$i")))
     // physical layout has bucket subdirectories
@@ -612,7 +649,7 @@ class EventLogStoreSpec extends SparkTestBase {
   }
 
   test("bucketed incremental scavenge rewrites only the affected bucket dirs") {
-    val dir = Files.createTempDirectory("graftlog").toString
+    val dir = TempDirs.create("graftlog")
     val store = new EventLogStore(spark, dir, requestedBuckets = 4)
     store.append((1 to 8).map(i =>
       PendingEvent(s"s-${i % 4}", s"e$i", "E", "{}",
@@ -766,7 +803,7 @@ class EventLogStoreSpec extends SparkTestBase {
 
   test("concurrent appends with the same stale expected version: one winner, " +
     "one WrongExpectedVersion, never interleaved positions") {
-    val dir = Files.createTempDirectory("contend").toString
+    val dir = TempDirs.create("contend")
     val storeA = new EventLogStore(spark, dir)
     val storeB = new EventLogStore(spark, dir) // second writer, same log
     storeA.append(Seq(pe("acct-1", "seed")))
