@@ -397,8 +397,10 @@ class EventLogStore(spark: SparkSession, path: String, requestedBuckets: Int = 0
     * the stream index, built on the driver: one row per stream
     * (`stream_id`, `_min_event_number`, `_cutoff_ts`, `_deleted`), the
     * bounds [[readStreamEvents]] applies, so the event log is never
-    * aggregated to learn its own bounds. Its only job is the bucket-pruned
-    * read of the metastreams the index has a row for. */
+    * aggregated to learn its own bounds. The rows are computed when this is
+    * called: besides the index's own refresh, one bucket-pruned job reads
+    * the metastreams the index has a row for (none: no job). `asOf` stays
+    * a Column, evaluated where the table is used. */
   def retentionBounds(asOf: Column = current_timestamp()): DataFrame =
     dataStreamBounds(streamIndex())
       .map { case (s, b, _) => (s, b.minEvent, b.maxAgeSec, b.deleted) }
